@@ -3,8 +3,19 @@
 Same process, same staged input, alternating arms so host weather hits
 both equally; rep 0 per arm is JVM/codegen warmup and is discarded.
 
-Usage: python BENCH/ab_scheduler.py [n_convs] [reps] [buckets]
-Writes BENCH/ab_scheduler.json.
+Usage: python BENCH/ab_scheduler.py [n_convs] [reps] [buckets] [master]
+
+``master`` defaults to ``local[32]``. Results merge into
+BENCH/ab_scheduler.json under the key ``{n_convs}convs_{buckets}buckets``;
+a ``local-cluster[...]`` master writes BENCH/ab_scheduler_local_cluster.json
+instead. A local-cluster master launches executor JVMs from
+``$SPARK_HOME`` (their work dirs land in ``$SPARK_HOME/work``) and needs
+the off-heap pool sized to its workers, e.g.::
+
+    SPARK_GRAFT_OFFHEAP=256m SPARK_GRAFT_DRIVER_MEM=2g \
+        python BENCH/ab_scheduler.py 4500 3 16 'local-cluster[2,2,2048]'
+
+The staged input lives under ``$TMPDIR`` when set, else /dev/shm.
 """
 
 from __future__ import annotations
@@ -49,8 +60,20 @@ def main() -> None:
     n_convs = int(sys.argv[1]) if len(sys.argv) > 1 else 1000
     reps = int(sys.argv[2]) if len(sys.argv) > 2 else 4
     buckets = sys.argv[3] if len(sys.argv) > 3 else "8"
-    spark = get_spark(app_name="ab_scheduler", master="local[32]")
-    base = "/dev/shm" if os.path.isdir("/dev/shm") else None
+    master = sys.argv[4] if len(sys.argv) > 4 else "local[32]"
+    cluster = master.startswith("local-cluster")
+    extra = {}
+    if cluster:
+        # executors are separate Python processes that import the engine
+        # from the repo, as the driver does; each takes 3/4 of its
+        # worker's memory (local-cluster[workers, cores, MB per worker])
+        worker_mb = int(master.rstrip("]").rsplit(",", 1)[1])
+        extra = {
+            "spark.executorEnv.PYTHONPATH": REPO,
+            "spark.executor.memory": f"{worker_mb * 3 // 4}m",
+        }
+    spark = get_spark(app_name="ab_scheduler", master=master, extra_conf=extra)
+    base = os.environ.get("TMPDIR") or ("/dev/shm" if os.path.isdir("/dev/shm") else None)
     work = tempfile.mkdtemp(prefix="ab_sched_", dir=base)
     times = {"global": [], "per-bucket": []}
     try:
@@ -63,15 +86,25 @@ def main() -> None:
                 if rep > 0:
                     times[arm].append(round(el, 2))
                 print(f"rep{rep} {arm}: {el:.2f}s", flush=True)
+        n_turns = spark.read.parquet(raw_path).count()
         out = {
+            "master": master,
             "n_convs": n_convs,
+            "n_turns": n_turns,
             "buckets": buckets,
             "reps_sec": times,
             "best_sec": {a: min(t) for a, t in times.items()},
             "median_sec": {a: sorted(t)[len(t) // 2] for a, t in times.items()},
         }
-        with open(os.path.join(REPO, "BENCH", "ab_scheduler.json"), "w") as f:
-            json.dump(out, f, indent=2)
+        name = "ab_scheduler_local_cluster.json" if cluster else "ab_scheduler.json"
+        path = os.path.join(REPO, "BENCH", name)
+        merged = {}
+        if os.path.exists(path):
+            with open(path) as f:
+                merged = json.load(f)
+        merged[f"{n_convs}convs_{buckets}buckets"] = out
+        with open(path, "w") as f:
+            json.dump(merged, f, indent=2)
         print(json.dumps(out))
     finally:
         shutil.rmtree(work, ignore_errors=True)

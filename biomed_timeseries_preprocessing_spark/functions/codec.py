@@ -249,7 +249,7 @@ CHUNK_SCHEMA = (
 )
 
 
-def encode_chunks(derived, chunk_seconds: int = 3600, assume_grouped: bool = False):
+def encode_chunks(derived, chunk_seconds: int = 3600):
     """Compress derived turns into per-(conv, chunk) binary blobs.
 
     Physical shape: repartition by conv_id, sort within partitions by
@@ -260,13 +260,6 @@ def encode_chunks(derived, chunk_seconds: int = 3600, assume_grouped: bool = Fal
     measured speedup at sf0.1), and is the same one-writer-per-partition
     shape the reference's per-file save loop has (``Save_Agent.py:90-136``)
     — with real compression instead of raw npz.
-
-    ``assume_grouped=True`` skips the repartition for inputs the CALLER
-    knows already co-locate each conversation in one partition — e.g.
-    the output of ``with_derived``/``gapfill``, whose conv_id windows
-    hash-partition exactly this way (guide §2.4: reuse an exchange the
-    data already paid for). The local sort still runs, so blobs are
-    byte-identical either way; only the redundant shuffle disappears.
     """
     from pyspark.sql import functions as F
 
@@ -280,11 +273,9 @@ def encode_chunks(derived, chunk_seconds: int = 3600, assume_grouped: bool = Fal
     # locality, so a hot conversation's history spreads across tasks
     # instead of landing in one; order within each chunk is restored by
     # the sort, so blobs are byte-identical to conv_id-only partitioning
-    part = (
-        with_chunk
-        if assume_grouped
-        else with_chunk.repartition("conv_id", "chunk_start")
-    ).sortWithinPartitions("conv_id", "chunk_start", "ts", "turn_idx")
+    part = with_chunk.repartition("conv_id", "chunk_start").sortWithinPartitions(
+        "conv_id", "chunk_start", "ts", "turn_idx"
+    )
 
     def encode_batch(pdf: pd.DataFrame) -> pd.DataFrame:
         """Vectorized across ALL blocks in the batch (codec_batch)."""

@@ -16,10 +16,11 @@ import os
 import time
 import uuid
 from dataclasses import dataclass
+from typing import NamedTuple
 
 import pyarrow as pa
 import pyarrow.parquet as pq
-from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from ..sources.catalog import LocalSnapshotCatalog
@@ -38,65 +39,104 @@ def bucket_of(conv_id_col, n_buckets: int):
     return F.pmod(F.xxhash64(conv_id_col), F.lit(n_buckets)).cast("int")
 
 
-def frame_checksum(df: DataFrame, cols: list[str]) -> int:
-    """Deterministic order-independent checksum: wrap-around sum of
-    xxhash64 over the given columns (same value on any partitioning)."""
-    row = df.select(
-        F.sum(F.xxhash64(*[F.col(c) for c in cols]).cast("decimal(38,0)")).alias("c")
-    ).collect()[0]
-    # fold the exact decimal sum back into int64 range (ANSI-safe)
-    return int(row["c"] or 0) % (1 << 63)
+def _exact_sum(col: Column) -> Column:
+    """Σ of int64 hashes as an exact decimal: with xxhash64 summands this
+    is an order-independent multiset checksum, the same value on any
+    partitioning."""
+    return F.sum(col.cast("decimal(38,0)"))
 
 
-def frame_audit(
-    df: DataFrame, checksum_cols: list[str], extent_col: str
-) -> tuple[int, object, object, int]:
-    """(row count, min(extent_col), max(extent_col), frame_checksum) in
-    ONE Spark action. The per-tier lineage audit used to be three
-    separate actions (count, extent collect, checksum collect); each
-    action is a full pass plus a driver round-trip — pure Amdahl serial
-    in the per-bucket commit loop, 3× worse than it needs to be at any
-    cluster size."""
-    row = df.select(
+# Each audit's aggregates, defined once. The per-bucket scheduler applies
+# them with ``attach_audit`` (``df.observe``), the global one with
+# ``grouped_audit`` (``groupBy(bucket).agg``); ``read_audit`` reads either.
+
+
+def tier_audit(checksum_cols: list[str], extent_col: str) -> list[Column]:
+    """Row count, min/max extent and the frame checksum of a tier."""
+    return [
         F.count(F.lit(1)).alias("n"),
         F.min(extent_col).alias("lo"),
         F.max(extent_col).alias("hi"),
-        F.sum(
-            F.xxhash64(*[F.col(c) for c in checksum_cols]).cast("decimal(38,0)")
-        ).alias("c"),
-    ).collect()[0]
-    return int(row["n"]), row["lo"], row["hi"], int(row["c"] or 0) % (1 << 63)
+        _exact_sum(F.xxhash64(*checksum_cols)).alias("c"),
+    ]
 
 
-def attach_audit(
-    df: DataFrame, checksum_cols: list[str], extent_col: str
-) -> tuple[DataFrame, Observation]:
-    """Piggyback the lineage audit on the frame's NEXT action instead of
-    running a separate pass: returns ``(df.observe(...), observation)``.
-    ``frame_audit`` (above) fused three actions into one; this removes
-    the one — Spark's CollectMetrics node computes the same four
-    aggregates on the rows as they stream through whatever job
-    materializes the frame (in rollup_job: the tier's data-file write),
-    so per tier there is exactly ONE job. Read the result with
-    ``read_audit`` AFTER an action has run on the returned frame."""
+def gapfill_in_audit() -> list[Column]:
+    """Source side of the text-equality invariant: rows and Σ of the
+    carried per-turn hash ``_th`` = xxhash64(conv_id, turn_idx, text)."""
+    return [
+        F.count(F.lit(1)).alias("n_in"),
+        _exact_sum(F.col("_th")).alias("c_in"),
+    ]
+
+
+def gapfill_out_audit() -> list[Column]:
+    """Filled side: total and gap rows, and Σ ``_th`` over the non-gap
+    rows — equal multisets of source turns give equal (count, Σ)."""
+    gap = F.col("is_gap_filled")
+    return [
+        F.count(F.lit(1)).alias("n"),
+        F.count_if(gap).alias("nf"),
+        _exact_sum(F.when(~gap, F.col("_th"))).alias("c_out"),
+    ]
+
+
+def codec_audit() -> list[Column]:
+    """Blobs and encoded points of a codec_chunks write."""
+    return [F.count(F.lit(1)).alias("blobs"), F.sum("n").alias("pts")]
+
+
+def attach_audit(df: DataFrame, exprs: list[Column]) -> tuple[DataFrame, Observation]:
+    """Piggyback an audit on the frame's NEXT action instead of running a
+    separate pass: returns ``(df.observe(...), observation)``. Spark's
+    CollectMetrics node computes the aggregates on the rows as they
+    stream through whatever job materializes the frame (in rollup_job:
+    the table's data-file write), so per write there is exactly ONE job.
+    Read the result with ``read_audit`` AFTER an action has run on the
+    returned frame."""
     obs = Observation()
-    audited = df.observe(
-        obs,
-        F.count(F.lit(1)).alias("n"),
-        F.min(extent_col).alias("lo"),
-        F.max(extent_col).alias("hi"),
-        F.sum(
-            F.xxhash64(*[F.col(c) for c in checksum_cols]).cast("decimal(38,0)")
-        ).alias("c"),
-    )
-    return audited, obs
+    return df.observe(obs, *exprs), obs
 
 
-def read_audit(obs: Observation) -> tuple[int, object, object, int]:
-    """(rows, min_extent, max_extent, checksum) from an ``attach_audit``
-    observation; blocks until the frame's first action completes."""
-    m = obs.get
-    return int(m["n"]), m["lo"], m["hi"], int(m["c"] or 0) % (1 << 63)
+def grouped_audit(
+    df: DataFrame, bucket_col: Column, exprs: list[Column], buckets: list[int]
+) -> dict[int, dict]:
+    """``{bucket: read_audit(...)}`` for every bucket in ``buckets`` from
+    ONE ``groupBy(bucket).agg(*exprs)`` action over ``df``; a bucket
+    with no rows reads as an empty input."""
+    agg = df.groupBy(bucket_col.alias("bucket")).agg(*exprs)
+    got = {r["bucket"]: r.asDict() for r in agg.collect()}
+    empty = dict.fromkeys(agg.columns[1:])
+    return {b: read_audit(got.get(b, empty)) for b in buckets}
+
+
+def read_audit(m: Observation | dict) -> dict:
+    """Lineage values from one audit result — an ``attach_audit``
+    observation (blocks until the frame's first action completes) or one
+    row of a grouped aggregate. Counts and sums of an empty input read 0, extents
+    (``lo``/``hi``) stay None, and the tier checksum ``c`` folds the
+    exact decimal sum back into int64 range (ANSI-safe)."""
+    if isinstance(m, Observation):
+        m = m.get
+    out = {k: v if k in ("lo", "hi") else int(v or 0) for k, v in m.items()}
+    if "c" in out:
+        out["c"] %= 1 << 63
+    return out
+
+
+class LineageRow(NamedTuple):
+    """One lineage row as committed (``LINEAGE_SCHEMA`` minus the
+    ``committed_at`` stamp, which ``commit_many`` adds)."""
+
+    run_id: str
+    stage: str
+    partition_key: str
+    rows_in: int
+    rows_out: int
+    min_ts: object
+    max_ts: object
+    checksum: int
+    wall_ms: int
 
 
 @dataclass
@@ -120,36 +160,7 @@ class LineageLog:
         )
         return {r["partition_key"] for r in rows}
 
-    def commit(
-        self,
-        run_id: str,
-        stage: str,
-        partition_key: str,
-        rows_in: int,
-        rows_out: int,
-        min_ts,
-        max_ts,
-        checksum: int,
-        wall_ms: int,
-    ) -> None:
-        self.commit_many(
-            run_id,
-            [
-                (
-                    run_id,
-                    stage,
-                    partition_key,
-                    rows_in,
-                    rows_out,
-                    min_ts,
-                    max_ts,
-                    checksum,
-                    wall_ms,
-                )
-            ],
-        )
-
-    def commit_many(self, run_id: str, rows: list[tuple]) -> None:
+    def commit_many(self, run_id: str, rows: list[LineageRow]) -> None:
         """One snapshot commit for a batch of lineage rows (e.g. every
         stage of one work bucket) — lineage stays atomic per bucket and
         the snapshot count drops from stages×buckets to buckets.
@@ -189,10 +200,6 @@ class LineageLog:
         self.catalog.append_files(
             LINEAGE_TABLE, [{"path": path, "partition": {"run_id": run_id}}]
         )
-
-    def metrics(self, run_id: str | None = None) -> DataFrame:
-        df = self.catalog.read(self.spark, LINEAGE_TABLE)
-        return df.filter(F.col("run_id") == run_id) if run_id else df
 
 
 def pending_buckets(

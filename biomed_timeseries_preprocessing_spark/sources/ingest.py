@@ -1,5 +1,5 @@
 """Ingest: declared schema, column-alias resolution, arity validation,
-and the stable (conv_id, turn_idx) ordering contract.
+and the per-turn text-equality invariant.
 
 Reference parity (SURVEY.md §2.1/§2.3):
 - declared schema + projection: ``edf_reader.py:74-87,117-132`` (only
@@ -17,7 +17,7 @@ Reference parity (SURVEY.md §2.1/§2.3):
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -66,28 +66,6 @@ def resolve_aliases(df: DataFrame, aliases: dict[str, list[str]] | None = None) 
         else:
             out.append(F.lit(None).cast(field.dataType).alias(field.name))
     return df.select(*out)
-
-
-def read_transcripts(spark: SparkSession, path: str) -> DataFrame:
-    """Scan a parquet/Iceberg transcript table with the declared schema.
-
-    Column pruning + predicate pushdown are Catalyst built-ins once the
-    schema is declared — the engine never reads columns a stage does not
-    reference (reference analog: ``readSignal(ch_dict[...])`` projection
-    pushdown, ``edf_reader.py:125-127``).
-    """
-    return resolve_aliases(spark.read.parquet(path))
-
-
-def stable_order(df: DataFrame) -> DataFrame:
-    """The ordering contract every ordered-window stage relies on:
-    repartition by conv_id range then sort within partitions. The
-    reference sorts its file lists exactly once and never reorders
-    (``File_Struct.py:129-133``); we re-establish order explicitly after
-    any shuffle/salting stage instead of assuming it survives."""
-    return df.repartitionByRange("conv_id", "turn_idx").sortWithinPartitions(
-        "conv_id", "turn_idx"
-    )
 
 
 def text_equality_violations(original: DataFrame, processed: DataFrame) -> DataFrame:

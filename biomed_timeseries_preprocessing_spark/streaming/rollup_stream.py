@@ -25,16 +25,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..sources.ingest import TRANSCRIPT_SCHEMA
-
-
-def stream_read_transcripts(spark: SparkSession, path: str, max_files: int = 1) -> DataFrame:
-    return (
-        spark.readStream.schema(TRANSCRIPT_SCHEMA)
-        .option("maxFilesPerTrigger", max_files)
-        .parquet(path)
-    )
-
 
 def streaming_rollup_1m(turns: DataFrame, watermark: str = "10 minutes") -> DataFrame:
     """1m-tier continuous aggregate over a stream of derived turns.

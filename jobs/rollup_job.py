@@ -19,16 +19,21 @@ committed snapshot: already committed (stage, bucket) pairs are skipped
 re-committed because tier writes are partition *overwrites*
 (idempotent), not appends.
 
-Two schedulers (same commits, same lineage, bit-identical tables):
-``--scheduler per-bucket`` (default) runs an independent pipeline per
-bucket in a thread pool — the Spark-shaped version of the reference's
-per-patient joblib loop (``File_Struct.py:576-579``) with the two
-things it lacks, atomic commits and resume; stages of different
-buckets overlap, measured 10-15% faster than the barrier plan here
-(BENCH/ab_scheduler.json). ``--scheduler global`` runs ONE partitioned
-Spark job per stage over every pending bucket and slices the
-partitionBy(bucket) output per bucket for independent commits — the
-shape for a wide cluster when bucket count >> pool size.
+One plan, two commit slicings (same commits, same lineage,
+bit-identical tables). ``_run_plan`` builds the whole job once — narrow
+projection and gap-fill, the text-equality check, derive, the codec
+archive, the tier cascade with read-back chaining — and the two
+schedulers differ only in which staged buckets it selects, how it writes
+data files, and how the commits are sliced:
+``--scheduler per-bucket`` runs the plan once per bucket in a thread
+pool — the Spark-shaped version of the reference's per-patient joblib
+loop (``File_Struct.py:576-579``) with the two things it lacks, atomic
+commits and resume; stages of different buckets overlap, which wins on
+one JVM (BENCH/ab_scheduler.json). ``--scheduler global`` runs the plan
+once over every pending bucket — ONE partitionBy(bucket) Spark job per
+stage, its output sliced per bucket directory for independent commits —
+the shape that wins on a multi-executor master once buckets outnumber
+the pool (BENCH/ab_scheduler_local_cluster.json).
 """
 
 from __future__ import annotations
@@ -41,7 +46,6 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from pyspark.sql import Observation  # noqa: E402
 from pyspark.sql import functions as F  # noqa: E402
 
 from biomed_timeseries_preprocessing_spark.functions.codec import encode_chunks  # noqa: E402
@@ -57,10 +61,16 @@ from biomed_timeseries_preprocessing_spark.operators.rollup import (  # noqa: E4
 )
 from biomed_timeseries_preprocessing_spark.plans.lineage import (  # noqa: E402
     LineageLog,
+    LineageRow,
     attach_audit,
     bucket_of,
+    codec_audit,
+    gapfill_in_audit,
+    gapfill_out_audit,
+    grouped_audit,
     pending_buckets,
     read_audit,
+    tier_audit,
 )
 from biomed_timeseries_preprocessing_spark.session import engine_cores, get_spark  # noqa: E402
 from biomed_timeseries_preprocessing_spark.sources.catalog import get_catalog  # noqa: E402
@@ -145,7 +155,11 @@ def resolve_scheduler(master: str, choice: str = "auto") -> str:
     → 'global' on any multi-executor master (yarn, spark://, k8s://,
     local-cluster), where one partitionBy(bucket) job per stage is the
     shape that saturates a wide cluster once bucket count >> driver pool
-    size. Both schedulers produce bit-identical tables and lineage
+    size. Measured on local-cluster[2,2,2048] (4-vCPU VM, --gapfill,
+    BENCH/ab_scheduler_local_cluster.json): 'global' won every pair at
+    16 buckets / 327k turns (median 5.97 vs 8.58 s), 'per-bucket' every
+    pair at 4 buckets / 170k turns (3.40 vs 4.00 s). Both schedulers
+    produce bit-identical tables and lineage
     (BENCH/scheduler_identity_scale.json, proven at 54M turns), so the
     flip is purely a throughput decision. An explicit choice wins."""
     if choice != "auto":
@@ -189,6 +203,8 @@ def run(args, spark=None) -> dict:
     else:
         raw = synth_transcripts(spark, args.synth_convs)
 
+    bcol = bucket_of(F.col("conv_id"), args.buckets)
+
     # ------------------------------------------------ stage source ONCE
     # bucket-partitioned staging write: the only full scan of the input.
     # Every per-bucket read below prunes to one partition directory.
@@ -205,11 +221,11 @@ def run(args, spark=None) -> dict:
     )
     if not stage_done:
         t0 = time.time()
-        raw.withColumn("bucket", bucket_of(F.col("conv_id"), args.buckets)).write.mode(
-            "overwrite"
-        ).partitionBy("bucket").parquet(staging)
+        raw.withColumn("bucket", bcol).write.mode("overwrite").partitionBy(
+            "bucket"
+        ).parquet(staging)
         n_staged = spark.read.parquet(staging).count()  # footer metadata only
-        log.commit(
+        staged_row = LineageRow(
             run_id=args.run_id,
             stage="stage_source",
             partition_key=stage_key,
@@ -220,6 +236,7 @@ def run(args, spark=None) -> dict:
             checksum=0,
             wall_ms=int((time.time() - t0) * 1000),
         )
+        log.commit_many(args.run_id, [staged_row])
     staged = spark.read.parquet(staging)
 
     all_buckets = list(range(args.buckets))
@@ -266,263 +283,126 @@ def run(args, spark=None) -> dict:
     # their tasks, so a small thread pool keeps all cores busy while one
     # bucket sits in its (short, locked) commit section.
 
-    def _run_bucket(i: int, b: int) -> None:
-        if args.fail_after_buckets and i >= args.fail_after_buckets:
-            raise RuntimeError(f"injected failure before bucket {b} (test hook)")
+    def _run_plan(buckets: list[int], grouped: bool) -> None:
+        """The job plan over ``buckets``, committed per bucket.
+
+        Both schedulers run this plan; ``grouped`` only picks how data
+        files are written and how audits are read. Per-bucket
+        (``grouped=False``, one bucket): one write per table, and each
+        audit rides the job it audits as an ``observe()``. Global
+        (``grouped=True``, every pending bucket): ONE partitionBy(bucket)
+        write per table, sliced per bucket directory for the commits, and
+        each audit is one groupBy(bucket) aggregate."""
         t0 = time.time()
+        lineage: dict[int, list[LineageRow]] = {b: [] for b in buckets}
         persisted = []
-        lineage_rows = []  # batched: ONE lineage commit per bucket
-        try:
-            _run_bucket_body(i, b, t0, persisted, lineage_rows)
-        finally:
-            # unpersist even when the bucket raises (e.g. text-equality
-            # violation): with a thread pool, other workers keep running
-            # while the failure propagates — leaked pinned frames would
-            # add memory pressure right when the job is already failing
-            for p in persisted:
-                p.unpersist()
+        tier_rows = 0
 
-    def _run_bucket_body(
-        i: int, b: int, t0: float, persisted: list, lineage_rows: list
-    ) -> None:
-        part = staged.filter(F.col("bucket") == b).drop("bucket")
-        rows_in = None
-        if args.gapfill:
-            # The whole gapfill audit — total + filled counts AND the
-            # text-equality invariant — rides the bucket's FIRST real
-            # write job via two observe() nodes (guide §1: don't run
-            # actions you can piggyback). The invariant is an
-            # order-independent multiset checksum comparison (count +
-            # wrap-around sum of xxhash64(conv, turn, text)) between
-            # the source rows (observed right above the staging scan)
-            # and the non-gap output rows (observed right above the
-            # derive), instead of r5's (conv_id, turn_idx)-keyed JOIN
-            # that shuffled the text payload of both sides per bucket
-            # and needed its own action + a persist of the filled frame
-            # (guide §2.3: shuffle hashes, not payloads — both checksum
-            # subtrees are computed as the rows stream by). Equal
-            # multisets ⇒ equal (count, sum); STRICTER than the old
-            # inner-join check (also catches dropped/duplicated turns).
-            # The precise row-listing join runs only on the failure
-            # path, which is also the only path that recomputes the
-            # un-persisted filled frame. _gapfill_audit() validates
-            # after the first action and always BEFORE any commit.
-            # narrow-shuffle plan (guide §2.3): token_count and the
-            # invariant hash are computed map-side from text BEFORE the
-            # gap-fill exchange and the text payload is DROPPED — only
-            # ~40 B/row crosses the bucket shuffle instead of the raw
-            # text. The carried hash preserves the invariant's power
-            # against row loss/duplication/misrouting (there is no text
-            # in flight left to corrupt), and gap rows get
-            # token_count=0, exactly what the old derive computed from
-            # their "" fill text.
-            pobs, gobs = Observation(), Observation()
-            narrow = part.select(
-                "conv_id",
-                "turn_idx",
-                "role",
-                "tool",
-                "ts",
-                token_count_col().alias("token_count"),
-                F.xxhash64("conv_id", "turn_idx", "text").alias("_th"),
+        def row(b, stage, rows_in, rows_out, min_ts=None, max_ts=None, checksum=0):
+            lineage[b].append(
+                LineageRow(
+                    run_id=args.run_id,
+                    stage=stage,
+                    partition_key=bkey(b),
+                    rows_in=rows_in,
+                    rows_out=rows_out,
+                    min_ts=min_ts,
+                    max_ts=max_ts,
+                    checksum=checksum,
+                    wall_ms=int((time.time() - t0) * 1000),
+                )
             )
-            src = narrow.observe(
-                pobs,
-                F.count(F.lit(1)).alias("n_in"),
-                F.sum(F.col("_th").cast("decimal(38,0)")).alias("c_in"),
-            )
-            filled = gapfill(src, carry={"token_count": 0, "_th": None})
-            work_turns = filled.observe(
-                gobs,
-                F.count(F.lit(1)).alias("n"),
-                F.count_if(F.col("is_gap_filled")).alias("nf"),
-                F.sum(
-                    F.when(
-                        ~F.col("is_gap_filled"),
-                        F.col("_th").cast("decimal(38,0)"),
+
+        def tap(df, exprs):
+            """(frame to run on, reader of its audit per bucket)."""
+            if grouped:
+                return df, lambda: grouped_audit(df, bcol, exprs, buckets)
+            df, obs = attach_audit(df, exprs)
+            return df, lambda: {buckets[0]: read_audit(obs)}
+
+        def read_back(files, df):
+            paths = [f["path"] for fs in files.values() for f in fs]
+            return spark.read.parquet(*paths) if paths else df.limit(0)
+
+        def write(table, df, exprs):
+            """Write ``df``'s data files lock-free (Iceberg model: files in
+            an uninstalled uuid dir are invisible; only the snapshot swap
+            serializes) → (files per bucket, audit per bucket, thunk of
+            the read-back). Global audits the (tiny) files it just wrote;
+            per-bucket builds the read-back only if the next tier asks."""
+            if grouped:
+                files = catalog.write_data_files_partitioned(
+                    table, df.withColumn("bucket", bcol), "bucket"
+                )
+                back = read_back(files, df)
+                audit = grouped_audit(back, bcol, exprs, buckets)
+                return files, audit, lambda: back
+            (b,) = buckets
+            audited, obs = attach_audit(df, exprs)
+            files = {b: catalog.write_data_files(table, audited, {"bucket": b})}
+            return files, {b: read_audit(obs)}, lambda: read_back(files, df)
+
+        def commit(table, files):
+            with commit_lock:
+                for b in buckets:
+                    catalog.commit_overwrite_partitions(
+                        table, files.get(b, []), {"bucket": b}
                     )
-                ).alias("c_out"),
-            ).drop("is_gap_filled", "_th")
-        else:
-            gobs = pobs = None
-            work_turns = part
-        _audited = []
 
-        def _gapfill_audit() -> None:
-            nonlocal rows_in
-            if gobs is None or _audited:
+        part = staged.filter(F.col("bucket").isin(buckets)).drop("bucket")
+        rows_in = None  # per bucket: the derived row count (every tier's rows_in)
+        gap_audit = None  # (source reader, filled reader) until validated
+
+        def check_gapfill() -> None:
+            """Validate the text-equality invariant once, after the first
+            write (per-bucket, its audits ride that write) and BEFORE any
+            commit."""
+            nonlocal gap_audit, rows_in
+            if gap_audit is None:
                 return
-            gm, pm = gobs.get, pobs.get
-            n, nf = int(gm["n"]), int(gm["nf"])
-            if (n - nf != int(pm["n_in"] or 0)) or (
-                int(gm["c_out"] or 0) != int(pm["c_in"] or 0)
-            ):
+            ins, outs = [read() for read in gap_audit]
+            gap_audit = None
+            kept = {b: outs[b]["n"] - outs[b]["nf"] for b in buckets}
+            bad = [
+                b
+                for b in buckets
+                if kept[b] != ins[b]["n_in"] or outs[b]["c_out"] != ins[b]["c_in"]
+            ]
+            if bad:
+                src = staged.filter(F.col("bucket").isin(bad)).drop("bucket")
                 nv = text_equality_violations(
-                    part, gapfill(part).filter(~F.col("is_gap_filled"))
+                    src, gapfill(src).filter(~F.col("is_gap_filled"))
                 ).count()
+                counts = "; ".join(
+                    f"bucket {b}: in={ins[b]['n_in']} rows, out={kept[b]} rows"
+                    for b in bad
+                )
                 raise RuntimeError(
-                    f"text-equality invariant violated in bucket {b} "
-                    f"({nv} differing turns; in={int(pm['n_in'] or 0)} rows "
-                    f"out={n - nf} rows) — refusing to commit "
+                    f"text-equality invariant violated in bucket(s) {bad} "
+                    f"({nv} differing turns; {counts}) — refusing to commit "
                     f"(input_hint contract)"
                 )
-            _audited.append(True)
-            # with_derived is row-preserving, so the observed filled
-            # count already IS the derived row count — no extra action
-            rows_in = n
-            lineage_rows.append(
-                (
-                    args.run_id,
-                    "gapfill",
-                    bkey(b),
-                    n - nf,
-                    nf,
-                    None,
-                    None,
-                    0,
-                    int((time.time() - t0) * 1000),
-                )
-            )
-        # derived is persisted ONLY when a second consumer (codec) exists;
-        # otherwise the 1m rollup is its sole consumer and caching it just
-        # adds reduce-side serialization to the heaviest stage (measured on
-        # the 54M-turn cascade probe: persist-chained 42.9 s vs read-back
-        # 37.6 s at local[16] — BENCH/BASELINE.md round-4 read-back note)
-        derived = with_derived(work_turns)
-        if args.codec_chunks:
-            derived = derived.persist()
-            persisted.append(derived)
-            # data files write lock-free (Iceberg model: uninstalled
-            # uuid-dir files are invisible); only the snapshot swap
-            # serializes. The blob/point audit rides the write via
-            # observe() — same one-job pattern as the tier audits.
-            cobs = Observation()
-            enc = encode_chunks(derived).observe(
-                cobs,
-                F.count(F.lit(1)).alias("blobs"),
-                F.sum("n").alias("pts"),
-            )
-            chunk_files = catalog.write_data_files(
-                "codec_chunks", enc, {"bucket": b}
-            )
-            _gapfill_audit()  # first action done — validate before commit
-            with commit_lock:
-                catalog.commit_overwrite_partitions(
-                    "codec_chunks", chunk_files, {"bucket": b}
-                )
-            cm = cobs.get
-            lineage_rows.append(
-                (
-                    args.run_id,
-                    "codec_chunks",
-                    bkey(b),
-                    int(cm["pts"] or 0),
-                    int(cm["blobs"] or 0),
-                    None,
-                    None,
-                    0,
-                    int((time.time() - t0) * 1000),
-                )
-            )
-        df = None
-        prev_paths: list[str] = []
-        bucket_rows_out = 0
-        for ti, tier in enumerate(tiers):
-            if ti == 0:
-                df = rollup_from_turns(derived, tier)
-            else:
-                # read-back chaining: tier k+1 merges from the (tiny)
-                # data files tier k just wrote — they are exactly the
-                # rows the old persist() held, already on fast storage
-                # and invisible to other readers until their commit.
-                # Dropping the tier persists removed the cache
-                # materialization from the wide stage (Iceberg jobs
-                # chain tables the same way)
-                df = rollup_merge(
-                    spark.read.parquet(*prev_paths) if prev_paths else df.limit(0),
-                    tier,
-                )
-            # the lineage audit (count + extent + checksum) rides the
-            # tier write via observe() — ONE Spark job per tier where
-            # r3 ran two (audit pass, then write) and r1 ran four
-            audited, obs = attach_audit(
-                df, ["conv_id", "bucket_start", "cnt", "sum_tokens"], "bucket_start"
-            )
-            rows_obs = None
-            if ti == 0 and rows_in is None and gobs is None:
-                # sum(cnt) over the first tier == derived row count:
-                # the rows_in audit rides the same write job instead of
-                # a separate derived.count() action (gapfill runs get
-                # rows_in from the observed filled count instead)
-                rows_obs = Observation()
-                audited = audited.observe(
-                    rows_obs, F.sum("cnt").alias("rows_in")
-                )
-            # the tier write (a Spark job) runs lock-free — holding the
-            # commit lock across it serialized all 4-tiers x all-buckets
-            # writes, the dominant serial section of the whole job
-            # (measured: see BENCH/BASELINE.md round-4 commit-path
-            # note); only the O(manifest) snapshot swap needs the lock
-            tier_files = catalog.write_data_files(
-                f"rollup_{tier}", audited, {"bucket": b}
-            )
-            _gapfill_audit()  # no-op after the first call / without --gapfill
-            rows_out, lo, hi, checksum = read_audit(obs)
-            if rows_obs is not None:
-                rows_in = int(rows_obs.get["rows_in"] or 0)
-            prev_paths = [f["path"] for f in tier_files]
-            with commit_lock:
-                catalog.commit_overwrite_partitions(
-                    f"rollup_{tier}", tier_files, {"bucket": b}
-                )
-            lineage_rows.append(
-                (
-                    args.run_id,
-                    f"rollup_{tier}",
-                    bkey(b),
-                    rows_in,
-                    rows_out,
-                    lo,
-                    hi,
-                    checksum,
-                    int((time.time() - t0) * 1000),
-                )
-            )
-            bucket_rows_out += rows_out
-        # single atomic lineage commit: a bucket is either fully recorded
-        # (deepest tier present → resume skips it) or not at all
-        with commit_lock:
-            log.commit_many(args.run_id, lineage_rows)
-            stats["rows_out"] += bucket_rows_out
-            stats["buckets_run"] += 1
+            # with_derived is row-preserving, so the filled count already
+            # IS the derived row count — no extra action
+            rows_in = {b: outs[b]["n"] for b in buckets}
+            for b in buckets:
+                row(b, "gapfill", kept[b], outs[b]["nf"])
 
-    def _run_global(todo: list[int]) -> None:
-        """One partitioned Spark job per stage over ALL pending buckets.
-
-        Spark packs the same work into one job per stage (gap-fill audit, one
-        write per tier), and the per-bucket commit/resume granularity
-        survives via ``write_data_files_partitioned``: the tier write is
-        partitionBy(bucket), its output sliced per bucket directory, and
-        each bucket commits its own snapshot + atomic lineage batch —
-        the task-write/metadata-commit split again, now with one job
-        feeding many commits. Work lost on a kill is the in-flight
-        stage (vs the in-flight bucket). On this box the per-bucket
-        pool wins by overlapping stages of different buckets
-        (BENCH/ab_scheduler.json: 13.1 vs 15.3 s best), so it stays
-        the default; this mode is the saturation shape for a wide
-        cluster where bucket count >> pool size."""
-        t0 = time.time()
-        bcol = bucket_of(F.col("conv_id"), args.buckets)
-        part = staged.filter(F.col("bucket").isin(todo)).drop("bucket")
-        wall = lambda: int((time.time() - t0) * 1000)  # noqa: E731
-        lineage_by_bucket: dict[int, list] = {b: [] for b in todo}
-        persisted = []
         try:
             if args.gapfill:
-                # same narrow-shuffle + checksum-invariant plan as the
-                # per-bucket scheduler (see there): hash/count text
-                # map-side, drop the payload, carry token_count and the
-                # hash through the fill
+                # narrow-shuffle plan (guide §2.3): token_count and the
+                # invariant hash are computed map-side from text BEFORE
+                # the gap-fill exchange and the text payload is DROPPED —
+                # only ~40 B/row crosses the shuffle instead of the raw
+                # text; gap rows get token_count=0, exactly what derive
+                # computes from their "" fill text. The text-equality
+                # invariant is an order-independent multiset checksum
+                # (count + Σ xxhash64(conv, turn, text)) of the source
+                # rows against the non-gap output rows: equal multisets ⇒
+                # equal (count, Σ), and the carried hash keeps its power
+                # against row loss, duplication and misrouting (no text is
+                # left in flight to corrupt). The precise row-listing join
+                # runs only on the failure path.
                 narrow = part.select(
                     "conv_id",
                     "turn_idx",
@@ -532,186 +412,82 @@ def run(args, spark=None) -> dict:
                     token_count_col().alias("token_count"),
                     F.xxhash64("conv_id", "turn_idx", "text").alias("_th"),
                 )
-                filled = gapfill(
-                    narrow, carry={"token_count": 0, "_th": None}
-                ).persist()
-                persisted.append(filled)
-                # ONE action: per-bucket totals + filled counts + the
-                # multiset-checksum text-equality invariant (both
-                # subtrees are map-side partial aggregates; no text
-                # ever crosses a shuffle for the audit)
-                _ck = F.xxhash64("conv_id", "turn_idx", "text").cast("decimal(38,0)")
-                counts = (
-                    filled.groupBy(bcol.alias("bucket")).agg(
-                        F.count(F.lit(1)).alias("n"),
-                        F.count_if(F.col("is_gap_filled")).alias("nf"),
-                        F.sum(
-                            F.when(
-                                ~F.col("is_gap_filled"),
-                                F.col("_th").cast("decimal(38,0)"),
-                            )
-                        ).alias("c_out"),
-                    )
-                )
-                ins = part.groupBy(bcol.alias("bucket")).agg(
-                    F.count(F.lit(1)).alias("n_in"),
-                    F.sum(_ck).alias("c_in"),
-                )
-                audit = {
-                    int(r["bucket"]): r
-                    for r in counts.join(ins, "bucket", "left").collect()
-                }
-                bad = [
-                    b
-                    for b, r in audit.items()
-                    if int(r["n"]) - int(r["nf"]) != int(r["n_in"] or 0)
-                    or int(r["c_out"] or 0) != int(r["c_in"] or 0)
-                ]
-                if bad:
-                    nv = text_equality_violations(
-                        part, filled.filter(~F.col("is_gap_filled"))
-                    ).count()
-                    raise RuntimeError(
-                        f"text-equality invariant violated in buckets {sorted(bad)} "
-                        f"({nv} differing turns) — refusing to commit "
-                        f"(input_hint contract)"
-                    )
-                tier_rows_in = {}
-                for b in todo:
-                    r = audit.get(b)
-                    n, nf = (int(r["n"]), int(r["nf"])) if r is not None else (0, 0)
-                    tier_rows_in[b] = n
-                    lineage_by_bucket[b].append(
-                        (args.run_id, "gapfill", bkey(b), n - nf, nf, None, None, 0, wall())
-                    )
+                src, read_in = tap(narrow, gapfill_in_audit())
+                filled = gapfill(src, carry={"token_count": 0, "_th": None})
+                if grouped:  # its audit is a second consumer
+                    filled = filled.persist()
+                    persisted.append(filled)
+                filled, read_out = tap(filled, gapfill_out_audit())
+                gap_audit = (read_in, read_out)
                 work_turns = filled.drop("is_gap_filled", "_th")
             else:
                 work_turns = part
-                tier_rows_in = None
-            # persist derived only for the codec fan-out — the 1m rollup
-            # is otherwise its sole consumer (see the per-bucket
-            # scheduler's read-back note)
+            # derived is persisted ONLY when a second consumer (codec)
+            # exists; otherwise the 1m rollup is its sole consumer and
+            # caching it just adds reduce-side serialization to the
+            # heaviest stage (measured on the 54M-turn cascade probe:
+            # persist-chained 42.9 s vs read-back 37.6 s at local[16] —
+            # BENCH/BASELINE.md round-4 read-back note)
             derived = with_derived(work_turns)
             if args.codec_chunks:
                 derived = derived.persist()
                 persisted.append(derived)
-                chunk_files = catalog.write_data_files_partitioned(
-                    "codec_chunks",
-                    encode_chunks(derived).withColumn("bucket", bcol),
-                    "bucket",
-                )
-                # per-bucket blob/point audit off the just-written files
-                # (bcol recomputed from conv_id — no dependence on the
-                # partition column), one tiny aggregate for all buckets;
-                # mirrors the tier-audit read-back below
-                cpaths = [
-                    e["path"] for entries in chunk_files.values() for e in entries
-                ]
-                codec_audit = (
-                    {
-                        int(r["bucket"]): r
-                        for r in spark.read.parquet(*cpaths)
-                        .groupBy(bcol.alias("bucket"))
-                        .agg(
-                            F.count(F.lit(1)).alias("blobs"),
-                            F.sum("n").alias("pts"),
-                        )
-                        .collect()
-                    }
-                    if cpaths
-                    else {}
-                )
-                for b in todo:
-                    catalog.commit_overwrite_partitions(
-                        "codec_chunks", chunk_files.get(b, []), {"bucket": b}
-                    )
-                    cr = codec_audit.get(b)
-                    lineage_by_bucket[b].append(
-                        (
-                            args.run_id,
-                            "codec_chunks",
-                            bkey(b),
-                            int(cr["pts"]) if cr is not None else 0,
-                            int(cr["blobs"]) if cr is not None else 0,
-                            None,
-                            None,
-                            0,
-                            wall(),
-                        )
-                    )
-            df = None
-            prev_read = None
+                enc = encode_chunks(derived)
+                files, audit, _ = write("codec_chunks", enc, codec_audit())
+                check_gapfill()
+                commit("codec_chunks", files)
+                for b in buckets:
+                    row(b, "codec_chunks", audit[b]["pts"], audit[b]["blobs"])
             for ti, tier in enumerate(tiers):
+                # read-back chaining: tier k+1 merges from the (tiny) data
+                # files tier k just wrote — already on fast storage and
+                # invisible to other readers until their commit, so no
+                # tier frame is persisted (Iceberg jobs chain tables the
+                # same way)
                 df = (
                     rollup_from_turns(derived, tier)
                     if ti == 0
-                    else rollup_merge(prev_read, tier)
+                    else rollup_merge(back(), tier)
                 )
-                tier_files = catalog.write_data_files_partitioned(
-                    f"rollup_{tier}", df.withColumn("bucket", bcol), "bucket"
+                exprs = tier_audit(
+                    ["conv_id", "bucket_start", "cnt", "sum_tokens"], "bucket_start"
                 )
-                # read-back chaining (see per-bucket scheduler): the next
-                # tier AND the per-bucket audit read the tiny data files
-                # this tier just wrote instead of re-pinning the frame
-                paths = [
-                    e["path"] for entries in tier_files.values() for e in entries
-                ]
-                prev_read = (
-                    spark.read.parquet(*paths) if paths else df.limit(0)
-                )
-                # per-bucket audit off the just-written files — same
-                # count/extent/checksum tuple the per-bucket scheduler
-                # records, one (tiny) aggregate for all buckets; the
-                # first tier's sum(cnt) doubles as the derived row count
-                audit_rows = {
-                    int(r["bucket"]): r
-                    for r in prev_read.groupBy(bcol.alias("bucket"))
-                    .agg(
-                        F.count(F.lit(1)).alias("n"),
-                        F.min("bucket_start").alias("lo"),
-                        F.max("bucket_start").alias("hi"),
-                        F.sum(
-                            F.xxhash64(
-                                "conv_id", "bucket_start", "cnt", "sum_tokens"
-                            ).cast("decimal(38,0)")
-                        ).alias("c"),
-                        F.sum("cnt").alias("rows_in"),
-                    )
-                    .collect()
-                }
-                if ti == 0 and tier_rows_in is None:
-                    tier_rows_in = {
-                        b: int(audit_rows[b]["rows_in"]) if b in audit_rows else 0
-                        for b in todo
-                    }
-                for b in todo:
-                    catalog.commit_overwrite_partitions(
-                        f"rollup_{tier}", tier_files.get(b, []), {"bucket": b}
-                    )
-                    r = audit_rows.get(b)
-                    rows_out = int(r["n"]) if r is not None else 0
-                    lineage_by_bucket[b].append(
-                        (
-                            args.run_id,
-                            f"rollup_{tier}",
-                            bkey(b),
-                            tier_rows_in[b],
-                            rows_out,
-                            r["lo"] if r is not None else None,
-                            r["hi"] if r is not None else None,
-                            (int(r["c"] or 0) % (1 << 63)) if r is not None else 0,
-                            wall(),
-                        )
-                    )
-                    stats["rows_out"] += rows_out
+                count_rows = ti == 0 and not args.gapfill
+                if count_rows:
+                    # sum(cnt) over the first tier == derived row count,
+                    # read off the same write instead of a count() action
+                    exprs.append(F.sum("cnt").alias("rows_in"))
+                # the tier write (a Spark job) runs lock-free — holding
+                # the commit lock across it serialized all tiers x all
+                # buckets writes (BENCH/BASELINE.md round-4 commit-path
+                # note); only the O(manifest) snapshot swap needs the lock
+                files, audit, back = write(f"rollup_{tier}", df, exprs)
+                check_gapfill()
+                if count_rows:
+                    rows_in = {b: audit[b]["rows_in"] for b in buckets}
+                commit(f"rollup_{tier}", files)
+                for b in buckets:
+                    a = audit[b]
+                    row(b, f"rollup_{tier}", rows_in[b], a["n"], a["lo"], a["hi"], a["c"])
+                    tier_rows += a["n"]
         finally:
+            # unpersist even when the plan raises (e.g. text-equality
+            # violation): with a thread pool, other workers keep running
+            # while the failure propagates
             for p in persisted:
                 p.unpersist()
-        # lineage stays atomic PER BUCKET (resume granularity unchanged):
-        # one snapshot commit per bucket, all its stages together
-        for b in todo:
-            log.commit_many(args.run_id, lineage_by_bucket[b])
-            stats["buckets_run"] += 1
+        # lineage stays atomic PER BUCKET: a bucket is either fully
+        # recorded (deepest tier present → resume skips it) or not at all
+        with commit_lock:
+            for b in buckets:
+                log.commit_many(args.run_id, lineage[b])
+            stats["rows_out"] += tier_rows
+            stats["buckets_run"] += len(buckets)
+
+    def _run_bucket(i: int, b: int) -> None:
+        if args.fail_after_buckets and i >= args.fail_after_buckets:
+            raise RuntimeError(f"injected failure before bucket {b} (test hook)")
+        _run_plan([b], grouped=False)
 
     scheduler = resolve_scheduler(
         spark.sparkContext.master, getattr(args, "scheduler", "auto")
@@ -722,7 +498,7 @@ def run(args, spark=None) -> dict:
         or bool(args.bucket_parallelism)
     )
     if todo and not per_bucket:
-        _run_global(todo)
+        _run_plan(todo, grouped=True)
     elif todo:
         # bucket compute runs in a small thread pool (concurrent Spark
         # jobs — the cluster scheduler fills slot gaps one bucket's stage

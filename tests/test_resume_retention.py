@@ -3,6 +3,7 @@ resume-after-kill == uninterrupted run; FIXTURES F5)."""
 
 import argparse
 import datetime as dt
+import re
 
 import pandas as pd
 import pytest
@@ -312,3 +313,44 @@ def test_resume_under_changed_bucket_modulus_reruns_everything(spark, tmp_path):
         a = read_sorted(cat_a, spark, f"rollup_{tier}")
         b = read_sorted(cat_b, spark, f"rollup_{tier}")
         pd.testing.assert_frame_equal(a, b, check_exact=True)
+
+
+@pytest.mark.parametrize("codec_chunks", [False, True])
+@pytest.mark.parametrize("scheduler", ["per-bucket", "global"])
+def test_text_equality_violation_fails_before_commit(
+    spark, tmp_path, monkeypatch, scheduler, codec_chunks
+):
+    """A gap-fill that loses a source turn must fail the job with an error
+    naming the bucket, after the first data-file write and before any
+    commit: no tier or codec snapshot and no rollup/codec lineage row."""
+    import pyspark.sql.functions as F
+
+    import jobs.rollup_job as rollup_job
+    from biomed_timeseries_preprocessing_spark.sources.synth import synth_transcripts
+
+    victim = synth_transcripts(spark, 6).agg(F.min("conv_id")).first()[0]
+    real_gapfill = rollup_job.gapfill
+
+    def lossy_gapfill(df, **kw):
+        # turn 0 is never a gap, so this drops one source turn
+        out = real_gapfill(df, **kw)
+        return out.filter(~((F.col("conv_id") == victim) & (F.col("turn_idx") == 0)))
+
+    monkeypatch.setattr(rollup_job, "gapfill", lossy_gapfill)
+    wh = str(tmp_path / "wh")
+    args = job_args(
+        warehouse=wh, run_id="bad", buckets=1, gapfill=True,
+        codec_chunks=codec_chunks, scheduler=scheduler,
+    )
+    with pytest.raises(RuntimeError, match="invariant violated") as err:
+        run_job(args, spark=spark)
+    counts = re.search(r"bucket 0: in=(\d+) rows, out=(\d+) rows", str(err.value))
+    assert counts, str(err.value)
+    n_in, n_out = map(int, counts.groups())
+    assert n_out == n_in - 1
+
+    cat = LocalSnapshotCatalog(wh)
+    for table in ("rollup_1m", "rollup_5m", "rollup_1h", "rollup_1d", "codec_chunks"):
+        assert cat.snapshots(table) == []
+    lin = cat.read(spark, "lineage").toPandas()
+    assert list(lin["stage"]) == ["stage_source"]
