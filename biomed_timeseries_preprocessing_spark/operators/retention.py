@@ -5,15 +5,12 @@ files); retention is a new capability required by the north_rule: each
 rollup tier keeps a different horizon (raw/1m expire first, 1d kept
 longest) — the TimescaleDB/Gorilla-style downsample-and-expire pattern.
 
-Two physical strategies, chosen by what the table's partition metadata
-supports (mirrors Iceberg):
-
-- **metadata-only delete** (`expire_files`): drop whole data files whose
-  partition metadata says every row is older than the cutoff — zero data
-  rewrite, exactly Iceberg's partition-predicate DELETE;
-- **rewrite expiry** (`expire_rewrite`): filter + dynamic-partition
-  overwrite for tables without a time partition column — used in this
-  sandbox where per-bucket commits carry only the bucket key.
+Expiry is a copy-on-write row delete (`expire_rewrite`, Iceberg's
+row-level DELETE): the rows at or after the cutoff are rewritten in one
+Spark job and committed as a new snapshot, each kept row staying in its
+data file's partition (``bucket`` for the job's tiers) — so the next
+nightly run's per-bucket partition overwrite replaces it rather than
+duplicating it.
 """
 
 from __future__ import annotations
@@ -29,18 +26,6 @@ from ..sources.catalog import LocalSnapshotCatalog
 DEFAULT_RETENTION = {"1m": 7 * 86400, "5m": 30 * 86400, "1h": 180 * 86400, "1d": None}
 
 
-def expire_files(catalog: LocalSnapshotCatalog, table: str, older_than: dt.datetime) -> int:
-    """Metadata-only expiry for tables whose commits carry a ``max_day``
-    partition value (``YYYY-MM-DD`` of the newest bucket_start in the
-    file). Returns number of files dropped."""
-    cutoff = older_than.strftime("%Y-%m-%d")
-
-    def pred(part: dict) -> bool:
-        return "max_day" in part and part["max_day"] < cutoff
-
-    return catalog.delete_files_where(table, pred)
-
-
 def expire_rewrite(
     catalog: LocalSnapshotCatalog,
     spark: SparkSession,
@@ -49,15 +34,9 @@ def expire_rewrite(
     ts_col: str = "bucket_start",
 ) -> int:
     """Rewrite expiry: keep rows with ts_col >= cutoff, commit as a new
-    snapshot (old snapshot remains time-travelable until expire_snapshots).
-    Returns rows removed."""
-    df = catalog.read(spark, table)
-    before = df.count()
-    kept = df.filter(F.col(ts_col) >= F.lit(older_than))
-    n_kept = kept.count()
-    if n_kept < before:  # skip the commit when there is nothing to expire
-        catalog.overwrite(table, kept)
-    return before - n_kept
+    snapshot (old snapshot remains time-travelable until expire_snapshots;
+    no snapshot when nothing expired). Returns rows removed."""
+    return catalog.overwrite(spark, table, F.col(ts_col) >= F.lit(older_than))
 
 
 def apply_retention(
@@ -68,7 +47,7 @@ def apply_retention(
     table_prefix: str = "rollup_",
 ) -> dict[str, int]:
     """Run expiry across all tiers per their horizons; returns
-    tier → rows (or files) removed."""
+    tier → rows removed."""
     retention = retention or DEFAULT_RETENTION
     removed: dict[str, int] = {}
     for tier, horizon in retention.items():
@@ -77,13 +56,6 @@ def apply_retention(
         cutoff = now - dt.timedelta(seconds=horizon)
         table = f"{table_prefix}{tier}"
         try:
-            # metadata-only drop of wholly-expired files first (cheap),
-            # then ALWAYS rewrite the surviving boundary rows — files that
-            # span the cutoff day would otherwise keep expired rows, making
-            # retention results depend on physical file layout. Returned
-            # count = rows removed by the rewrite (rows inside metadata-
-            # dropped files are never read, so they are not counted).
-            expire_files(catalog, table, cutoff)
             removed[tier] = expire_rewrite(catalog, spark, table, cutoff)
         except FileNotFoundError:
             removed[tier] = 0

@@ -207,7 +207,7 @@ def pending_buckets(
     run_id: str,
     stage: str,
     all_buckets: list[int],
-    modulus: int | None = None,
+    modulus: int,
 ) -> list[int]:
     """Resume = anti-join of the full bucket list against committed
     lineage (the reference's missing checkpoint/resume, SURVEY §4).
@@ -219,8 +219,4 @@ def pending_buckets(
     sizing when the source grew) must re-run every bucket rather than
     skip indices committed under the old partitioning."""
     done = log.committed(run_id, stage)
-
-    def key(b: int) -> str:
-        return f"{b}/{modulus}" if modulus is not None else str(b)
-
-    return [b for b in all_buckets if key(b) not in done]
+    return [b for b in all_buckets if f"{b}/{modulus}" not in done]

@@ -17,7 +17,9 @@ this sandbox has no Iceberg jar and no network (SURVEY §7.0), so
   readers see the old or the new snapshot, never a partial write;
 - ``overwrite_partitions`` gives Iceberg's dynamic-partition-overwrite:
   the new snapshot drops prior files belonging to the replaced partition
-  keys (this is what retention expiry and resume re-commits use);
+  keys (this is what resume re-commits use);
+- ``overwrite`` is a copy-on-write row delete that keeps every kept
+  row's partition (this is what retention expiry uses);
 - ``expire_snapshots`` prunes history like Iceberg's
   ``expire_snapshots`` procedure.
 
@@ -30,11 +32,13 @@ from __future__ import annotations
 import contextlib
 import json
 import os
+import re
 import time
 import uuid
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import functions as F
 
 try:  # POSIX cross-process advisory lock (this sandbox / any Linux box)
     import fcntl
@@ -254,11 +258,54 @@ class LocalSnapshotCatalog:
             ]
             return self._commit(table, keep + new_files, "overwrite", cur)["snapshot_id"]
 
-    def overwrite(self, table: str, df: DataFrame) -> int:
-        files = self._write_data(table, df, None)  # lock-free
+    def overwrite(self, spark: SparkSession, table: str, keep: Column) -> int:
+        """Copy-on-write delete: rewrite the current snapshot to the rows
+        matching ``keep`` in ONE Spark write job, commit them as one
+        snapshot, and return the number of rows removed (no write and no
+        commit when that is 0). Every kept row stays in the partition of
+        the data file it came from (Iceberg's row-level DELETE keeps a
+        file's partition the same way), so a later
+        ``commit_overwrite_partitions`` of that partition still replaces
+        it instead of leaving its rows beside the new ones."""
+        cur = self._current(table)
+        if cur is None or not cur["files"]:
+            raise FileNotFoundError(f"table {table} has no committed snapshot/data")
+        # tag each row with the index of its file's partition dict; the
+        # tag becomes the partitionBy directory of the write, which maps
+        # back to the partition dict below. Spark reports a row's file as
+        # a URI, so the key is the file's last two path components: the
+        # catalog names them from uuids, k=v dirs and part-file names,
+        # which URI encoding leaves unchanged.
+        file_paths = [f["path"] for f in cur["files"]]
+        index: dict[str, int] = {}  # partition dict (as JSON) -> tag
+        file_tag: dict[str, int] = {}
+        for f in cur["files"]:
+            key = "/".join(f["path"].split("/")[-2:])
+            i = index.setdefault(json.dumps(f["partition"], sort_keys=True), len(index))
+            if not re.fullmatch(r"[A-Za-z0-9_.=-]+/[A-Za-z0-9_.=-]+", key) or (
+                file_tag.setdefault(key, i) != i
+            ):
+                raise ValueError(f"{table}: cannot tag data file {f['path']}")
+        tag = "catalog_partition"
+        tags = F.create_map(*[F.lit(x) for kv in file_tag.items() for x in kv])
+        file_key = F.substring_index(F.col("_metadata.file_path"), "/", -2)
+        df = spark.read.parquet(*file_paths).withColumn(tag, tags[file_key])
+        kept = df.filter(keep)
+        removed = df.count() - kept.count()
+        if not removed:
+            return 0
+        written = self.write_data_files_partitioned(table, kept, tag)
+        parts = [json.loads(k) for k in index]
+        files = [
+            {"path": f["path"], "partition": parts[i]}
+            for i, fs in written.items()
+            for f in fs
+        ]
+        if not files:  # nothing kept: one empty file keeps the table readable
+            files = self._write_data(table, kept.drop(tag).limit(0), None)
         with self._commit_mutex(table):
-            cur = self._current(table)
-            return self._commit(table, files, "overwrite", cur)["snapshot_id"]
+            self._commit(table, files, "overwrite", self._current(table))
+        return removed
 
     def delete_files_where(self, table: str, predicate) -> int:
         """Metadata-only delete: drop whole data files whose partition

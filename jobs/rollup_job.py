@@ -10,8 +10,10 @@ is scanned ONCE: a staging write materializes it bucket-partitioned
 (``_staging/<run-id>/bucket=N/``), so every subsequent per-bucket read
 prunes to its own partition directory instead of re-scanning the input
 (the Iceberg analog is writing the ingest table with a
-``bucket(conv_id, N)`` partition transform). Per bucket: derive →
-1m→5m→1h→1d cascade → dynamic-partition-overwrite commit of each tier +
+``bucket(conv_id, N)`` partition transform). Per bucket: gap-fill of
+missing turns, checked against the per-turn text-equality invariant
+(the job fails before any commit of a bucket that violates it) → derive
+→ 1m→5m→1h→1d cascade → dynamic-partition-overwrite commit of each tier +
 ONE batched lineage commit carrying all of the bucket's stage rows. A
 killed job re-submitted with the same --run-id resumes from the last
 committed snapshot: already committed (stage, bucket) pairs are skipped
@@ -90,36 +92,22 @@ def parse_args(argv=None):
         "--buckets",
         type=int,
         default=0,
-        help="resume/commit units (0 = auto: one per ~512 MB of source, "
-        "floor 4, cap 4096). Interleaved A/Bs at 0.8M and 8.6M turns "
+        help="resume/commit units, each gap-filled, checked against the "
+        "text-equality invariant and committed on its own (0 = auto: one "
+        "per ~512 MB of source, floor 4, cap 4096). Interleaved A/Bs at "
+        "0.8M and 8.6M turns "
         "both put 4 buckets ~1.3x faster than 8 and ~1.9x faster than "
         "16 on one box — extra buckets are pure per-pipeline fixed "
         "cost until the lake is big enough to need the resume "
         "granularity, so the count scales with bytes, not a constant.",
     )
-    p.add_argument("--tiers", default=",".join(TIER_ORDER))
     p.add_argument("--master", default=None)
-    p.add_argument("--no-resume", action="store_true")
-    p.add_argument(
-        "--gapfill",
-        action="store_true",
-        help="materialize+fill missing turns before derive; enforces the "
-        "per-turn text-equality invariant (job fails loudly on violation)",
-    )
+    # accepted and ignored: gap-fill always runs, and submit scripts pass it
+    p.add_argument("--gapfill", action="store_true", help=argparse.SUPPRESS)
     p.add_argument(
         "--codec-chunks",
         action="store_true",
         help="also write compressed per-(conv, hour) blobs (codec table)",
-    )
-    p.add_argument(
-        "--bucket-parallelism",
-        type=int,
-        default=0,
-        help="per-bucket scheduler only: concurrent bucket pipelines "
-        "(0 = auto: min(buckets, max(4, cores//4)) — 8 beat 4 by ~14% "
-        "every rep at 32 cores, a wash at 8; BENCH/ab_workers.json); "
-        "commits serialize under a lock "
-        "either way. Setting this implies --scheduler per-bucket.",
     )
     p.add_argument(
         "--scheduler",
@@ -127,8 +115,10 @@ def parse_args(argv=None):
         default="auto",
         help="'auto' (default): per-bucket on a single-JVM local master, "
         "global on a multi-executor cluster master — see "
-        "resolve_scheduler. 'per-bucket': independent pipeline per "
-        "bucket in a thread pool — stages of different buckets overlap, "
+        "resolve_scheduler. Both run the same plan (gap-fill, the "
+        "text-equality check, derive, codec, tiers). 'per-bucket': "
+        "independent pipeline per bucket in a pool of min(buckets, "
+        "max(4, cores/4)) threads — stages of different buckets overlap, "
         "which measured 10-15%% faster than the global barrier plan on "
         "one box (BENCH/ab_scheduler.json) and gives small failure/retry "
         "domains. 'global': ONE partitioned Spark job per stage over "
@@ -196,7 +186,6 @@ def run(args, spark=None) -> dict:
         args.buckets = auto_buckets(spark, args.source)
     catalog = get_catalog(args.warehouse)
     log = LineageLog(catalog, spark)
-    tiers = [t for t in TIER_ORDER if t in set(args.tiers.split(","))]
 
     if args.source:
         raw = spark.read.parquet(args.source)
@@ -214,11 +203,8 @@ def run(args, spark=None) -> dict:
     # under the old modulus would silently mismatch every per-bucket
     # read, lineage key, and skew stat below)
     stage_key = f"all/{args.buckets}"
-    stage_done = (
-        not args.no_resume
-        and stage_key in log.committed(args.run_id, "stage_source")
-        and os.path.isdir(staging)
-    )
+    staged_keys = log.committed(args.run_id, "stage_source")
+    stage_done = stage_key in staged_keys and os.path.isdir(staging)
     if not stage_done:
         t0 = time.time()
         raw.withColumn("bucket", bcol).write.mode("overwrite").partitionBy(
@@ -246,14 +232,9 @@ def run(args, spark=None) -> dict:
         # different conversations (see pending_buckets docstring)
         return f"{b}/{args.buckets}"
 
-    first_stage = f"rollup_{tiers[-1]}"  # a bucket counts as done when its
-    # deepest tier committed — lineage rows for every tier are still written.
-    todo = (
-        all_buckets
-        if args.no_resume
-        else pending_buckets(
-            log, args.run_id, first_stage, all_buckets, modulus=args.buckets
-        )
+    # a bucket counts as done when its deepest tier committed
+    todo = pending_buckets(
+        log, args.run_id, f"rollup_{TIER_ORDER[-1]}", all_buckets, args.buckets
     )
     stats = {"buckets_total": len(all_buckets), "buckets_run": 0, "rows_out": 0}
     # Purge partitions left over from a LARGER bucket modulus before any
@@ -266,7 +247,7 @@ def run(args, spark=None) -> dict:
     # purged (a table the run doesn't touch keeps its old, internally
     # consistent snapshot); metadata-only, and a no-op snapshot is
     # skipped when no stale partition exists (the common case).
-    for stale_table in [f"rollup_{t}" for t in tiers] + (
+    for stale_table in [f"rollup_{t}" for t in TIER_ORDER] + (
         ["codec_chunks"] if args.codec_chunks else []
     ):
         n_purged = catalog.delete_files_where(
@@ -389,46 +370,41 @@ def run(args, spark=None) -> dict:
                 row(b, "gapfill", kept[b], outs[b]["nf"])
 
         try:
-            if args.gapfill:
-                # narrow-shuffle plan (guide §2.3): token_count and the
-                # invariant hash are computed map-side from text BEFORE
-                # the gap-fill exchange and the text payload is DROPPED —
-                # only ~40 B/row crosses the shuffle instead of the raw
-                # text; gap rows get token_count=0, exactly what derive
-                # computes from their "" fill text. The text-equality
-                # invariant is an order-independent multiset checksum
-                # (count + Σ xxhash64(conv, turn, text)) of the source
-                # rows against the non-gap output rows: equal multisets ⇒
-                # equal (count, Σ), and the carried hash keeps its power
-                # against row loss, duplication and misrouting (no text is
-                # left in flight to corrupt). The precise row-listing join
-                # runs only on the failure path.
-                narrow = part.select(
-                    "conv_id",
-                    "turn_idx",
-                    "role",
-                    "tool",
-                    "ts",
-                    token_count_col().alias("token_count"),
-                    F.xxhash64("conv_id", "turn_idx", "text").alias("_th"),
-                )
-                src, read_in = tap(narrow, gapfill_in_audit())
-                filled = gapfill(src, carry={"token_count": 0, "_th": None})
-                if grouped:  # its audit is a second consumer
-                    filled = filled.persist()
-                    persisted.append(filled)
-                filled, read_out = tap(filled, gapfill_out_audit())
-                gap_audit = (read_in, read_out)
-                work_turns = filled.drop("is_gap_filled", "_th")
-            else:
-                work_turns = part
+            # narrow-shuffle plan (guide §2.3): token_count and the
+            # invariant hash are computed map-side from text BEFORE the
+            # gap-fill exchange and the text payload is DROPPED — only
+            # ~40 B/row crosses the shuffle instead of the raw text; gap
+            # rows get token_count=0, exactly what derive computes from
+            # their "" fill text. The text-equality invariant is an
+            # order-independent multiset checksum (count + Σ xxhash64(conv,
+            # turn, text)) of the source rows against the non-gap output
+            # rows: equal multisets ⇒ equal (count, Σ), and the carried
+            # hash keeps its power against row loss, duplication and
+            # misrouting (no text is left in flight to corrupt). The
+            # precise row-listing join runs only on the failure path.
+            narrow = part.select(
+                "conv_id",
+                "turn_idx",
+                "role",
+                "tool",
+                "ts",
+                token_count_col().alias("token_count"),
+                F.xxhash64("conv_id", "turn_idx", "text").alias("_th"),
+            )
+            src, read_in = tap(narrow, gapfill_in_audit())
+            filled = gapfill(src, carry={"token_count": 0, "_th": None})
+            if grouped:  # its audit is a second consumer
+                filled = filled.persist()
+                persisted.append(filled)
+            filled, read_out = tap(filled, gapfill_out_audit())
+            gap_audit = (read_in, read_out)
             # derived is persisted ONLY when a second consumer (codec)
             # exists; otherwise the 1m rollup is its sole consumer and
             # caching it just adds reduce-side serialization to the
             # heaviest stage (measured on the 54M-turn cascade probe:
             # persist-chained 42.9 s vs read-back 37.6 s at local[16] —
             # BENCH/BASELINE.md round-4 read-back note)
-            derived = with_derived(work_turns)
+            derived = with_derived(filled.drop("is_gap_filled", "_th"))
             if args.codec_chunks:
                 derived = derived.persist()
                 persisted.append(derived)
@@ -438,7 +414,10 @@ def run(args, spark=None) -> dict:
                 commit("codec_chunks", files)
                 for b in buckets:
                     row(b, "codec_chunks", audit[b]["pts"], audit[b]["blobs"])
-            for ti, tier in enumerate(tiers):
+            exprs = tier_audit(
+                ["conv_id", "bucket_start", "cnt", "sum_tokens"], "bucket_start"
+            )
+            for ti, tier in enumerate(TIER_ORDER):
                 # read-back chaining: tier k+1 merges from the (tiny) data
                 # files tier k just wrote — already on fast storage and
                 # invisible to other readers until their commit, so no
@@ -449,22 +428,12 @@ def run(args, spark=None) -> dict:
                     if ti == 0
                     else rollup_merge(back(), tier)
                 )
-                exprs = tier_audit(
-                    ["conv_id", "bucket_start", "cnt", "sum_tokens"], "bucket_start"
-                )
-                count_rows = ti == 0 and not args.gapfill
-                if count_rows:
-                    # sum(cnt) over the first tier == derived row count,
-                    # read off the same write instead of a count() action
-                    exprs.append(F.sum("cnt").alias("rows_in"))
                 # the tier write (a Spark job) runs lock-free — holding
                 # the commit lock across it serialized all tiers x all
                 # buckets writes (BENCH/BASELINE.md round-4 commit-path
                 # note); only the O(manifest) snapshot swap needs the lock
                 files, audit, back = write(f"rollup_{tier}", df, exprs)
                 check_gapfill()
-                if count_rows:
-                    rows_in = {b: audit[b]["rows_in"] for b in buckets}
                 commit(f"rollup_{tier}", files)
                 for b in buckets:
                     a = audit[b]
@@ -489,14 +458,8 @@ def run(args, spark=None) -> dict:
             raise RuntimeError(f"injected failure before bucket {b} (test hook)")
         _run_plan([b], grouped=False)
 
-    scheduler = resolve_scheduler(
-        spark.sparkContext.master, getattr(args, "scheduler", "auto")
-    )
-    per_bucket = (
-        scheduler == "per-bucket"
-        or bool(args.fail_after_buckets)
-        or bool(args.bucket_parallelism)
-    )
+    scheduler = resolve_scheduler(spark.sparkContext.master, args.scheduler)
+    per_bucket = scheduler == "per-bucket" or bool(args.fail_after_buckets)
     if todo and not per_bucket:
         _run_plan(todo, grouped=True)
     elif todo:
@@ -504,13 +467,11 @@ def run(args, spark=None) -> dict:
         # jobs — the cluster scheduler fills slot gaps one bucket's stage
         # barriers leave); the test kill-hook forces sequential so "fail
         # after N buckets committed" stays deterministic
-        # auto pool size scales with the session's cores: 8 workers beat 4
+        # pool size scales with the session's cores: 8 workers beat 4
         # by ~14% on every rep at 32 cores (concurrent bucket pipelines
         # fill the slot gaps each bucket's stage barriers leave) and tied
         # at 8 cores — BENCH/ab_workers.json
-        workers = args.bucket_parallelism or min(
-            max(1, len(todo)), max(4, engine_cores(spark) // 4)
-        )
+        workers = min(len(todo), max(4, engine_cores(spark) // 4))
         if args.fail_after_buckets:
             workers = 1
         if workers <= 1:

@@ -7,6 +7,7 @@ import re
 
 import pandas as pd
 import pytest
+from pyspark.sql import functions as F
 
 from biomed_timeseries_preprocessing_spark.operators.derive import with_derived
 from biomed_timeseries_preprocessing_spark.operators.retention import apply_retention
@@ -23,13 +24,10 @@ def job_args(**kw):
         warehouse=None,
         run_id="t",
         buckets=4,
-        tiers="1m,5m,1h,1d",
         master=None,
-        no_resume=False,
         fail_after_buckets=0,
-        gapfill=False,
         codec_chunks=False,
-        bucket_parallelism=0,
+        scheduler="auto",
     )
     base.update(kw)
     return argparse.Namespace(**base)
@@ -64,12 +62,13 @@ def test_kill_and_resume_equals_uninterrupted(spark, tmp_path):
         b = read_sorted(cat_b, spark, f"rollup_{tier}")
         pd.testing.assert_frame_equal(a, b, check_exact=True)
 
-    # no recompute: exactly one lineage row per (stage, bucket), plus the
-    # single stage_source staging row (written once, skipped on resume)
+    # no recompute: exactly one lineage row per (stage, bucket) for the
+    # gapfill stage and the four tiers, plus the single stage_source
+    # staging row (written once, skipped on resume)
     lin = cat_b.read(spark, "lineage").toPandas()
     per = lin.groupby(["stage", "partition_key"]).size()
     assert (per == 1).all()
-    assert len(per) == 4 * 4 + 1
+    assert len(per) == 5 * 4 + 1
     assert len(lin[lin.stage == "stage_source"]) == 1
 
 
@@ -81,7 +80,7 @@ def test_snapshot_isolation_and_expiry(spark, tmp_path):
     s2 = cat.append("t", df2)
     assert cat.read(spark, "t", snapshot_id=s1).count() == 5  # time travel
     assert cat.read(spark, "t", snapshot_id=s2).count() == 8
-    cat.overwrite("t", df2)
+    assert cat.overwrite(spark, "t", F.col("v") >= 5) == 5  # keeps df2
     assert cat.read(spark, "t").count() == 3
     removed = cat.expire_snapshots("t", keep_last=1)
     assert removed > 0
@@ -100,6 +99,53 @@ def test_retention_expiry(spark, tmp_path, small_transcripts):
     assert removed["1m"] > 0
     assert (kept["bucket_start"] >= cutoff).all()
     assert removed["1m"] + len(kept) == tier.count()
+    # a horizon past every row empties the tier, which stays readable
+    removed = apply_retention(cat, spark, now + dt.timedelta(days=365), retention={"1m": 1})
+    assert removed["1m"] == len(kept)
+    emptied = cat.read(spark, "rollup_1m")
+    assert emptied.count() == 0 and emptied.columns == tier.columns
+
+
+def test_retention_then_next_run_has_no_duplicate_rows(spark, tmp_path):
+    """Retention rewrites the tiers; the next nightly run (a new run id)
+    then re-commits every bucket as a partition overwrite. The rewrite
+    must keep each file's bucket partition, or those overwrites leave the
+    kept rows beside the recomputed ones. Every tier must end with one
+    row per (conv_id, bucket_start), equal to a fresh single run, and no
+    expired row may survive the rewrite of a file that spans the cutoff."""
+    wh_a, wh_b = str(tmp_path / "a"), str(tmp_path / "b")
+    run_job(job_args(warehouse=wh_a, run_id="n1", buckets=2), spark=spark)
+    run_job(job_args(warehouse=wh_b, run_id="n1", buckets=2), spark=spark)
+
+    cat = LocalSnapshotCatalog(wh_b)
+    lo, hi = read_sorted(cat, spark, "rollup_1m")["bucket_start"].agg(["min", "max"])
+    cutoff = (lo + (hi - lo) / 2).to_pydatetime()
+    horizon = 7 * 86400
+    before = {t: cat.read(spark, f"rollup_{t}") for t in ("1m", "5m")}
+    per_file = before["1m"].groupBy(F.input_file_name()).agg(
+        F.min("bucket_start").alias("lo"), F.max("bucket_start").alias("hi")
+    )
+    assert any(r.lo < cutoff <= r.hi for r in per_file.collect())  # a spanning file
+    n_before = {t: df.count() for t, df in before.items()}
+
+    removed = apply_retention(
+        cat, spark, cutoff + dt.timedelta(seconds=horizon),
+        retention={"1m": horizon, "5m": horizon},
+    )
+    for t in ("1m", "5m"):
+        kept = read_sorted(cat, spark, f"rollup_{t}")
+        assert removed[t] > 0 and len(kept) > 0
+        assert (kept["bucket_start"] >= cutoff).all()
+        assert removed[t] + len(kept) == n_before[t]
+
+    run_job(job_args(warehouse=wh_b, run_id="n2", buckets=2), spark=spark)
+    cat_a = LocalSnapshotCatalog(wh_a)
+    for tier in ("1m", "5m", "1h", "1d"):
+        b = read_sorted(cat, spark, f"rollup_{tier}")
+        assert not b.duplicated(subset=["conv_id", "bucket_start"]).any(), tier
+        pd.testing.assert_frame_equal(
+            read_sorted(cat_a, spark, f"rollup_{tier}"), b, check_exact=True
+        )
 
 
 def test_salted_rollup_bit_identical(spark, small_transcripts):
@@ -122,19 +168,18 @@ def test_salted_rollup_bit_identical(spark, small_transcripts):
 
 
 def test_job_with_gapfill_and_codec(spark, tmp_path):
-    """--gapfill enforces the text-equality invariant and commits a
-    gapfill lineage stage; --codec-chunks writes the compressed table."""
+    """The job enforces the text-equality invariant and commits a gapfill
+    lineage stage; --codec-chunks writes the compressed table."""
     args = job_args(
-        warehouse=str(tmp_path / "wh"), run_id="g1", buckets=2, tiers="1m,1h"
+        warehouse=str(tmp_path / "wh"), run_id="g1", buckets=2, codec_chunks=True
     )
-    args.gapfill = True
-    args.codec_chunks = True
     stats = run_job(args, spark=spark)
     assert stats["buckets_run"] == 2
     cat = LocalSnapshotCatalog(str(tmp_path / "wh"))
     lin = cat.read(spark, "lineage").toPandas()
     assert set(lin["stage"]) == {
-        "stage_source", "gapfill", "codec_chunks", "rollup_1m", "rollup_1h"
+        "stage_source", "gapfill", "codec_chunks",
+        "rollup_1m", "rollup_5m", "rollup_1h", "rollup_1d",
     }
     gap_rows = lin[lin.stage == "gapfill"]
     assert len(gap_rows) == 2 and gap_rows["rows_out"].sum() > 0
@@ -145,12 +190,10 @@ def test_job_with_gapfill_and_codec(spark, tmp_path):
     codec_rows = lin[lin.stage == "codec_chunks"]
     assert len(codec_rows) == 2
     assert int(codec_rows["rows_out"].sum()) == chunks.count()
-    import pyspark.sql.functions as F
     assert int(codec_rows["rows_in"].sum()) == int(
         chunks.agg(F.sum("n")).collect()[0][0]
     )
     # compressed strictly smaller than raw for the ts series
-    import pyspark.sql.functions as F
     sums = chunks.select(F.sum("ts_bytes").alias("c"), F.sum("raw_bytes").alias("r")).collect()[0]
     assert sums["c"] < sums["r"]
 
@@ -161,10 +204,8 @@ def test_staging_prunes_per_bucket_scan(spark, tmp_path):
     not a full re-scan — the scan-multiplication fix."""
     import os
 
-    import pyspark.sql.functions as F
-
     wh = str(tmp_path / "wh")
-    run_job(job_args(warehouse=wh, run_id="r2", tiers="1m"), spark=spark)
+    run_job(job_args(warehouse=wh, run_id="r2"), spark=spark)
     staging = os.path.join(wh, "_staging", "r2")
     parts = {d for d in os.listdir(staging) if d.startswith("bucket=")}
     assert parts and parts <= {f"bucket={b}" for b in range(4)}
@@ -178,24 +219,6 @@ def test_staging_prunes_per_bucket_scan(spark, tmp_path):
     assert "PartitionFilters" in plan and "bucket" in plan.split("PartitionFilters")[1][:120]
 
 
-def test_bucket_parallelism_bit_identical(spark, tmp_path):
-    """Concurrent bucket pipelines (thread pool + locked commits) must
-    produce byte-identical tiers and the same lineage cardinality as the
-    sequential path."""
-    wh_s, wh_p = str(tmp_path / "seq"), str(tmp_path / "par")
-    run_job(job_args(warehouse=wh_s, run_id="rp", bucket_parallelism=1), spark=spark)
-    stats = run_job(job_args(warehouse=wh_p, run_id="rp", bucket_parallelism=4), spark=spark)
-    assert stats["buckets_run"] == 4
-    cat_s, cat_p = LocalSnapshotCatalog(wh_s), LocalSnapshotCatalog(wh_p)
-    for tier in ("1m", "5m", "1h", "1d"):
-        a = read_sorted(cat_s, spark, f"rollup_{tier}")
-        b = read_sorted(cat_p, spark, f"rollup_{tier}")
-        pd.testing.assert_frame_equal(a, b, check_exact=True)
-    lin = cat_p.read(spark, "lineage").toPandas()
-    per = lin.groupby(["stage", "partition_key"]).size()
-    assert (per == 1).all() and len(per) == 4 * 4 + 1
-
-
 def test_global_scheduler_bit_identical(spark, tmp_path):
     """The default global scheduler (one partitioned job per stage,
     per-bucket manifest slicing) must produce byte-identical tier tables
@@ -203,7 +226,7 @@ def test_global_scheduler_bit_identical(spark, tmp_path):
     per-bucket thread-pool scheduler — including with gapfill + codec
     on, and with an empty bucket in play (6 convs over 8 buckets)."""
     wh_g, wh_p = str(tmp_path / "glob"), str(tmp_path / "perb")
-    base = job_args(run_id="sched", buckets=8, gapfill=True, codec_chunks=True)
+    base = job_args(run_id="sched", buckets=8, codec_chunks=True)
     g = argparse.Namespace(**{**vars(base), "warehouse": wh_g, "scheduler": "global"})
     p = argparse.Namespace(
         **{**vars(base), "warehouse": wh_p, "scheduler": "per-bucket"}
@@ -322,9 +345,8 @@ def test_text_equality_violation_fails_before_commit(
 ):
     """A gap-fill that loses a source turn must fail the job with an error
     naming the bucket, after the first data-file write and before any
-    commit: no tier or codec snapshot and no rollup/codec lineage row."""
-    import pyspark.sql.functions as F
-
+    commit: no tier or codec snapshot and no rollup/codec lineage row.
+    The job's default options run the check."""
     import jobs.rollup_job as rollup_job
     from biomed_timeseries_preprocessing_spark.sources.synth import synth_transcripts
 
@@ -339,7 +361,7 @@ def test_text_equality_violation_fails_before_commit(
     monkeypatch.setattr(rollup_job, "gapfill", lossy_gapfill)
     wh = str(tmp_path / "wh")
     args = job_args(
-        warehouse=wh, run_id="bad", buckets=1, gapfill=True,
+        warehouse=wh, run_id="bad", buckets=1,
         codec_chunks=codec_chunks, scheduler=scheduler,
     )
     with pytest.raises(RuntimeError, match="invariant violated") as err:

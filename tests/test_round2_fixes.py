@@ -2,7 +2,6 @@
 - as-of join deterministic under duplicate (key, dim_ts) rows;
 - gap-fill floor-division interpolation for non-monotone timestamps;
 - gap-fill keeps a present turn's NULL role (fills gap rows only);
-- retention rewrites cutoff-spanning files after metadata file expiry;
 - streaming sessions: end-of-stream flush + late events never move the
   session end backwards.
 """
@@ -15,9 +14,7 @@ from pyspark.sql import functions as F
 
 from biomed_timeseries_preprocessing_spark.functions.scalars import asof_join
 from biomed_timeseries_preprocessing_spark.operators.gapfill import gapfill
-from biomed_timeseries_preprocessing_spark.operators.retention import apply_retention
 from biomed_timeseries_preprocessing_spark.oracle import ref as oracle
-from biomed_timeseries_preprocessing_spark.sources.catalog import LocalSnapshotCatalog
 
 T0 = dt.datetime(2026, 1, 1)
 
@@ -84,32 +81,6 @@ def test_gapfill_preserves_present_null_role(spark):
     got = gapfill(df).toPandas().sort_values("turn_idx").reset_index(drop=True)
     assert got.loc[1, "role"] is None or pd.isna(got.loc[1, "role"])  # kept NULL
     assert got.loc[2, "role"] == "user"  # gap row forward-fills over the NULL
-
-
-def test_retention_rewrites_boundary_file_after_metadata_expiry(spark, tmp_path):
-    """A file dropped by max_day metadata AND a file spanning the cutoff:
-    expired rows in the spanning file must not survive."""
-    cat = LocalSnapshotCatalog(str(tmp_path / "wh"))
-    old = spark.createDataFrame(
-        [("c", ts(0)), ("c", ts(60))], "conv_id string, bucket_start timestamp"
-    )
-    cutoff_day = T0 + dt.timedelta(days=10)
-    spanning = spark.createDataFrame(
-        [
-            ("c", cutoff_day - dt.timedelta(seconds=60)),  # expired
-            ("c", cutoff_day + dt.timedelta(seconds=60)),  # kept
-        ],
-        "conv_id string, bucket_start timestamp",
-    )
-    cat.append("rollup_1m", old, {"max_day": T0.strftime("%Y-%m-%d")})
-    cat.append("rollup_1m", spanning, {"max_day": (cutoff_day + dt.timedelta(days=1)).strftime("%Y-%m-%d")})
-
-    now = cutoff_day + dt.timedelta(seconds=7 * 86400)
-    removed = apply_retention(cat, spark, now, retention={"1m": 7 * 86400})
-    kept = cat.read(spark, "rollup_1m").toPandas()
-    assert len(kept) == 1  # ONLY the post-cutoff row of the spanning file
-    assert (kept["bucket_start"] >= cutoff_day).all()
-    assert removed["1m"] == 1  # the boundary row the rewrite removed
 
 
 def test_streaming_sessions_end_of_stream_flush(spark, tmp_path):

@@ -35,7 +35,6 @@ def test_spark_submit_py_files_job(tmp_path):
             "--warehouse", wh,
             "--run-id", "submit-smoke",
             "--buckets", "2",
-            "--tiers", "1m,1h",
         ],
         env=env,
         capture_output=True,
