@@ -19,8 +19,9 @@ from dataclasses import dataclass
 from typing import NamedTuple
 
 import pyarrow as pa
+import pyarrow.dataset as ds
 import pyarrow.parquet as pq
-from pyspark.sql import Column, DataFrame, Observation, SparkSession
+from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
 
 from ..sources.catalog import LocalSnapshotCatalog
@@ -51,13 +52,26 @@ def _exact_sum(col: Column) -> Column:
 # ``grouped_audit`` (``groupBy(bucket).agg``); ``read_audit`` reads either.
 
 
-def tier_audit(checksum_cols: list[str], extent_col: str) -> list[Column]:
-    """Row count, min/max extent and the frame checksum of a tier."""
+def tier_audit(
+    checksum_cols: list[str], extent_col: str, where: str | None = None
+) -> list[Column]:
+    """Row count, min/max extent and the frame checksum of a tier — of
+    the rows matching the SQL predicate ``where`` when given, so one pass
+    can audit each tier of a frame that holds several. Written in SQL:
+    the JVM parses each aggregate in one call, where the column-function
+    form costs a Py4J round trip per function (the four tiers' audits
+    took ~0.14 s that way against ~2 ms, on a 4-vCPU VM)."""
+
+    def on(e: str) -> str:
+        return e if where is None else f"CASE WHEN {where} THEN {e} END"
+
+    checksum = f"xxhash64({', '.join(checksum_cols)})"
     return [
-        F.count(F.lit(1)).alias("n"),
-        F.min(extent_col).alias("lo"),
-        F.max(extent_col).alias("hi"),
-        _exact_sum(F.xxhash64(*checksum_cols)).alias("c"),
+        F.expr(f"count({on('1')}) AS n"),
+        F.expr(f"min({on(extent_col)}) AS lo"),
+        F.expr(f"max({on(extent_col)}) AS hi"),
+        # the SQL form of _exact_sum
+        F.expr(f"sum(CAST({on(checksum)} AS DECIMAL(38,0))) AS c"),
     ]
 
 
@@ -99,15 +113,20 @@ def attach_audit(df: DataFrame, exprs: list[Column]) -> tuple[DataFrame, Observa
 
 
 def grouped_audit(
-    df: DataFrame, bucket_col: Column, exprs: list[Column], buckets: list[int]
-) -> dict[int, dict]:
-    """``{bucket: read_audit(...)}`` for every bucket in ``buckets`` from
-    ONE ``groupBy(bucket).agg(*exprs)`` action over ``df``; a bucket
-    with no rows reads as an empty input."""
-    agg = df.groupBy(bucket_col.alias("bucket")).agg(*exprs)
-    got = {r["bucket"]: r.asDict() for r in agg.collect()}
-    empty = dict.fromkeys(agg.columns[1:])
-    return {b: read_audit(got.get(b, empty)) for b in buckets}
+    df: DataFrame, by: list[Column], exprs: list[Column], keys: list
+) -> dict:
+    """``{key: read_audit(...)}`` for every key in ``keys`` from ONE
+    ``groupBy(*by).agg(*exprs)`` action over ``df``. A key is its group's
+    value, or the tuple of them when grouping by several columns (e.g.
+    ``(bucket, tier)``); a key with no rows reads as an empty input."""
+    agg = df.groupBy(*[c.alias(f"_by{i}") for i, c in enumerate(by)]).agg(*exprs)
+    names = agg.columns[len(by):]
+    got = {}
+    for r in agg.collect():
+        key = tuple(r[: len(by)])
+        got[key if len(by) > 1 else key[0]] = dict(zip(names, r[len(by):]))
+    empty = dict.fromkeys(names)
+    return {k: read_audit(got.get(k, empty)) for k in keys}
 
 
 def read_audit(m: Observation | dict) -> dict:
@@ -142,23 +161,22 @@ class LineageRow(NamedTuple):
 @dataclass
 class LineageLog:
     catalog: LocalSnapshotCatalog
-    spark: SparkSession
 
     def committed(self, run_id: str, stage: str) -> set[str]:
         """Partition keys already committed for (run lineage, stage).
         run_id scoping is by *pipeline identity* (caller passes the same
-        run_id on resume), mirroring Iceberg's snapshot lineage."""
-        try:
-            df = self.catalog.read(self.spark, LINEAGE_TABLE)
-        except FileNotFoundError:
+        run_id on resume), mirroring Iceberg's snapshot lineage.
+
+        Read driver-side with pyarrow from the current snapshot's files,
+        the way ``commit_many`` writes them: a lookup runs no Spark job."""
+        cur = self.catalog._current(LINEAGE_TABLE)
+        if cur is None or not cur["files"]:
             return set()
-        rows = (
-            df.filter((F.col("run_id") == run_id) & (F.col("stage") == stage))
-            .select("partition_key")
-            .distinct()
-            .collect()
+        keys = ds.dataset([f["path"] for f in cur["files"]], format="parquet").to_table(
+            columns=["partition_key"],
+            filter=(ds.field("run_id") == run_id) & (ds.field("stage") == stage),
         )
-        return {r["partition_key"] for r in rows}
+        return set(keys.column("partition_key").to_pylist())
 
     def commit_many(self, run_id: str, rows: list[LineageRow]) -> None:
         """One snapshot commit for a batch of lineage rows (e.g. every

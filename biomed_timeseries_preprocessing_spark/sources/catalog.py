@@ -120,20 +120,28 @@ class LocalSnapshotCatalog:
         os.replace(cur_tmp, os.path.join(meta, "current.json"))  # atomic commit point
         return snap
 
-    def _write_data(self, table: str, df: DataFrame, partition_values: dict | None) -> list[dict]:
+    def _write_data(
+        self,
+        table: str,
+        df: DataFrame,
+        partition_values: dict | None,
+        split_by: list[str] = (),
+    ) -> list[dict] | dict[tuple, list[dict]]:
         sub = os.path.join(self._tdir(table), "data", uuid.uuid4().hex)
-        df.write.mode("overwrite").parquet(sub)
-        out = []
+        df.write.mode("overwrite").partitionBy(*split_by).parquet(sub)
+        out: dict[tuple, list[dict]] = {}
         for root, _dirs, names in os.walk(sub):
-            for n in names:
+            rel = os.path.relpath(root, sub)
+            key = tuple(
+                int(v) if v.lstrip("-").isdigit() else v
+                for v in (d.split("=", 1)[1] for d in rel.split(os.sep) if "=" in d)
+            )
+            for n in sorted(names):
                 if n.endswith(".parquet"):
-                    out.append(
-                        {
-                            "path": os.path.join(root, n),
-                            "partition": partition_values or {},
-                        }
+                    out.setdefault(key, []).append(
+                        {"path": os.path.join(root, n), "partition": partition_values or {}}
                     )
-        return out
+        return out if split_by else out.get((), [])
 
     # ---------------------------------------------------------- surface
     def append(self, table: str, df: DataFrame, partition_values: dict | None = None) -> int:
@@ -150,50 +158,31 @@ class LocalSnapshotCatalog:
         return self.commit_overwrite_partitions(table, new_files, partition_values)
 
     def write_data_files(
-        self, table: str, df: DataFrame, partition_values: dict
-    ) -> list[dict]:
-        """Phase 1 of a two-phase dynamic-partition overwrite: run the
+        self,
+        table: str,
+        df: DataFrame,
+        partition_values: dict | None,
+        split_by: list[str] = (),
+    ) -> list[dict] | dict[tuple, list[dict]]:
+        """Phase 1 of a two-phase dynamic-partition overwrite: run ONE
         Spark write job and return the (not-yet-visible) data-file
-        manifest entries. Safe to run concurrently from many workers —
-        files land under a uuid subdir and are invisible until
-        ``commit_overwrite_partitions`` swaps the snapshot pointer. This
-        is exactly Iceberg's model: tasks write data files without
-        coordination; only the metadata commit serializes."""
-        return self._write_data(table, df, partition_values)
+        manifest entries, each with partition ``partition_values``. Safe
+        to run concurrently from many workers — files land under a uuid
+        subdir and are invisible until ``commit_overwrite_partitions``
+        swaps the snapshot pointer. This is exactly Iceberg's model:
+        tasks write data files without coordination; only the metadata
+        commit serializes.
 
-    def write_data_files_partitioned(
-        self, table: str, df: DataFrame, partition_col: str
-    ) -> dict:
-        """Phase 1 for MANY partitions in ONE Spark job: write ``df``
-        ``partitionBy(partition_col)`` under a fresh uuid dir and return
-        ``{partition_value(int if numeric): [manifest entries]}`` sliced
-        per ``<partition_col>=<v>`` subdirectory. Each slice can then be
-        committed independently via ``commit_overwrite_partitions`` —
-        per-partition commit atomicity without per-partition write jobs.
-        The partition column is directory-encoded (dropped from the data
-        files), so the file schema matches a per-partition
-        ``write_data_files`` of the same frame minus that column."""
-        sub = os.path.join(self._tdir(table), "data", uuid.uuid4().hex)
-        df.write.mode("overwrite").partitionBy(partition_col).parquet(sub)
-        prefix = partition_col + "="
-        out: dict = {}
-        for d in os.listdir(sub):
-            if not d.startswith(prefix):
-                continue
-            raw_val = d[len(prefix):]
-            val = int(raw_val) if raw_val.lstrip("-").isdigit() else raw_val
-            entries = []
-            for root, _dirs, names in os.walk(os.path.join(sub, d)):
-                for n in names:
-                    if n.endswith(".parquet"):
-                        entries.append(
-                            {
-                                "path": os.path.join(root, n),
-                                "partition": {partition_col: val},
-                            }
-                        )
-            out[val] = entries
-        return out
+        ``split_by`` columns split the same job's output
+        ``partitionBy(*split_by)``: the entries come back as
+        ``{split values (ints where numeric): entries}``, one key per
+        directory, and each slice can be committed on its own — to its
+        own partition or even its own table. Split columns are
+        directory-encoded (dropped from the data files) and do not enter
+        the entries' partition, which the caller sets per slice. A
+        manifest lists absolute paths, so a slice committed to another
+        table stays where it was written."""
+        return self._write_data(table, df, partition_values, split_by)
 
     def append_files(self, table: str, new_files: list[dict]) -> int:
         """Metadata-only append of pre-written data files (the append
@@ -266,7 +255,10 @@ class LocalSnapshotCatalog:
         the data file it came from (Iceberg's row-level DELETE keeps a
         file's partition the same way), so a later
         ``commit_overwrite_partitions`` of that partition still replaces
-        it instead of leaving its rows beside the new ones."""
+        it instead of leaving its rows beside the new ones. The commit
+        validates its base: if another commit landed since the snapshot
+        was read, it raises :class:`CommitConflictError` and commits
+        nothing, instead of silently dropping that commit's files."""
         cur = self._current(table)
         if cur is None or not cur["files"]:
             raise FileNotFoundError(f"table {table} has no committed snapshot/data")
@@ -291,20 +283,29 @@ class LocalSnapshotCatalog:
         file_key = F.substring_index(F.col("_metadata.file_path"), "/", -2)
         df = spark.read.parquet(*file_paths).withColumn(tag, tags[file_key])
         kept = df.filter(keep)
-        removed = df.count() - kept.count()
+        n, n_kept = df.agg(F.count(F.lit(1)), F.count_if(keep)).first()
+        removed = n - n_kept
         if not removed:
             return 0
-        written = self.write_data_files_partitioned(table, kept, tag)
+        written = self._write_data(table, kept, None, [tag])
         parts = [json.loads(k) for k in index]
         files = [
             {"path": f["path"], "partition": parts[i]}
-            for i, fs in written.items()
+            for (i,), fs in written.items()
             for f in fs
         ]
         if not files:  # nothing kept: one empty file keeps the table readable
             files = self._write_data(table, kept.drop(tag).limit(0), None)
         with self._commit_mutex(table):
-            self._commit(table, files, "overwrite", self._current(table))
+            now = self._current(table)
+            if now["snapshot_id"] != cur["snapshot_id"]:
+                # the rewrite holds snapshot N's rows only: committing it
+                # over a newer snapshot would drop that commit's files
+                raise CommitConflictError(
+                    f"{table}: snapshot {now['snapshot_id']} committed while the "
+                    f"rewrite of snapshot {cur['snapshot_id']} ran — retry from current"
+                )
+            self._commit(table, files, "overwrite", now)
         return removed
 
     def delete_files_where(self, table: str, predicate) -> int:

@@ -13,8 +13,13 @@ prunes to its own partition directory instead of re-scanning the input
 ``bucket(conv_id, N)`` partition transform). Per bucket: gap-fill of
 missing turns, checked against the per-turn text-equality invariant
 (the job fails before any commit of a bucket that violates it) → derive
-→ 1m→5m→1h→1d cascade → dynamic-partition-overwrite commit of each tier +
-ONE batched lineage commit carrying all of the bucket's stage rows. A
+→ all four tiers (1m, 5m, 1h, 1d) written by ONE Spark job, each tier's
+rows in its own directory → dynamic-partition-overwrite commit of each
+tier + ONE batched lineage commit carrying all of the bucket's stage
+rows. ``rollup_merge(tier_1m, TIER_ORDER)`` merges the 1m aggregate
+into every tier inside the plan; the gap-fill's conv_id
+exchange already groups every tier, so no tier adds a shuffle, and no
+tier is read back from the files of the tier below. A
 killed job re-submitted with the same --run-id resumes from the last
 committed snapshot: already committed (stage, bucket) pairs are skipped
 (anti-join against lineage), and the half-written bucket is safely
@@ -24,7 +29,7 @@ re-committed because tier writes are partition *overwrites*
 One plan, two commit slicings (same commits, same lineage,
 bit-identical tables). ``_run_plan`` builds the whole job once — narrow
 projection and gap-fill, the text-equality check, derive, the codec
-archive, the tier cascade with read-back chaining — and the two
+archive, the fused tier write — and the two
 schedulers differ only in which staged buckets it selects, how it writes
 data files, and how the commits are sliced:
 ``--scheduler per-bucket`` runs the plan once per bucket in a thread
@@ -185,7 +190,7 @@ def run(args, spark=None) -> dict:
     if args.buckets <= 0:
         args.buckets = auto_buckets(spark, args.source)
     catalog = get_catalog(args.warehouse)
-    log = LineageLog(catalog, spark)
+    log = LineageLog(catalog)
 
     if args.source:
         raw = spark.read.parquet(args.source)
@@ -264,15 +269,19 @@ def run(args, spark=None) -> dict:
     # their tasks, so a small thread pool keeps all cores busy while one
     # bucket sits in its (short, locked) commit section.
 
+    # partitionBy copy of ``tier``: the fused tier write splits its rows
+    # per tier directory, and the data files keep their tier column
+    TIER_DIR = "tier_dir"
+
     def _run_plan(buckets: list[int], grouped: bool) -> None:
         """The job plan over ``buckets``, committed per bucket.
 
         Both schedulers run this plan; ``grouped`` only picks how data
         files are written and how audits are read. Per-bucket
-        (``grouped=False``, one bucket): one write per table, and each
+        (``grouped=False``, one bucket): one write per stage, and each
         audit rides the job it audits as an ``observe()``. Global
         (``grouped=True``, every pending bucket): ONE partitionBy(bucket)
-        write per table, sliced per bucket directory for the commits, and
+        write per stage, sliced per bucket directory for the commits, and
         each audit is one groupBy(bucket) aggregate."""
         t0 = time.time()
         lineage: dict[int, list[LineageRow]] = {b: [] for b in buckets}
@@ -297,37 +306,44 @@ def run(args, spark=None) -> dict:
         def tap(df, exprs):
             """(frame to run on, reader of its audit per bucket)."""
             if grouped:
-                return df, lambda: grouped_audit(df, bcol, exprs, buckets)
+                return df, lambda: grouped_audit(df, [bcol], exprs, buckets)
             df, obs = attach_audit(df, exprs)
             return df, lambda: {buckets[0]: read_audit(obs)}
 
-        def read_back(files, df):
-            paths = [f["path"] for fs in files.values() for f in fs]
-            return spark.read.parquet(*paths) if paths else df.limit(0)
-
-        def write(table, df, exprs):
+        def write(table, df, split=()):
             """Write ``df``'s data files lock-free (Iceberg model: files in
             an uninstalled uuid dir are invisible; only the snapshot swap
-            serializes) → (files per bucket, audit per bucket, thunk of
-            the read-back). Global audits the (tiny) files it just wrote;
-            per-bucket builds the read-back only if the next tier asks."""
+            serializes) in ONE Spark job → files per (bucket, *split
+            values), the rows of each ``split`` value in their own
+            directory."""
             if grouped:
-                files = catalog.write_data_files_partitioned(
-                    table, df.withColumn("bucket", bcol), "bucket"
+                # bucket innermost: one task repeats a part-file name in
+                # every bucket directory it writes, and the retention
+                # rewrite keys a file by its last two path components
+                got = catalog.write_data_files(
+                    table, df.withColumn("bucket", bcol), None, [*split, "bucket"]
                 )
-                back = read_back(files, df)
-                audit = grouped_audit(back, bcol, exprs, buckets)
-                return files, audit, lambda: back
+                return {
+                    (k[-1], *k[:-1]): [dict(f, partition={"bucket": k[-1]}) for f in fs]
+                    for k, fs in got.items()
+                }
             (b,) = buckets
-            audited, obs = attach_audit(df, exprs)
-            files = {b: catalog.write_data_files(table, audited, {"bucket": b})}
-            return files, {b: read_audit(obs)}, lambda: read_back(files, df)
+            if not split:
+                return {(b,): catalog.write_data_files(table, df, {"bucket": b})}
+            got = catalog.write_data_files(table, df, {"bucket": b}, split)
+            return {(b, *k): fs for k, fs in got.items()}
 
-        def commit(table, files):
+        def audit_back(files, df, by, exprs, keys):
+            """Global audit: ONE groupBy over the (tiny) files just written."""
+            paths = [f["path"] for fs in files.values() for f in fs]
+            back = spark.read.parquet(*paths) if paths else df.limit(0)
+            return grouped_audit(back, by, exprs, keys)
+
+        def commit(table, files, *split):
             with commit_lock:
                 for b in buckets:
                     catalog.commit_overwrite_partitions(
-                        table, files.get(b, []), {"bucket": b}
+                        table, files.get((b, *split), []), {"bucket": b}
                     )
 
         part = staged.filter(F.col("bucket").isin(buckets)).drop("bucket")
@@ -399,44 +415,66 @@ def run(args, spark=None) -> dict:
             filled, read_out = tap(filled, gapfill_out_audit())
             gap_audit = (read_in, read_out)
             # derived is persisted ONLY when a second consumer (codec)
-            # exists; otherwise the 1m rollup is its sole consumer and
+            # exists; otherwise the tier write is its sole consumer and
             # caching it just adds reduce-side serialization to the
-            # heaviest stage (measured on the 54M-turn cascade probe:
-            # persist-chained 42.9 s vs read-back 37.6 s at local[16] —
-            # BENCH/BASELINE.md round-4 read-back note)
+            # heaviest stage (BENCH/BASELINE.md round-4 read-back note)
             derived = with_derived(filled.drop("is_gap_filled", "_th"))
             if args.codec_chunks:
                 derived = derived.persist()
                 persisted.append(derived)
                 enc = encode_chunks(derived)
-                files, audit, _ = write("codec_chunks", enc, codec_audit())
+                if not grouped:
+                    enc, obs = attach_audit(enc, codec_audit())
+                files = write("codec_chunks", enc)
+                audit = (
+                    audit_back(files, enc, [bcol], codec_audit(), buckets)
+                    if grouped
+                    else {buckets[0]: read_audit(obs)}
+                )
                 check_gapfill()
                 commit("codec_chunks", files)
                 for b in buckets:
                     row(b, "codec_chunks", audit[b]["pts"], audit[b]["blobs"])
-            exprs = tier_audit(
-                ["conv_id", "bucket_start", "cnt", "sum_tokens"], "bucket_start"
-            )
-            for ti, tier in enumerate(TIER_ORDER):
-                # read-back chaining: tier k+1 merges from the (tiny) data
-                # files tier k just wrote — already on fast storage and
-                # invisible to other readers until their commit, so no
-                # tier frame is persisted (Iceberg jobs chain tables the
-                # same way)
-                df = (
-                    rollup_from_turns(derived, tier)
-                    if ti == 0
-                    else rollup_merge(back(), tier)
+            # all four tiers in ONE Spark job: the 1m aggregate is merged
+            # into every tier inside the plan, with no shuffle beyond the
+            # gap-fill's conv_id exchange, and the write splits the rows
+            # per tier directory. Like every data-file write it runs
+            # lock-free (holding the commit lock across writes serialized
+            # all buckets — BENCH/BASELINE.md round-4 commit-path note);
+            # only the O(manifest) snapshot swaps take the lock. It is the
+            # 1m table's write; each tier's slice commits to its own table.
+            tiers = rollup_merge(rollup_from_turns(derived, TIER_ORDER[0]), TIER_ORDER)
+            out = tiers.withColumn(TIER_DIR, F.col("tier"))
+            cols = ["conv_id", "bucket_start", "cnt", "sum_tokens"]
+            if not grouped:  # one observe: a struct of audits per tier
+                out, tier_obs = attach_audit(
+                    out,
+                    [
+                        F.struct(*tier_audit(cols, "bucket_start", f"tier = '{t}'")).alias(t)
+                        for t in TIER_ORDER
+                    ],
                 )
-                # the tier write (a Spark job) runs lock-free — holding
-                # the commit lock across it serialized all tiers x all
-                # buckets writes (BENCH/BASELINE.md round-4 commit-path
-                # note); only the O(manifest) snapshot swap needs the lock
-                files, audit, back = write(f"rollup_{tier}", df, exprs)
-                check_gapfill()
-                commit(f"rollup_{tier}", files)
+            files = write(f"rollup_{TIER_ORDER[0]}", out, [TIER_DIR])
+            keys = [(b, t) for b in buckets for t in TIER_ORDER]
+            audit = (
+                audit_back(
+                    files, tiers, [bcol, F.col("tier")], tier_audit(cols, "bucket_start"), keys
+                )
+                if grouped
+                else {(buckets[0], t): read_audit(r.asDict()) for t, r in tier_obs.get.items()}
+            )
+            check_gapfill()
+            for b, t in keys:
+                if not files.get((b, t)):
+                    # a bucket with no rows: a schema-only file keeps the
+                    # tier table readable with its columns
+                    files[(b, t)] = catalog.write_data_files(
+                        f"rollup_{t}", tiers.limit(0), {"bucket": b}
+                    )
+            for tier in TIER_ORDER:
+                commit(f"rollup_{tier}", files, tier)
                 for b in buckets:
-                    a = audit[b]
+                    a = audit[(b, tier)]
                     row(b, f"rollup_{tier}", rows_in[b], a["n"], a["lo"], a["hi"], a["c"])
                     tier_rows += a["n"]
         finally:

@@ -10,10 +10,19 @@ import pytest
 from pyspark.sql import functions as F
 
 from biomed_timeseries_preprocessing_spark.operators.derive import with_derived
+from biomed_timeseries_preprocessing_spark.operators.gapfill import gapfill
 from biomed_timeseries_preprocessing_spark.operators.retention import apply_retention
-from biomed_timeseries_preprocessing_spark.operators.rollup import rollup_from_turns
+from biomed_timeseries_preprocessing_spark.operators.rollup import (
+    TIER_ORDER,
+    rollup_cascade,
+    rollup_from_turns,
+)
 from biomed_timeseries_preprocessing_spark.plans.skew import rollup_from_turns_salted
-from biomed_timeseries_preprocessing_spark.sources.catalog import LocalSnapshotCatalog
+from biomed_timeseries_preprocessing_spark.sources.catalog import (
+    CommitConflictError,
+    LocalSnapshotCatalog,
+)
+from biomed_timeseries_preprocessing_spark.sources.synth import synth_transcripts
 from jobs.rollup_job import run as run_job
 
 
@@ -33,14 +42,23 @@ def job_args(**kw):
     return argparse.Namespace(**base)
 
 
-def read_sorted(catalog, spark, table):
+def canon(df):
     return (
-        catalog.read(spark, table)
-        .toPandas()
+        df.toPandas()
         .sort_values(["conv_id", "bucket_start"], kind="mergesort")
         .reset_index(drop=True)
         .pipe(lambda d: d[sorted(d.columns)])
     )
+
+
+def read_sorted(catalog, spark, table):
+    return canon(catalog.read(spark, table))
+
+
+def reference_tiers(spark, synth_convs):
+    """The inline reference for the job's tier tables: the tier-by-tier
+    cascade over the gap-filled, derived source."""
+    return rollup_cascade(with_derived(gapfill(synth_transcripts(spark, synth_convs))))
 
 
 def test_kill_and_resume_equals_uninterrupted(spark, tmp_path):
@@ -85,6 +103,38 @@ def test_snapshot_isolation_and_expiry(spark, tmp_path):
     removed = cat.expire_snapshots("t", keep_last=1)
     assert removed > 0
     assert cat.read(spark, "t").count() == 3  # current untouched
+
+
+def test_retention_rewrite_rejects_a_commit_landing_mid_rewrite(spark, tmp_path, monkeypatch):
+    """The retention rewrite reads snapshot N and commits its rewrite as
+    the next snapshot. A partition commit landing in between must not be
+    lost: the rewrite raises CommitConflictError and commits nothing, and
+    a retry from the current snapshot keeps the new partition."""
+    cat = LocalSnapshotCatalog(str(tmp_path / "wh"))
+    for b in (0, 1):
+        rows = spark.range(10 * b, 10 * b + 10).withColumnRenamed("id", "v")
+        cat.overwrite_partitions("t", rows, {"bucket": b})
+    late = spark.range(100, 103).withColumnRenamed("id", "v")
+    late_files = cat.write_data_files("t", late, {"bucket": 2})
+    real_mutex = cat._commit_mutex
+
+    def racing_mutex(table):
+        # the rewrite has read its snapshot and is about to commit: a
+        # job's partition commit lands first
+        if late_files:
+            files = late_files.copy()
+            late_files.clear()
+            cat.commit_overwrite_partitions("t", files, {"bucket": 2})
+        return real_mutex(table)
+
+    monkeypatch.setattr(cat, "_commit_mutex", racing_mutex)
+    with pytest.raises(CommitConflictError, match="retry from current"):
+        cat.overwrite(spark, "t", F.col("v") >= 5)
+    everything = list(range(20)) + [100, 101, 102]
+    assert sorted(r.v for r in cat.read(spark, "t").collect()) == everything
+    monkeypatch.undo()
+    assert cat.overwrite(spark, "t", F.col("v") >= 5) == 5
+    assert sorted(r.v for r in cat.read(spark, "t").collect()) == everything[5:]
 
 
 def test_retention_expiry(spark, tmp_path, small_transcripts):
@@ -376,3 +426,67 @@ def test_text_equality_violation_fails_before_commit(
         assert cat.snapshots(table) == []
     lin = cat.read(spark, "lineage").toPandas()
     assert list(lin["stage"]) == ["stage_source"]
+
+
+@pytest.mark.parametrize("scheduler", ["per-bucket", "global"])
+def test_job_tiers_equal_inline_cascade(spark, tmp_path, scheduler):
+    """Every tier table the job commits equals the inline reference
+    ``rollup_cascade(with_derived(gapfill(src)))`` exactly, column for
+    column, under both schedulers and with the codec on (a second
+    consumer of the derived frame)."""
+    wh = str(tmp_path / "wh")
+    args = job_args(warehouse=wh, run_id="ref", codec_chunks=True, scheduler=scheduler)
+    run_job(args, spark=spark)
+    cat = LocalSnapshotCatalog(wh)
+    ref = reference_tiers(spark, 6)
+    for tier in TIER_ORDER:
+        assert cat.read(spark, f"rollup_{tier}").columns == ref[tier].columns
+        pd.testing.assert_frame_equal(
+            read_sorted(cat, spark, f"rollup_{tier}"), canon(ref[tier]), check_exact=True
+        )
+
+
+@pytest.mark.parametrize("scheduler", ["per-bucket", "global"])
+def test_empty_bucket_commits_a_schema_only_file_per_tier(spark, tmp_path, scheduler):
+    """One conversation over four buckets leaves three buckets without
+    rows. Each of them still commits one file to every tier table, with no
+    rows and all of the tier's columns, so every tier table stays readable
+    with its columns whichever buckets hold rows."""
+    wh = str(tmp_path / "wh")
+    args = job_args(warehouse=wh, run_id="e", synth_convs=1, buckets=4, scheduler=scheduler)
+    run_job(args, spark=spark)
+    cat = LocalSnapshotCatalog(wh)
+    ref = reference_tiers(spark, 1)
+    for tier in TIER_ORDER:
+        paths: dict[int, list[str]] = {}
+        for f in cat.snapshots(f"rollup_{tier}")[-1]["files"]:
+            paths.setdefault(f["partition"]["bucket"], []).append(f["path"])
+        assert sorted(paths) == [0, 1, 2, 3], tier
+        parts = [spark.read.parquet(*ps) for ps in paths.values()]
+        assert all(p.columns == ref[tier].columns for p in parts), tier
+        assert sorted(p.count() for p in parts) == [0, 0, 0, ref[tier].count()], tier
+
+
+def test_tier_frame_plans_one_exchange_and_no_read_back(spark, tmp_path, monkeypatch):
+    """Per bucket, all four tiers are ONE data-file write, and the frame
+    it writes plans exactly one Exchange, the gap-fill's conv_id shuffle,
+    and scans no file but the staged source: no tier brings back its own
+    shuffle or a read-back of the tier below."""
+    writes = []
+    real_write = LocalSnapshotCatalog.write_data_files
+
+    def spy(self, table, df, *a, **k):
+        writes.append((table, df))
+        return real_write(self, table, df, *a, **k)
+
+    monkeypatch.setattr(LocalSnapshotCatalog, "write_data_files", spy)
+    wh = str(tmp_path / "wh")
+    # 6 conversations over 3 buckets: every bucket holds rows
+    run_job(job_args(warehouse=wh, run_id="shape", buckets=3, scheduler="per-bucket"), spark=spark)
+    assert [t for t, _ in writes] == ["rollup_1m"] * 3
+    for _, df in writes:
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        assert re.findall(r"Exchange (\w+)\((\w+)", plan) == [("hashpartitioning", "conv_id")], plan
+        # the one scan is the staged source, pruned to its bucket directory
+        assert plan.count("FileScan") == 1, plan
+        assert "(bucket#" in plan.split("PartitionFilters")[1][:120], plan

@@ -10,6 +10,7 @@ from biomed_timeseries_preprocessing_spark.operators.rollup import (
     TIER_ORDER,
     rollup_cascade,
     rollup_from_turns,
+    rollup_merge,
 )
 from biomed_timeseries_preprocessing_spark.oracle import ref as oracle
 
@@ -58,6 +59,22 @@ def test_cascade_equals_rollup_from_raw(derived, tier):
     cascade = canon(rollup_cascade(derived)[tier].toPandas())
     direct = canon(rollup_from_turns(derived, tier).toPandas())
     pd.testing.assert_frame_equal(cascade, direct, check_dtype=False, check_exact=True)
+
+
+@pytest.mark.parametrize("partitions", [None, 13])
+def test_merge_into_all_tiers_equals_cascade(derived, partitions):
+    """The one-frame merge of the 1m aggregate into every tier (the job's
+    tier plan) equals the tier-by-tier cascade exactly, column for
+    column, on any partitioning."""
+    src = derived if partitions is None else derived.repartition(partitions)
+    tiers = rollup_merge(rollup_from_turns(src, "1m"), TIER_ORDER)
+    cascade = rollup_cascade(src)
+    for tier in TIER_ORDER:
+        got = tiers.filter(tiers["tier"] == tier)
+        assert got.columns == cascade[tier].columns
+        pd.testing.assert_frame_equal(
+            canon(got.toPandas()), canon(cascade[tier].toPandas()), check_exact=True
+        )
 
 
 def test_partitioning_invariance(derived):
