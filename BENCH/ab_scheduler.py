@@ -1,7 +1,9 @@
 """Interleaved A/B: global vs per-bucket scheduler on the shipped job.
 
 Same process, same staged input, alternating arms so host weather hits
-both equally; rep 0 per arm is JVM/codegen warmup and is discarded.
+both equally; rep 0 per arm is JVM/codegen warmup and is discarded. The
+job picks its scheduler from the master, so each arm is forced by
+replacing ``jobs.rollup_job.resolve_scheduler``.
 
 Usage: python BENCH/ab_scheduler.py [n_convs] [reps] [buckets] [master]
 
@@ -32,22 +34,16 @@ sys.path.insert(0, REPO)
 
 from biomed_timeseries_preprocessing_spark.session import get_spark  # noqa: E402
 from biomed_timeseries_preprocessing_spark.sources.synth import synth_transcripts  # noqa: E402
-from jobs.rollup_job import parse_args, run  # noqa: E402
+import jobs.rollup_job as rollup_job  # noqa: E402
 
 
 def one_run(spark, raw_path, work, tag, scheduler, buckets="8") -> float:
     wh = os.path.join(work, f"wh_{tag}")
+    rollup_job.resolve_scheduler = lambda master: scheduler
     t0 = time.time()
-    run(
-        parse_args(
-            [
-                "--source", raw_path,
-                "--warehouse", wh,
-                "--run-id", tag,
-                "--buckets", buckets,
-                "--gapfill",
-                "--scheduler", scheduler,
-            ]
+    rollup_job.run(
+        rollup_job.parse_args(
+            ["--source", raw_path, "--warehouse", wh, "--run-id", tag, "--buckets", buckets]
         ),
         spark=spark,
     )

@@ -64,13 +64,55 @@ def _write_be64(buf: np.ndarray, byte_offsets: np.ndarray, values: np.ndarray) -
     buf[pos.ravel()] = b.ravel()
 
 
+def _pack_blocks(
+    starts: np.ndarray,
+    lens: np.ndarray,
+    bid: np.ndarray,
+    fields: list[tuple[np.ndarray, np.ndarray]],
+    hdr_code: np.ndarray,
+    hdr_bits: np.ndarray,
+    pay_code: np.ndarray,
+    pay_bits: np.ndarray,
+) -> list[bytes]:
+    """Lay out one blob per block: big-endian int64 ``n``, then field k
+    of ``fields`` (mask of the blocks that carry it, its values for those
+    blocks) at byte 8k, then the block's rows' prefix+payload codes, bit
+    packed from the end of its header. A row without codes has zero
+    ``hdr_bits`` and ``pay_bits``; a field is carried only by blocks that
+    carry every field before it."""
+    nb = len(starts)
+    row_bits = hdr_bits + pay_bits
+    block_code_bits = np.where(
+        lens > 0, np.add.reduceat(row_bits, starts) if len(row_bits) else 0, 0
+    )
+    head_bytes = 8 + 8 * sum(has.astype(np.int64) for has, _ in fields)
+    block_bytes = head_bytes + (block_code_bits + 7) // 8
+    byte_start = np.concatenate(([0], np.cumsum(block_bytes)[:-1]))
+    out = np.zeros(int(block_bytes.sum()), dtype=np.uint8)
+
+    _write_be64(out, byte_start, lens)
+    for k, (has, vals) in enumerate(fields, 1):
+        _write_be64(out, byte_start[has] + 8 * k, vals)
+
+    # code bits: absolute offsets
+    cum = np.cumsum(row_bits)
+    block_cum_base = np.zeros(nb, dtype=np.int64)
+    if nb > 1:
+        block_cum_base[1:] = cum[starts[1:] - 1]
+    bits_before = cum - row_bits - block_cum_base[bid]
+    abs_bit = (byte_start[bid] + head_bytes[bid]) * 8 + bits_before
+    if row_bits.any():
+        out |= _scatter_bits(len(out), hdr_code, hdr_bits, pay_code, pay_bits, abs_bit)
+    b = out.tobytes()
+    return [b[int(s) : int(s + L)] for s, L in zip(byte_start, block_bytes)]
+
+
 def encode_dod_batch(values: np.ndarray, starts: np.ndarray) -> list[bytes]:
     """values: concatenated int64 series; starts: block start indices
     (sorted, starts[0]==0). Returns one blob per block."""
     v = np.asarray(values, dtype=np.int64)
     starts = np.asarray(starts, dtype=np.int64)
     total = len(v)
-    nb = len(starts)
     ends = np.append(starts[1:], total)
     lens = ends - starts
     bid = _block_ids(starts, total)
@@ -102,46 +144,10 @@ def encode_dod_batch(values: np.ndarray, starts: np.ndarray) -> list[bytes]:
             pay_bits[sel] = pbits
         assigned |= sel
 
-    row_bits = np.where(coded, hdr_bits + pay_bits, 0)
-    block_code_bits = np.add.reduceat(row_bits, starts) if total else np.zeros(nb, dtype=np.int64)
-    block_code_bits = np.where(lens > 0, block_code_bits, 0)
-    head_bytes = np.where(lens >= 3, 24, np.where(lens == 2, 24, np.where(lens == 1, 16, 8)))
-    # n==2 stores n, v0, d0 and no codes — same 24 bytes
-    block_bytes = head_bytes + (block_code_bits + 7) // 8
-    byte_start = np.concatenate(([0], np.cumsum(block_bytes)[:-1]))
-    out = np.zeros(int(block_bytes.sum()), dtype=np.uint8)
-
-    # headers
-    _write_be64(out, byte_start, lens)
     has_v0 = lens >= 1
-    _write_be64(out, byte_start[has_v0] + 8, v[starts[has_v0]])
-    has_d0 = lens >= 2
-    d0 = np.zeros(nb, dtype=np.int64)
-    d0[has_d0] = delta[starts[has_d0] + 1]
-    _write_be64(out, byte_start[has_d0] + 16, d0[has_d0])
-
-    # code bits: absolute offsets
-    cum = np.cumsum(row_bits)
-    block_cum_base = np.zeros(nb, dtype=np.int64)
-    block_cum_base[0] = 0
-    if nb > 1:
-        block_cum_base[1:] = cum[starts[1:] - 1]
-    bits_before = cum - row_bits - block_cum_base[bid]
-    abs_bit = (byte_start[bid] + head_bytes[bid]) * 8 + bits_before
-    if coded.any():
-        coded_stream = _scatter_bits(
-            int(block_bytes.sum()),
-            hdr_code[coded],
-            hdr_bits[coded],
-            pay_code[coded],
-            pay_bits[coded],
-            abs_bit[coded],
-        )
-        out |= coded_stream
-    b = out.tobytes()
-    return [
-        b[int(s) : int(s + L)] for s, L in zip(byte_start, block_bytes)
-    ]
+    has_d0 = lens >= 2  # n==2 stores n, v0, d0 and no codes
+    fields = [(has_v0, v[starts[has_v0]]), (has_d0, delta[starts[has_d0] + 1])]
+    return _pack_blocks(starts, lens, bid, fields, hdr_code, hdr_bits, pay_code, pay_bits)
 
 
 def _concat_blobs(blobs) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
@@ -272,7 +278,6 @@ def encode_xor_batch(values: np.ndarray, starts: np.ndarray) -> list[bytes]:
     u = f.view(np.uint64)
     starts = np.asarray(starts, dtype=np.int64)
     total = len(u)
-    nb = len(starts)
     ends = np.append(starts[1:], total)
     lens = ends - starts
     bid = _block_ids(starts, total)
@@ -317,32 +322,6 @@ def encode_xor_batch(values: np.ndarray, starts: np.ndarray) -> list[bytes]:
         pay_code[nzc] = x[nzc] >> tz[nzc].astype(np.uint64)
         pay_bits[nzc] = nbits[nzc]
 
-    row_bits = hdr_bits + pay_bits
-    block_code_bits = np.add.reduceat(row_bits, starts) if total else np.zeros(nb, dtype=np.int64)
-    block_code_bits = np.where(lens > 0, block_code_bits, 0)
-    head_bytes = np.where(lens >= 1, 16, 8)
-    block_bytes = head_bytes + (block_code_bits + 7) // 8
-    byte_start = np.concatenate(([0], np.cumsum(block_bytes)[:-1]))
-    out = np.zeros(int(block_bytes.sum()), dtype=np.uint8)
-
-    _write_be64(out, byte_start, lens)
     has_v0 = lens >= 1
-    _write_be64(out, byte_start[has_v0] + 8, u[starts[has_v0]].view(np.int64))
-
-    cum = np.cumsum(row_bits)
-    block_cum_base = np.zeros(nb, dtype=np.int64)
-    if nb > 1:
-        block_cum_base[1:] = cum[starts[1:] - 1]
-    bits_before = cum - row_bits - block_cum_base[bid]
-    abs_bit = (byte_start[bid] + head_bytes[bid]) * 8 + bits_before
-    if coded.any():
-        out |= _scatter_bits(
-            int(block_bytes.sum()),
-            hdr_code[coded],
-            hdr_bits[coded],
-            pay_code[coded],
-            pay_bits[coded],
-            abs_bit[coded],
-        )
-    b = out.tobytes()
-    return [b[int(s) : int(s + L)] for s, L in zip(byte_start, block_bytes)]
+    fields = [(has_v0, u[starts[has_v0]].view(np.int64))]
+    return _pack_blocks(starts, lens, bid, fields, hdr_code, hdr_bits, pay_code, pay_bits)

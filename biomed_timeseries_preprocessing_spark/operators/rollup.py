@@ -96,16 +96,11 @@ def _tier_rows(agg: DataFrame, tier: Column) -> DataFrame:
     )
 
 
-def rollup_from_turns(derived: DataFrame, tier: str = "1m") -> DataFrame:
-    """Tier-1m (or any tier) directly from derived turns.
-
-    Input: output of ``derive.with_derived`` —
-    (conv_id, turn_idx, role, text, tool, ts, latency_ms, token_count).
-    """
-    secs = TIER_SECONDS[tier]
-    agg = derived.groupBy(
-        "conv_id", bucket_start(F.col("ts"), secs).alias("bucket_start")
-    ).agg(
+def turn_aggs() -> list[Column]:
+    """The mergeable state of a tier row aggregated from derived turns
+    (``_last`` packed) — shared by the batch 1m tier and the streaming
+    one, so both carry the same state."""
+    return [
         F.count(F.lit(1)).alias("cnt"),
         F.count("latency_ms").alias("n_latency"),
         F.sum("latency_ms").alias("sum_latency"),
@@ -115,7 +110,19 @@ def rollup_from_turns(derived: DataFrame, tier: str = "1m") -> DataFrame:
         F.min("token_count").alias("min_tokens"),
         F.max("token_count").alias("max_tokens"),
         _last("ts", "turn_idx", "latency_ms", "token_count"),
-    )
+    ]
+
+
+def rollup_from_turns(derived: DataFrame, tier: str = "1m") -> DataFrame:
+    """Tier-1m (or any tier) directly from derived turns.
+
+    Input: output of ``derive.with_derived`` —
+    (conv_id, turn_idx, role, text, tool, ts, latency_ms, token_count).
+    """
+    secs = TIER_SECONDS[tier]
+    agg = derived.groupBy(
+        "conv_id", bucket_start(F.col("ts"), secs).alias("bucket_start")
+    ).agg(*turn_aggs())
     return _tier_rows(agg, F.lit(tier))
 
 

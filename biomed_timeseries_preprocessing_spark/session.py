@@ -11,6 +11,7 @@ from __future__ import annotations
 
 import os
 
+from pyspark import SparkConf, SparkContext
 from pyspark.sql import SparkSession
 
 DEFAULT_SHUFFLE_PARTITIONS = 32
@@ -39,13 +40,19 @@ def get_spark(
 ) -> SparkSession:
     """Build (or reuse) the engine SparkSession.
 
-    ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` (env, default 32)
-    so the same entrypoint runs at two parallelism levels for the scaling
-    benchmark (local[8] vs local[32] ~ N vs 4N executors).
+    ``master`` defaults to the one spark-submit launched the driver with
+    (``spark-submit --master``); a plain ``python`` process falls back to
+    ``local[$SPARK_GRAFT_CPUS]`` (env, default 32), so the same
+    entrypoint runs at two parallelism levels for the scaling benchmark
+    (local[8] vs local[32] ~ N vs 4N executors).
     """
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    if master is None and "PYSPARK_GATEWAY_PORT" in os.environ:
+        # spark-submit started the JVM and handed this driver its gateway
+        # port; the submitted --master is in that JVM's system properties
+        SparkContext._ensure_initialized()
+        master = SparkConf().get("spark.master")
     if master is None:
-        master = f"local[{cpus}]"
+        master = f"local[{os.environ.get('SPARK_GRAFT_CPUS', '32')}]"
     local_n = parse_local_cores(master)
     n_cores = local_n if local_n is not None else 32
     if shuffle_partitions is None:

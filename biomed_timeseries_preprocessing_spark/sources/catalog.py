@@ -35,7 +35,7 @@ import os
 import re
 import time
 import uuid
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -55,7 +55,6 @@ class CommitConflictError(RuntimeError):
 @dataclass
 class LocalSnapshotCatalog:
     warehouse: str
-    _cache: dict = field(default_factory=dict, repr=False)
 
     # ---------------------------------------------------------- helpers
     def _tdir(self, table: str) -> str:
@@ -326,8 +325,7 @@ class LocalSnapshotCatalog:
         if snapshot_id is None:
             snap = self._current(table)
         else:
-            with open(os.path.join(self._meta(table), f"snap-{snapshot_id:08d}.json")) as f:
-                snap = json.load(f)
+            snap = self._snap_by_id(table, snapshot_id)
         if snap is None or not snap["files"]:
             raise FileNotFoundError(f"table {table} has no committed snapshot/data")
         return spark.read.parquet(*[f["path"] for f in snap["files"]])
@@ -365,15 +363,6 @@ class LocalSnapshotCatalog:
 
 
 def get_catalog(warehouse: str):
-    """Catalog factory: Iceberg when its runtime is importable/configured,
-    the local snapshot catalog otherwise (same 4-method surface)."""
-    try:  # pragma: no cover - Iceberg jar not present in this sandbox
-        import importlib
-
-        importlib.import_module("pyiceberg")
-        # A real deployment would return an Iceberg-backed implementation
-        # here; the sandbox image has neither the Spark runtime jar nor
-        # pyiceberg, so this branch is intentionally unreachable locally.
-    except ModuleNotFoundError:
-        pass
+    """Catalog factory: the local snapshot catalog. An Iceberg-backed
+    catalog with the same 4-method surface slots in here."""
     return LocalSnapshotCatalog(warehouse)

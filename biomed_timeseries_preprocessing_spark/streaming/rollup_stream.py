@@ -15,15 +15,20 @@ aggregation (its per-file partials). This module materializes the same
   so a streaming 1m tier can be merged batch-side into 5m/1h/1d with
   ``rollup_merge`` unchanged.
 
-``last`` per bucket uses ``max_by(·, struct(ts, turn_idx))`` exactly as
-in batch, so a completed streaming bucket is bit-identical to the batch
-bucket (tested by replaying a batch table through the stream).
+The aggregates and the row projection are the batch 1m tier's own
+(``turn_aggs`` and ``_tier_rows``), so a completed streaming bucket is
+bit-identical to the batch bucket (tested by replaying a batch table
+through the stream). Only the grouping differs: append mode with a
+watermark needs an event-time window, so buckets come from
+``F.window``.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from ..operators.rollup import _tier_rows, turn_aggs
 
 
 def streaming_rollup_1m(turns: DataFrame, watermark: str = "10 minutes") -> DataFrame:
@@ -33,54 +38,13 @@ def streaming_rollup_1m(turns: DataFrame, watermark: str = "10 minutes") -> Data
     upstream per micro-batch; lag() is not stream-expressible, so latency
     is derived in foreachBatch or supplied by the producer — the test
     replays a batch-derived table)."""
-    order = F.struct(F.col("ts"), F.col("turn_idx"))
     agg = (
         turns.withWatermark("ts", watermark)
         .groupBy("conv_id", F.window("ts", "1 minute").alias("win"))
-        .agg(
-            F.count(F.lit(1)).alias("cnt"),
-            F.count("latency_ms").alias("n_latency"),
-            F.sum("latency_ms").alias("sum_latency"),
-            F.min("latency_ms").alias("min_latency"),
-            F.max("latency_ms").alias("max_latency"),
-            F.sum("token_count").cast("long").alias("sum_tokens"),
-            F.min("token_count").alias("min_tokens"),
-            F.max("token_count").alias("max_tokens"),
-            F.max_by(F.col("ts"), order).alias("last_ts"),
-            F.max_by(F.col("turn_idx"), order).alias("last_turn_idx"),
-            F.max_by(F.col("latency_ms"), order).alias("last_latency"),
-            F.max_by(F.col("token_count"), order).alias("last_token_count"),
-        )
-        .select(
-            "conv_id",
-            F.col("win.start").alias("bucket_start"),
-            "cnt",
-            "n_latency",
-            "sum_latency",
-            "min_latency",
-            "max_latency",
-            "sum_tokens",
-            "min_tokens",
-            "max_tokens",
-            "last_ts",
-            "last_turn_idx",
-            "last_latency",
-            "last_token_count",
-        )
-        .withColumn("tier", F.lit("1m"))
-        .withColumn(
-            "mean_latency",
-            F.when(
-                F.col("n_latency") > 0,
-                F.col("sum_latency").cast("double") / F.col("n_latency").cast("double"),
-            ),
-        )
-        .withColumn(
-            "mean_tokens",
-            F.col("sum_tokens").cast("double") / F.col("cnt").cast("double"),
-        )
+        .agg(*turn_aggs())
+        .withColumn("bucket_start", F.col("win.start"))
     )
-    return agg
+    return _tier_rows(agg, F.lit("1m"))
 
 
 def run_stream_to_memory(

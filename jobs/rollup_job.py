@@ -1,9 +1,14 @@
 """Resumable tiered-rollup job — the spark-submit entrypoint.
 
 Run:
-  spark-submit --py-files biomed_timeseries_preprocessing_spark.zip jobs/rollup_job.py \
+  spark-submit --master yarn \
+      --py-files biomed_timeseries_preprocessing_spark.zip jobs/rollup_job.py \
       --source /path/to/transcripts_parquet --warehouse /path/to/wh \
       --run-id nightly-2026-08-16 --buckets 16
+
+The job runs on the master spark-submit gives it (``--master``; a plain
+``python jobs/rollup_job.py`` runs on ``local[$SPARK_GRAFT_CPUS]``), and
+``--source`` is required.
 
 Work is partitioned into ``--buckets`` conv_id hash-buckets. The source
 is scanned ONCE: a staging write materializes it bucket-partitioned
@@ -11,36 +16,37 @@ is scanned ONCE: a staging write materializes it bucket-partitioned
 prunes to its own partition directory instead of re-scanning the input
 (the Iceberg analog is writing the ingest table with a
 ``bucket(conv_id, N)`` partition transform). Per bucket: gap-fill of
-missing turns, checked against the per-turn text-equality invariant
-(the job fails before any commit of a bucket that violates it) → derive
-→ all four tiers (1m, 5m, 1h, 1d) written by ONE Spark job, each tier's
-rows in its own directory → dynamic-partition-overwrite commit of each
-tier + ONE batched lineage commit carrying all of the bucket's stage
-rows. ``rollup_merge(tier_1m, TIER_ORDER)`` merges the 1m aggregate
-into every tier inside the plan; the gap-fill's conv_id
-exchange already groups every tier, so no tier adds a shuffle, and no
-tier is read back from the files of the tier below. A
-killed job re-submitted with the same --run-id resumes from the last
-committed snapshot: already committed (stage, bucket) pairs are skipped
-(anti-join against lineage), and the half-written bucket is safely
-re-committed because tier writes are partition *overwrites*
-(idempotent), not appends.
+missing turns → derive → every data file written (the codec archive,
+then all four tiers (1m, 5m, 1h, 1d) by ONE Spark job, each tier's rows
+in its own directory) → ONE check of the per-turn text-equality
+invariant (the job fails before any commit of a bucket that violates
+it) → dynamic-partition-overwrite commit of each table + ONE batched
+lineage commit carrying all of the bucket's stage rows.
+``rollup_merge(tier_1m, TIER_ORDER)`` merges the 1m aggregate into every
+tier inside the plan; the gap-fill's conv_id exchange already groups
+every tier, so no tier adds a shuffle, and no tier is read back from the
+files of the tier below. A killed job re-submitted with the same
+--run-id resumes from the last committed snapshot: already committed
+(stage, bucket) pairs are skipped (anti-join against lineage), and the
+half-written bucket is safely re-committed because tier writes are
+partition *overwrites* (idempotent), not appends.
 
 One plan, two commit slicings (same commits, same lineage,
 bit-identical tables). ``_run_plan`` builds the whole job once — narrow
 projection and gap-fill, the text-equality check, derive, the codec
 archive, the fused tier write — and the two
 schedulers differ only in which staged buckets it selects, how it writes
-data files, and how the commits are sliced:
-``--scheduler per-bucket`` runs the plan once per bucket in a thread
-pool — the Spark-shaped version of the reference's per-patient joblib
-loop (``File_Struct.py:576-579``) with the two things it lacks, atomic
-commits and resume; stages of different buckets overlap, which wins on
-one JVM (BENCH/ab_scheduler.json). ``--scheduler global`` runs the plan
-once over every pending bucket — ONE partitionBy(bucket) Spark job per
-stage, its output sliced per bucket directory for independent commits —
-the shape that wins on a multi-executor master once buckets outnumber
-the pool (BENCH/ab_scheduler_local_cluster.json).
+data files, and how the commits are sliced. ``resolve_scheduler`` picks
+one from the master. On a single-JVM local master, ``per-bucket`` runs
+the plan once per bucket in a thread pool — the Spark-shaped version of
+the reference's per-patient joblib loop (``File_Struct.py:576-579``)
+with the two things it lacks, atomic commits and resume; stages of
+different buckets overlap, which wins on one JVM
+(BENCH/ab_scheduler.json). On a multi-executor master, ``global`` runs
+the plan once over every pending bucket — ONE partitionBy(bucket) Spark
+job per stage, its output sliced per bucket directory for independent
+commits — the shape that wins there once buckets outnumber the pool
+(BENCH/ab_scheduler_local_cluster.json).
 """
 
 from __future__ import annotations
@@ -84,13 +90,11 @@ from biomed_timeseries_preprocessing_spark.sources.catalog import get_catalog  #
 from biomed_timeseries_preprocessing_spark.sources.ingest import (  # noqa: E402
     text_equality_violations,
 )
-from biomed_timeseries_preprocessing_spark.sources.synth import synth_transcripts  # noqa: E402
 
 
 def parse_args(argv=None):
     p = argparse.ArgumentParser()
-    p.add_argument("--source", help="transcripts parquet path (else --synth-convs)")
-    p.add_argument("--synth-convs", type=int, default=0)
+    p.add_argument("--source", required=True, help="transcripts parquet path")
     p.add_argument("--warehouse", required=True)
     p.add_argument("--run-id", required=True)
     p.add_argument(
@@ -106,31 +110,12 @@ def parse_args(argv=None):
         "cost until the lake is big enough to need the resume "
         "granularity, so the count scales with bytes, not a constant.",
     )
-    p.add_argument("--master", default=None)
     # accepted and ignored: gap-fill always runs, and submit scripts pass it
     p.add_argument("--gapfill", action="store_true", help=argparse.SUPPRESS)
     p.add_argument(
         "--codec-chunks",
         action="store_true",
         help="also write compressed per-(conv, hour) blobs (codec table)",
-    )
-    p.add_argument(
-        "--scheduler",
-        choices=["auto", "per-bucket", "global"],
-        default="auto",
-        help="'auto' (default): per-bucket on a single-JVM local master, "
-        "global on a multi-executor cluster master — see "
-        "resolve_scheduler. Both run the same plan (gap-fill, the "
-        "text-equality check, derive, codec, tiers). 'per-bucket': "
-        "independent pipeline per bucket in a pool of min(buckets, "
-        "max(4, cores/4)) threads — stages of different buckets overlap, "
-        "which measured 10-15%% faster than the global barrier plan on "
-        "one box (BENCH/ab_scheduler.json) and gives small failure/retry "
-        "domains. 'global': ONE partitioned Spark job per stage over "
-        "all pending buckets, per-bucket commit atomicity kept by "
-        "slicing the partitionBy(bucket) output per directory "
-        "(Iceberg's model) — the shape that trivially saturates a "
-        "wide cluster when bucket count >> pool size.",
     )
     p.add_argument(
         "--fail-after-buckets",
@@ -141,44 +126,39 @@ def parse_args(argv=None):
     return p.parse_args(argv)
 
 
-def resolve_scheduler(master: str, choice: str = "auto") -> str:
-    """Pick the bucket scheduler for the deployment shape (VERDICT r4 #4).
+def resolve_scheduler(master: str) -> str:
+    """Pick the bucket scheduler for the deployment shape.
 
-    'auto' → 'per-bucket' on a single-JVM local master (local / local[n] /
-    local[*]), where overlapping independent bucket pipelines measured
-    10-15% faster than the global barrier plan (BENCH/ab_scheduler.json);
-    → 'global' on any multi-executor master (yarn, spark://, k8s://,
-    local-cluster), where one partitionBy(bucket) job per stage is the
-    shape that saturates a wide cluster once bucket count >> driver pool
-    size. Measured on local-cluster[2,2,2048] (4-vCPU VM, --gapfill,
-    BENCH/ab_scheduler_local_cluster.json): 'global' won every pair at
-    16 buckets / 327k turns (median 5.97 vs 8.58 s), 'per-bucket' every
-    pair at 4 buckets / 170k turns (3.40 vs 4.00 s). Both schedulers
+    'per-bucket' on a single-JVM local master (local / local[n] /
+    local[*]), where overlapping independent bucket pipelines beat the
+    global barrier plan (BENCH/ab_scheduler.json, 4-vCPU VM: median 8.15
+    vs 12.05 s at local[4], 16 buckets, 327k turns); 'global' on any
+    multi-executor master (yarn, spark://, k8s://, local-cluster), where
+    one partitionBy(bucket) job per stage fills a wide cluster once
+    buckets outnumber the driver pool. On local-cluster[2,2,2048]
+    (BENCH/ab_scheduler_local_cluster.json) 'global' wins at 32 buckets
+    (13.89 vs 16.41 s), ties at 16 and loses at 4 (6.18 vs 4.15 s), so a
+    few-bucket cluster run takes the slower shape; a bucket-count rule
+    waits for a cluster workload in the benchmark. Both schedulers
     produce bit-identical tables and lineage
     (BENCH/scheduler_identity_scale.json, proven at 54M turns), so the
-    flip is purely a throughput decision. An explicit choice wins."""
-    if choice != "auto":
-        return choice
+    choice is purely a throughput decision."""
     is_local = master == "local" or (
         master.startswith("local[") and not master.startswith("local-cluster")
     )
     return "per-bucket" if is_local else "global"
 
 
-def auto_buckets(spark, source: str | None, target_bytes: int = 512 << 20) -> int:
+def auto_buckets(spark, source: str, target_bytes: int = 512 << 20) -> int:
     """Size the bucket count from the source: ~one resume/commit unit
     per 512 MB of input, floor 4, cap 4096. Uses the Hadoop FileSystem
     ContentSummary so any scheme the session can read also sizes; a
-    sizing failure (or synth source) falls back to the floor."""
-    size = None
-    if source:
-        try:
-            jpath = spark._jvm.org.apache.hadoop.fs.Path(source)
-            fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
-            size = fs.getContentSummary(jpath).getLength()
-        except Exception:
-            size = None
-    if not size:
+    sizing failure falls back to the floor."""
+    try:
+        jpath = spark._jvm.org.apache.hadoop.fs.Path(source)
+        fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
+        size = fs.getContentSummary(jpath).getLength()
+    except Exception:
         return 4
     return int(min(4096, max(4, -(-size // target_bytes))))
 
@@ -186,17 +166,13 @@ def auto_buckets(spark, source: str | None, target_bytes: int = 512 << 20) -> in
 def run(args, spark=None) -> dict:
     own_spark = spark is None
     if own_spark:
-        spark = get_spark(app_name=f"rollup-{args.run_id}", master=args.master)
+        spark = get_spark(app_name=f"rollup-{args.run_id}")
     if args.buckets <= 0:
         args.buckets = auto_buckets(spark, args.source)
     catalog = get_catalog(args.warehouse)
     log = LineageLog(catalog)
 
-    if args.source:
-        raw = spark.read.parquet(args.source)
-    else:
-        raw = synth_transcripts(spark, args.synth_convs)
-
+    raw = spark.read.parquet(args.source)
     bcol = bucket_of(F.col("conv_id"), args.buckets)
 
     # ------------------------------------------------ stage source ONCE
@@ -241,7 +217,12 @@ def run(args, spark=None) -> dict:
     todo = pending_buckets(
         log, args.run_id, f"rollup_{TIER_ORDER[-1]}", all_buckets, args.buckets
     )
-    stats = {"buckets_total": len(all_buckets), "buckets_run": 0, "rows_out": 0}
+    stats = {
+        "master": spark.sparkContext.master,
+        "buckets_total": len(all_buckets),
+        "buckets_run": 0,
+        "rows_out": 0,
+    }
     # Purge partitions left over from a LARGER bucket modulus before any
     # tier commit: lineage keys are modulus-scoped, so a shrink (e.g.
     # auto-sizing 8 -> 4 on a warehouse written under the old default)
@@ -347,18 +328,12 @@ def run(args, spark=None) -> dict:
                     )
 
         part = staged.filter(F.col("bucket").isin(buckets)).drop("bucket")
-        rows_in = None  # per bucket: the derived row count (every tier's rows_in)
-        gap_audit = None  # (source reader, filled reader) until validated
 
-        def check_gapfill() -> None:
-            """Validate the text-equality invariant once, after the first
-            write (per-bucket, its audits ride that write) and BEFORE any
-            commit."""
-            nonlocal gap_audit, rows_in
-            if gap_audit is None:
-                return
-            ins, outs = [read() for read in gap_audit]
-            gap_audit = None
+        def check_gapfill(ins, outs) -> dict[int, int]:
+            """Validate the text-equality invariant from the source
+            (``ins``) and gap-filled (``outs``) audits per bucket, after
+            every data-file write and BEFORE any commit. Returns the
+            derived row count per bucket (every tier's rows_in)."""
             kept = {b: outs[b]["n"] - outs[b]["nf"] for b in buckets}
             bad = [
                 b
@@ -379,11 +354,11 @@ def run(args, spark=None) -> dict:
                     f"({nv} differing turns; {counts}) — refusing to commit "
                     f"(input_hint contract)"
                 )
-            # with_derived is row-preserving, so the filled count already
-            # IS the derived row count — no extra action
-            rows_in = {b: outs[b]["n"] for b in buckets}
             for b in buckets:
                 row(b, "gapfill", kept[b], outs[b]["nf"])
+            # with_derived is row-preserving, so the filled count already
+            # IS the derived row count — no extra action
+            return {b: outs[b]["n"] for b in buckets}
 
         try:
             # narrow-shuffle plan (guide §2.3): token_count and the
@@ -413,7 +388,6 @@ def run(args, spark=None) -> dict:
                 filled = filled.persist()
                 persisted.append(filled)
             filled, read_out = tap(filled, gapfill_out_audit())
-            gap_audit = (read_in, read_out)
             # derived is persisted ONLY when a second consumer (codec)
             # exists; otherwise the tier write is its sole consumer and
             # caching it just adds reduce-side serialization to the
@@ -425,16 +399,12 @@ def run(args, spark=None) -> dict:
                 enc = encode_chunks(derived)
                 if not grouped:
                     enc, obs = attach_audit(enc, codec_audit())
-                files = write("codec_chunks", enc)
-                audit = (
-                    audit_back(files, enc, [bcol], codec_audit(), buckets)
+                codec_files = write("codec_chunks", enc)
+                codec = (
+                    audit_back(codec_files, enc, [bcol], codec_audit(), buckets)
                     if grouped
                     else {buckets[0]: read_audit(obs)}
                 )
-                check_gapfill()
-                commit("codec_chunks", files)
-                for b in buckets:
-                    row(b, "codec_chunks", audit[b]["pts"], audit[b]["blobs"])
             # all four tiers in ONE Spark job: the 1m aggregate is merged
             # into every tier inside the plan, with no shuffle beyond the
             # gap-fill's conv_id exchange, and the write splits the rows
@@ -463,7 +433,6 @@ def run(args, spark=None) -> dict:
                 if grouped
                 else {(buckets[0], t): read_audit(r.asDict()) for t, r in tier_obs.get.items()}
             )
-            check_gapfill()
             for b, t in keys:
                 if not files.get((b, t)):
                     # a bucket with no rows: a schema-only file keeps the
@@ -471,6 +440,13 @@ def run(args, spark=None) -> dict:
                     files[(b, t)] = catalog.write_data_files(
                         f"rollup_{t}", tiers.limit(0), {"bucket": b}
                     )
+            # every data file is written: the one check, then the commits
+            # (per-bucket, the gap-fill audits rode the first write)
+            rows_in = check_gapfill(read_in(), read_out())
+            if args.codec_chunks:
+                commit("codec_chunks", codec_files)
+                for b in buckets:
+                    row(b, "codec_chunks", codec[b]["pts"], codec[b]["blobs"])
             for tier in TIER_ORDER:
                 commit(f"rollup_{tier}", files, tier)
                 for b in buckets:
@@ -496,7 +472,7 @@ def run(args, spark=None) -> dict:
             raise RuntimeError(f"injected failure before bucket {b} (test hook)")
         _run_plan([b], grouped=False)
 
-    scheduler = resolve_scheduler(spark.sparkContext.master, args.scheduler)
+    scheduler = resolve_scheduler(spark.sparkContext.master)
     per_bucket = scheduler == "per-bucket" or bool(args.fail_after_buckets)
     if todo and not per_bucket:
         _run_plan(todo, grouped=True)

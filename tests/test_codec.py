@@ -80,41 +80,47 @@ def test_spark_chunk_encode_roundtrip(spark, small_transcripts):
     assert all(r["raw_bytes"] > 0 for r in rows)
 
 
-def test_batch_encoders_byte_identical_to_single():
-    """codec_batch blobs must equal codec.py per-block blobs exactly."""
-    import numpy as np
+def block_lists(elements):
+    """Lists of non-empty blocks, in random order, that always hold
+    blocks of lengths 1, 2 and 3 (the short-header cases) and up to
+    eight more of up to 40 values."""
+    short = st.tuples(*[st.lists(elements, min_size=n, max_size=n) for n in (1, 2, 3)])
+    more = st.lists(st.lists(elements, min_size=1, max_size=40), max_size=8)
+    return st.tuples(short, more).map(lambda t: [*t[0], *t[1]]).flatmap(st.permutations)
 
+
+INT64S = st.integers(min_value=-(2**62), max_value=2**62)
+# NaN, ±inf and -0.0 drawn often, and repeats (XOR '0' codes) with them
+FLOATS = st.one_of(
+    st.sampled_from([np.nan, np.inf, -np.inf, -0.0, 0.0, 1.5]),
+    st.floats(allow_nan=True, allow_infinity=True, width=64),
+)
+
+
+@given(block_lists(INT64S), block_lists(FLOATS))
+@settings(max_examples=60, deadline=None)
+def test_batch_encoders_byte_identical_to_single(int_blocks, float_blocks):
+    """codec_batch blobs equal codec.py per-block blobs exactly, and
+    decode back to their block."""
     from biomed_timeseries_preprocessing_spark.functions.codec_batch import (
         encode_dod_batch,
         encode_xor_batch,
     )
 
-    rng = np.random.default_rng(11)
-    # blocks of tricky lengths incl. 1, 2, 3 and bigger
-    lens = [1, 2, 3, 4, 25, 7, 1, 300, 2]
-    starts = np.concatenate(([0], np.cumsum(lens)[:-1]))
-    total = sum(lens)
-    ints = rng.choice(
-        np.array([0, 1, -1, 5, 123456, 10**12, -(10**9)], dtype=np.int64), size=total
-    ).astype(np.int64)
-    got = encode_dod_batch(ints, starts)
-    for b, (s, L) in enumerate(zip(starts, lens)):
-        want = encode_dod(ints[s : s + L])
-        assert got[b] == want, f"dod block {b} differs"
-        assert np.array_equal(decode_dod(got[b]), ints[s : s + L])
+    def batch(blocks, dtype):
+        blocks = [np.array(b, dtype=dtype) for b in blocks]
+        starts = np.cumsum([0] + [len(b) for b in blocks[:-1]])
+        return blocks, np.concatenate(blocks), starts
 
-    floats = rng.normal(size=total)
-    floats[::5] = np.nan
-    floats[1::7] = 0.0
-    floats[2::7] = floats[1::7][: len(floats[2::7])]
-    got = encode_xor_batch(floats, starts)
-    for b, (s, L) in enumerate(zip(starts, lens)):
-        want = encode_xor(floats[s : s + L])
-        assert got[b] == want, f"xor block {b} differs"
-        out = decode_xor(got[b])
-        assert np.array_equal(
-            out.view(np.uint64), floats[s : s + L].view(np.uint64)
-        )
+    blocks, values, starts = batch(int_blocks, np.int64)
+    for i, (got, block) in enumerate(zip(encode_dod_batch(values, starts), blocks)):
+        assert got == encode_dod(block), f"dod block {i} differs"
+        assert np.array_equal(decode_dod(got), block)
+
+    blocks, values, starts = batch(float_blocks, np.float64)
+    for i, (got, block) in enumerate(zip(encode_xor_batch(values, starts), blocks)):
+        assert got == encode_xor(block), f"xor block {i} differs"
+        assert np.array_equal(decode_xor(got).view(np.uint64), block.view(np.uint64))
 
 
 def test_table_level_roundtrip(spark, small_transcripts):

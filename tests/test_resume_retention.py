@@ -22,24 +22,37 @@ from biomed_timeseries_preprocessing_spark.sources.catalog import (
     CommitConflictError,
     LocalSnapshotCatalog,
 )
-from biomed_timeseries_preprocessing_spark.sources.synth import synth_transcripts
+import jobs.rollup_job as rollup_job
 from jobs.rollup_job import run as run_job
 
 
-def job_args(**kw):
+def job_args(source, **kw):
     base = dict(
-        source=None,
-        synth_convs=6,
+        source=source,
         warehouse=None,
         run_id="t",
         buckets=4,
-        master=None,
         fail_after_buckets=0,
         codec_chunks=False,
-        scheduler="auto",
     )
     base.update(kw)
     return argparse.Namespace(**base)
+
+
+@pytest.fixture
+def source(synth_lake):
+    """The job's --source: a lake of 6 synth conversations."""
+    return synth_lake(6)
+
+
+@pytest.fixture
+def use_scheduler(monkeypatch):
+    """``use_scheduler(name)``: the job runs ``name`` whatever its master."""
+
+    def use(name):
+        monkeypatch.setattr(rollup_job, "resolve_scheduler", lambda master: name)
+
+    return use
 
 
 def canon(df):
@@ -55,23 +68,23 @@ def read_sorted(catalog, spark, table):
     return canon(catalog.read(spark, table))
 
 
-def reference_tiers(spark, synth_convs):
+def reference_tiers(spark, source):
     """The inline reference for the job's tier tables: the tier-by-tier
     cascade over the gap-filled, derived source."""
-    return rollup_cascade(with_derived(gapfill(synth_transcripts(spark, synth_convs))))
+    return rollup_cascade(with_derived(gapfill(spark.read.parquet(source))))
 
 
-def test_kill_and_resume_equals_uninterrupted(spark, tmp_path):
+def test_kill_and_resume_equals_uninterrupted(spark, tmp_path, source):
     wh_a, wh_b = str(tmp_path / "a"), str(tmp_path / "b")
 
     # uninterrupted
-    stats = run_job(job_args(warehouse=wh_a, run_id="r1"), spark=spark)
+    stats = run_job(job_args(source, warehouse=wh_a, run_id="r1"), spark=spark)
     assert stats["buckets_run"] == 4
 
     # killed after 2 buckets, then resumed
     with pytest.raises(RuntimeError, match="injected failure"):
-        run_job(job_args(warehouse=wh_b, run_id="r1", fail_after_buckets=2), spark=spark)
-    resumed = run_job(job_args(warehouse=wh_b, run_id="r1"), spark=spark)
+        run_job(job_args(source, warehouse=wh_b, run_id="r1", fail_after_buckets=2), spark=spark)
+    resumed = run_job(job_args(source, warehouse=wh_b, run_id="r1"), spark=spark)
     assert resumed["buckets_run"] == 2  # only the pending buckets ran
 
     cat_a, cat_b = LocalSnapshotCatalog(wh_a), LocalSnapshotCatalog(wh_b)
@@ -156,7 +169,7 @@ def test_retention_expiry(spark, tmp_path, small_transcripts):
     assert emptied.count() == 0 and emptied.columns == tier.columns
 
 
-def test_retention_then_next_run_has_no_duplicate_rows(spark, tmp_path):
+def test_retention_then_next_run_has_no_duplicate_rows(spark, tmp_path, source):
     """Retention rewrites the tiers; the next nightly run (a new run id)
     then re-commits every bucket as a partition overwrite. The rewrite
     must keep each file's bucket partition, or those overwrites leave the
@@ -164,8 +177,8 @@ def test_retention_then_next_run_has_no_duplicate_rows(spark, tmp_path):
     row per (conv_id, bucket_start), equal to a fresh single run, and no
     expired row may survive the rewrite of a file that spans the cutoff."""
     wh_a, wh_b = str(tmp_path / "a"), str(tmp_path / "b")
-    run_job(job_args(warehouse=wh_a, run_id="n1", buckets=2), spark=spark)
-    run_job(job_args(warehouse=wh_b, run_id="n1", buckets=2), spark=spark)
+    run_job(job_args(source, warehouse=wh_a, run_id="n1", buckets=2), spark=spark)
+    run_job(job_args(source, warehouse=wh_b, run_id="n1", buckets=2), spark=spark)
 
     cat = LocalSnapshotCatalog(wh_b)
     lo, hi = read_sorted(cat, spark, "rollup_1m")["bucket_start"].agg(["min", "max"])
@@ -188,7 +201,7 @@ def test_retention_then_next_run_has_no_duplicate_rows(spark, tmp_path):
         assert (kept["bucket_start"] >= cutoff).all()
         assert removed[t] + len(kept) == n_before[t]
 
-    run_job(job_args(warehouse=wh_b, run_id="n2", buckets=2), spark=spark)
+    run_job(job_args(source, warehouse=wh_b, run_id="n2", buckets=2), spark=spark)
     cat_a = LocalSnapshotCatalog(wh_a)
     for tier in ("1m", "5m", "1h", "1d"):
         b = read_sorted(cat, spark, f"rollup_{tier}")
@@ -217,11 +230,11 @@ def test_salted_rollup_bit_identical(spark, small_transcripts):
     )
 
 
-def test_job_with_gapfill_and_codec(spark, tmp_path):
+def test_job_with_gapfill_and_codec(spark, tmp_path, source):
     """The job enforces the text-equality invariant and commits a gapfill
     lineage stage; --codec-chunks writes the compressed table."""
     args = job_args(
-        warehouse=str(tmp_path / "wh"), run_id="g1", buckets=2, codec_chunks=True
+        source, warehouse=str(tmp_path / "wh"), run_id="g1", buckets=2, codec_chunks=True
     )
     stats = run_job(args, spark=spark)
     assert stats["buckets_run"] == 2
@@ -248,14 +261,14 @@ def test_job_with_gapfill_and_codec(spark, tmp_path):
     assert sums["c"] < sums["r"]
 
 
-def test_staging_prunes_per_bucket_scan(spark, tmp_path):
+def test_staging_prunes_per_bucket_scan(spark, tmp_path, source):
     """The source is scanned once into a bucket-partitioned staging dir;
     each per-bucket read must hit a PartitionFilter (directory pruning),
     not a full re-scan — the scan-multiplication fix."""
     import os
 
     wh = str(tmp_path / "wh")
-    run_job(job_args(warehouse=wh, run_id="r2"), spark=spark)
+    run_job(job_args(source, warehouse=wh, run_id="r2"), spark=spark)
     staging = os.path.join(wh, "_staging", "r2")
     parts = {d for d in os.listdir(staging) if d.startswith("bucket=")}
     assert parts and parts <= {f"bucket={b}" for b in range(4)}
@@ -269,20 +282,23 @@ def test_staging_prunes_per_bucket_scan(spark, tmp_path):
     assert "PartitionFilters" in plan and "bucket" in plan.split("PartitionFilters")[1][:120]
 
 
-def test_global_scheduler_bit_identical(spark, tmp_path):
-    """The default global scheduler (one partitioned job per stage,
-    per-bucket manifest slicing) must produce byte-identical tier tables
-    and the same per-(stage, bucket) lineage cardinality as the
-    per-bucket thread-pool scheduler — including with gapfill + codec
-    on, and with an empty bucket in play (6 convs over 8 buckets)."""
+def test_global_scheduler_bit_identical(spark, tmp_path, source, use_scheduler):
+    """The global scheduler (one partitioned job per stage, per-bucket
+    manifest slicing) must produce byte-identical tier tables and the
+    same per-(stage, bucket) lineage cardinality as the per-bucket
+    thread-pool scheduler — including with gapfill + codec on, and with
+    an empty bucket in play (6 convs over 8 buckets)."""
     wh_g, wh_p = str(tmp_path / "glob"), str(tmp_path / "perb")
-    base = job_args(run_id="sched", buckets=8, codec_chunks=True)
-    g = argparse.Namespace(**{**vars(base), "warehouse": wh_g, "scheduler": "global"})
-    p = argparse.Namespace(
-        **{**vars(base), "warehouse": wh_p, "scheduler": "per-bucket"}
+    use_scheduler("global")
+    stats_g = run_job(
+        job_args(source, warehouse=wh_g, run_id="sched", buckets=8, codec_chunks=True),
+        spark=spark,
     )
-    stats_g = run_job(g, spark=spark)
-    stats_p = run_job(p, spark=spark)
+    use_scheduler("per-bucket")
+    stats_p = run_job(
+        job_args(source, warehouse=wh_p, run_id="sched", buckets=8, codec_chunks=True),
+        spark=spark,
+    )
     assert stats_g["buckets_run"] == stats_p["buckets_run"] == 8
     assert stats_g["rows_out"] == stats_p["rows_out"]
     cat_g, cat_p = LocalSnapshotCatalog(wh_g), LocalSnapshotCatalog(wh_p)
@@ -332,7 +348,7 @@ def test_two_phase_overwrite_invisible_until_commit(spark, tmp_path):
     assert snap >= 2
 
 
-def test_rerun_under_shrunk_bucket_modulus_purges_stale_partitions(spark, tmp_path):
+def test_rerun_under_shrunk_bucket_modulus_purges_stale_partitions(spark, tmp_path, source):
     """SHRINK direction (ADVICE r4 high): a warehouse written under 8
     buckets and rerun with 4 (reachable without user action: --buckets 0
     auto-sized the old default to 8, the new floor is 4) must not keep
@@ -343,11 +359,11 @@ def test_rerun_under_shrunk_bucket_modulus_purges_stale_partitions(spark, tmp_pa
     wh_a, wh_b = str(tmp_path / "a"), str(tmp_path / "b")
 
     # fresh run at the new (smaller) modulus — the expected end state
-    run_job(job_args(warehouse=wh_a, run_id="r1", buckets=4), spark=spark)
+    run_job(job_args(source, warehouse=wh_a, run_id="r1", buckets=4), spark=spark)
 
     # old run at 8, then rerun of the same warehouse+run-id at 4
-    run_job(job_args(warehouse=wh_b, run_id="r1", buckets=8), spark=spark)
-    rerun = run_job(job_args(warehouse=wh_b, run_id="r1", buckets=4), spark=spark)
+    run_job(job_args(source, warehouse=wh_b, run_id="r1", buckets=8), spark=spark)
+    rerun = run_job(job_args(source, warehouse=wh_b, run_id="r1", buckets=4), spark=spark)
     assert rerun["buckets_run"] == 4  # modulus-scoped keys rerun everything
 
     cat_a, cat_b = LocalSnapshotCatalog(wh_a), LocalSnapshotCatalog(wh_b)
@@ -360,7 +376,7 @@ def test_rerun_under_shrunk_bucket_modulus_purges_stale_partitions(spark, tmp_pa
         )
 
 
-def test_resume_under_changed_bucket_modulus_reruns_everything(spark, tmp_path):
+def test_resume_under_changed_bucket_modulus_reruns_everything(spark, tmp_path, source):
     """Bucket 3-of-4 and 3-of-8 hold different conversations: a resume
     whose bucket count differs from the killed run's (reachable without
     user action once --buckets 0 auto-sizes from a source that grew)
@@ -370,15 +386,15 @@ def test_resume_under_changed_bucket_modulus_reruns_everything(spark, tmp_path):
     modulus (tier writes are partition overwrites — idempotent)."""
     wh_a, wh_b = str(tmp_path / "a"), str(tmp_path / "b")
 
-    stats = run_job(job_args(warehouse=wh_a, run_id="r1", buckets=8), spark=spark)
+    stats = run_job(job_args(source, warehouse=wh_a, run_id="r1", buckets=8), spark=spark)
     assert stats["buckets_run"] == 8
 
     with pytest.raises(RuntimeError, match="injected failure"):
         run_job(
-            job_args(warehouse=wh_b, run_id="r1", buckets=4, fail_after_buckets=2),
+            job_args(source, warehouse=wh_b, run_id="r1", buckets=4, fail_after_buckets=2),
             spark=spark,
         )
-    resumed = run_job(job_args(warehouse=wh_b, run_id="r1", buckets=8), spark=spark)
+    resumed = run_job(job_args(source, warehouse=wh_b, run_id="r1", buckets=8), spark=spark)
     assert resumed["buckets_run"] == 8  # nothing skipped across the modulus change
 
     cat_a, cat_b = LocalSnapshotCatalog(wh_a), LocalSnapshotCatalog(wh_b)
@@ -391,16 +407,13 @@ def test_resume_under_changed_bucket_modulus_reruns_everything(spark, tmp_path):
 @pytest.mark.parametrize("codec_chunks", [False, True])
 @pytest.mark.parametrize("scheduler", ["per-bucket", "global"])
 def test_text_equality_violation_fails_before_commit(
-    spark, tmp_path, monkeypatch, scheduler, codec_chunks
+    spark, tmp_path, monkeypatch, source, use_scheduler, scheduler, codec_chunks
 ):
     """A gap-fill that loses a source turn must fail the job with an error
     naming the bucket, after the first data-file write and before any
     commit: no tier or codec snapshot and no rollup/codec lineage row.
     The job's default options run the check."""
-    import jobs.rollup_job as rollup_job
-    from biomed_timeseries_preprocessing_spark.sources.synth import synth_transcripts
-
-    victim = synth_transcripts(spark, 6).agg(F.min("conv_id")).first()[0]
+    victim = spark.read.parquet(source).agg(F.min("conv_id")).first()[0]
     real_gapfill = rollup_job.gapfill
 
     def lossy_gapfill(df, **kw):
@@ -409,11 +422,9 @@ def test_text_equality_violation_fails_before_commit(
         return out.filter(~((F.col("conv_id") == victim) & (F.col("turn_idx") == 0)))
 
     monkeypatch.setattr(rollup_job, "gapfill", lossy_gapfill)
+    use_scheduler(scheduler)
     wh = str(tmp_path / "wh")
-    args = job_args(
-        warehouse=wh, run_id="bad", buckets=1,
-        codec_chunks=codec_chunks, scheduler=scheduler,
-    )
+    args = job_args(source, warehouse=wh, run_id="bad", buckets=1, codec_chunks=codec_chunks)
     with pytest.raises(RuntimeError, match="invariant violated") as err:
         run_job(args, spark=spark)
     counts = re.search(r"bucket 0: in=(\d+) rows, out=(\d+) rows", str(err.value))
@@ -429,16 +440,40 @@ def test_text_equality_violation_fails_before_commit(
 
 
 @pytest.mark.parametrize("scheduler", ["per-bucket", "global"])
-def test_job_tiers_equal_inline_cascade(spark, tmp_path, scheduler):
+def test_failed_tier_write_commits_no_codec_snapshot(
+    spark, tmp_path, monkeypatch, source, use_scheduler, scheduler
+):
+    """The codec archive commits with the tiers, after every write: a tier
+    write that raises leaves no codec_chunks snapshot and no lineage row
+    for any bucket."""
+    real_write = LocalSnapshotCatalog.write_data_files
+
+    def failing_write(self, table, *a, **k):
+        if table == "rollup_1m":
+            raise OSError("injected rollup_1m write failure")
+        return real_write(self, table, *a, **k)
+
+    monkeypatch.setattr(LocalSnapshotCatalog, "write_data_files", failing_write)
+    use_scheduler(scheduler)
+    wh = str(tmp_path / "wh")
+    with pytest.raises(OSError, match="injected rollup_1m write failure"):
+        run_job(job_args(source, warehouse=wh, run_id="w", codec_chunks=True), spark=spark)
+    cat = LocalSnapshotCatalog(wh)
+    assert cat.snapshots("codec_chunks") == []
+    assert list(cat.read(spark, "lineage").toPandas()["stage"]) == ["stage_source"]
+
+
+@pytest.mark.parametrize("scheduler", ["per-bucket", "global"])
+def test_job_tiers_equal_inline_cascade(spark, tmp_path, source, use_scheduler, scheduler):
     """Every tier table the job commits equals the inline reference
     ``rollup_cascade(with_derived(gapfill(src)))`` exactly, column for
     column, under both schedulers and with the codec on (a second
     consumer of the derived frame)."""
     wh = str(tmp_path / "wh")
-    args = job_args(warehouse=wh, run_id="ref", codec_chunks=True, scheduler=scheduler)
-    run_job(args, spark=spark)
+    use_scheduler(scheduler)
+    run_job(job_args(source, warehouse=wh, run_id="ref", codec_chunks=True), spark=spark)
     cat = LocalSnapshotCatalog(wh)
-    ref = reference_tiers(spark, 6)
+    ref = reference_tiers(spark, source)
     for tier in TIER_ORDER:
         assert cat.read(spark, f"rollup_{tier}").columns == ref[tier].columns
         pd.testing.assert_frame_equal(
@@ -447,16 +482,18 @@ def test_job_tiers_equal_inline_cascade(spark, tmp_path, scheduler):
 
 
 @pytest.mark.parametrize("scheduler", ["per-bucket", "global"])
-def test_empty_bucket_commits_a_schema_only_file_per_tier(spark, tmp_path, scheduler):
+def test_empty_bucket_commits_a_schema_only_file_per_tier(
+    spark, tmp_path, synth_lake, use_scheduler, scheduler
+):
     """One conversation over four buckets leaves three buckets without
     rows. Each of them still commits one file to every tier table, with no
     rows and all of the tier's columns, so every tier table stays readable
     with its columns whichever buckets hold rows."""
     wh = str(tmp_path / "wh")
-    args = job_args(warehouse=wh, run_id="e", synth_convs=1, buckets=4, scheduler=scheduler)
-    run_job(args, spark=spark)
+    use_scheduler(scheduler)
+    run_job(job_args(synth_lake(1), warehouse=wh, run_id="e", buckets=4), spark=spark)
     cat = LocalSnapshotCatalog(wh)
-    ref = reference_tiers(spark, 1)
+    ref = reference_tiers(spark, synth_lake(1))
     for tier in TIER_ORDER:
         paths: dict[int, list[str]] = {}
         for f in cat.snapshots(f"rollup_{tier}")[-1]["files"]:
@@ -467,7 +504,9 @@ def test_empty_bucket_commits_a_schema_only_file_per_tier(spark, tmp_path, sched
         assert sorted(p.count() for p in parts) == [0, 0, 0, ref[tier].count()], tier
 
 
-def test_tier_frame_plans_one_exchange_and_no_read_back(spark, tmp_path, monkeypatch):
+def test_tier_frame_plans_one_exchange_and_no_read_back(
+    spark, tmp_path, monkeypatch, source, use_scheduler
+):
     """Per bucket, all four tiers are ONE data-file write, and the frame
     it writes plans exactly one Exchange, the gap-fill's conv_id shuffle,
     and scans no file but the staged source: no tier brings back its own
@@ -482,7 +521,8 @@ def test_tier_frame_plans_one_exchange_and_no_read_back(spark, tmp_path, monkeyp
     monkeypatch.setattr(LocalSnapshotCatalog, "write_data_files", spy)
     wh = str(tmp_path / "wh")
     # 6 conversations over 3 buckets: every bucket holds rows
-    run_job(job_args(warehouse=wh, run_id="shape", buckets=3, scheduler="per-bucket"), spark=spark)
+    use_scheduler("per-bucket")
+    run_job(job_args(source, warehouse=wh, run_id="shape", buckets=3), spark=spark)
     assert [t for t, _ in writes] == ["rollup_1m"] * 3
     for _, df in writes:
         plan = df._jdf.queryExecution().executedPlan().toString()

@@ -52,9 +52,6 @@ def test_resolve_scheduler_auto_follows_deployment_shape():
     assert resolve_scheduler("spark://host:7077") == "global"
     assert resolve_scheduler("k8s://https://host:443") == "global"
     assert resolve_scheduler("local-cluster[2,2,1024]") == "global"
-    # explicit choice always wins over the heuristic
-    assert resolve_scheduler("yarn", "per-bucket") == "per-bucket"
-    assert resolve_scheduler("local[8]", "global") == "global"
 
 
 def test_parse_local_cores_cluster_masters_are_unpinned():
