@@ -185,10 +185,12 @@ def stft_per_bin_stats(
     )
     src = series.select(*cols)
     if length_col is not None:
-        # the sparse feed is tiny (AQE coalesces it to ~1 partition) but
-        # each group DENSIFIES to frame-matrix work inside the kernel —
-        # spread groups across spark.sql.shuffle.partitions so the
-        # Python stage runs wide (the dense path already arrives wide)
+        # the sparse feed is tiny but each group DENSIFIES to
+        # frame-matrix work inside the kernel. Under AQE this exchange
+        # starts at initialPartitionNum (16 per core) and is coalesced
+        # by size like the groupBy's own exchange, so it does not widen
+        # a tiny feed: at local[4] a 100k-row feed ran as 1 Python task
+        # with it and 2 without, a 1M-row feed as 12 and 16
         src = src.repartition("conv_id")
     partials = src.groupBy("conv_id").applyInPandas(
         kernel, "freq_bin int, n long, s1 double, s2 double"

@@ -14,8 +14,6 @@ import os
 from pyspark import SparkConf, SparkContext
 from pyspark.sql import SparkSession
 
-DEFAULT_SHUFFLE_PARTITIONS = 32
-
 
 def parse_local_cores(master: str) -> int | None:
     """Core count of a ``local[n]``/``local[*]`` master, else None.
@@ -35,7 +33,6 @@ def parse_local_cores(master: str) -> int | None:
 def get_spark(
     app_name: str = "transcript-rollup-engine",
     master: str | None = None,
-    shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
     """Build (or reuse) the engine SparkSession.
@@ -55,27 +52,27 @@ def get_spark(
         master = f"local[{os.environ.get('SPARK_GRAFT_CPUS', '32')}]"
     local_n = parse_local_cores(master)
     n_cores = local_n if local_n is not None else 32
-    if shuffle_partitions is None:
-        # 4 shuffle partitions per core (not 1): with zipf-skewed
-        # conversations, wall time follows the LARGEST partition, and at
-        # partitions == cores the tail task dominates — measured 32.9 s →
-        # 18.6 s (1.8×) on the 4-tier pipeline at 13.7M turns just by
-        # moving 32 → 128 partitions at 32 cores. Finer partitions let
-        # the scheduler level the skew and AQE re-coalesce the small
-        # ones. Same rule a real cluster uses (2-4× total cores).
-        shuffle_partitions = 4 * n_cores
-
     builder = (
         SparkSession.builder.master(master)
         .appName(app_name)
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
+        # One partition per core. Batch exchanges start at AQE's
+        # initialPartitionNum below and never read this value; stateful
+        # streams do (no AQE there): it is their state-partition count,
+        # frozen in the checkpoint (a restarted query keeps its own).
+        # Each state partition costs one Python task and one state-store
+        # commit per micro-batch whatever its row count, so one per core
+        # makes a micro-batch one wave. Against 4 per core at local[4]
+        # (medians of 10 interleaved pairs) the gap-fill stream took
+        # 3.2 vs 5.6 s at 1,000-row micro-batches (rollbench
+        # codec_archive) and 36.4 vs 43.0 s at ~100k zipf-skewed turns
+        # per micro-batch (BENCH/streaming_state_partitions.json).
+        .config("spark.sql.shuffle.partitions", str(n_cores))
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         # AQE-first sizing (r3 verdict #5): start shuffles fine-grained
         # (16 per core) and let AQE coalesce to the advisory size —
         # initialPartitionNum scales with the session's core count, so
-        # ONE config serves the sandbox and a 1000-executor cluster;
-        # shuffle.partitions above remains only the non-AQE fallback.
+        # ONE config serves the sandbox and a 1000-executor cluster.
         .config(
             "spark.sql.adaptive.coalescePartitions.initialPartitionNum",
             str(16 * n_cores),

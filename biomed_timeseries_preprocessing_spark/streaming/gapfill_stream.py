@@ -34,6 +34,14 @@ conversations ever seen. An expired conversation that later resumes is
 treated as a fresh head (no fill across the expiry) — the same
 no-head-extrapolation rule the batch operator applies at its own data
 boundary.
+
+State partitions: the state is split into ``spark.sql.shuffle.partitions``
+partitions, which ``get_spark`` sets to one per core, and the count is
+frozen in the checkpoint at the query's first batch (a restart keeps the
+checkpoint's count). Each partition runs one Python task and one
+state-store commit per micro-batch, a fixed cost whatever its row count,
+so one per core makes each micro-batch a single wave of tasks
+(BENCH/streaming_state_partitions.json).
 """
 
 from __future__ import annotations

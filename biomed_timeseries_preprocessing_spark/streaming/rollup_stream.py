@@ -20,7 +20,9 @@ The aggregates and the row projection are the batch 1m tier's own
 bit-identical to the batch bucket (tested by replaying a batch table
 through the stream). Only the grouping differs: append mode with a
 watermark needs an event-time window, so buckets come from
-``F.window``.
+``F.window``. The aggregate state is split into one partition per core
+and the count is frozen in the checkpoint, as for the stateful gap-fill
+(see ``gapfill_stream``).
 """
 
 from __future__ import annotations

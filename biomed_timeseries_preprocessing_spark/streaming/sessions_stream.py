@@ -12,6 +12,9 @@ Streaming API exposes to Python.
 State schema: (session_start long µs, last_ts long µs, n_turns long).
 Output: one row per CLOSED session (open sessions flush on timeout or
 end-of-stream via the batch driver below).
+
+State partitions: one per core, frozen in the checkpoint, as for the
+stateful gap-fill (see ``gapfill_stream``).
 """
 
 from __future__ import annotations

@@ -15,13 +15,15 @@ is scanned ONCE: a staging write materializes it bucket-partitioned
 (``_staging/<run-id>/bucket=N/``), so every subsequent per-bucket read
 prunes to its own partition directory instead of re-scanning the input
 (the Iceberg analog is writing the ingest table with a
-``bucket(conv_id, N)`` partition transform). Per bucket: gap-fill of
-missing turns → derive → every data file written (the codec archive,
-then all four tiers (1m, 5m, 1h, 1d) by ONE Spark job, each tier's rows
-in its own directory) → ONE check of the per-turn text-equality
-invariant (the job fails before any commit of a bucket that violates
-it) → dynamic-partition-overwrite commit of each table + ONE batched
-lineage commit carrying all of the bucket's stage rows.
+``bucket(conv_id, N)`` partition transform). The staged copy is deleted
+once every bucket has committed; a killed run keeps it for its resume.
+Per bucket: gap-fill of missing turns → derive → every data file
+written (the codec archive, then all four tiers (1m, 5m, 1h, 1d) by ONE
+Spark job, each tier's rows in its own directory) → ONE check of the
+per-turn text-equality invariant (the job fails before any commit of a
+bucket that violates it) → dynamic-partition-overwrite commit of each
+table + ONE batched lineage commit carrying all of the bucket's stage
+rows.
 ``rollup_merge(tier_1m, TIER_ORDER)`` merges the 1m aggregate into every
 tier inside the plan; the gap-fill's conv_id exchange already groups
 every tier, so no tier adds a shuffle, and no tier is read back from the
@@ -53,6 +55,7 @@ from __future__ import annotations
 
 import argparse
 import os
+import shutil
 import sys
 import threading
 import time
@@ -172,12 +175,24 @@ def run(args, spark=None) -> dict:
     catalog = get_catalog(args.warehouse)
     log = LineageLog(catalog)
 
-    raw = spark.read.parquet(args.source)
     bcol = bucket_of(F.col("conv_id"), args.buckets)
+    all_buckets = list(range(args.buckets))
+
+    def bkey(b: int) -> str:
+        # modulus-scoped lineage key: bucket 3-of-8 and 3-of-4 hold
+        # different conversations (see pending_buckets docstring)
+        return f"{b}/{args.buckets}"
+
+    # a bucket counts as done when its deepest tier committed
+    todo = pending_buckets(
+        log, args.run_id, f"rollup_{TIER_ORDER[-1]}", all_buckets, args.buckets
+    )
 
     # ------------------------------------------------ stage source ONCE
     # bucket-partitioned staging write: the only full scan of the input.
-    # Every per-bucket read below prunes to one partition directory.
+    # Every per-bucket read below prunes to one partition directory. It
+    # lives until every bucket has committed (a killed run keeps it for
+    # its resume); a run with nothing pending stages nothing.
     staging = os.path.join(args.warehouse, "_staging", args.run_id)
     # the stage marker encodes the bucket modulus: re-running the same
     # --run-id with a different --buckets must re-stage (staging written
@@ -186,11 +201,11 @@ def run(args, spark=None) -> dict:
     stage_key = f"all/{args.buckets}"
     staged_keys = log.committed(args.run_id, "stage_source")
     stage_done = stage_key in staged_keys and os.path.isdir(staging)
-    if not stage_done:
+    if todo and not stage_done:
         t0 = time.time()
-        raw.withColumn("bucket", bcol).write.mode("overwrite").partitionBy(
-            "bucket"
-        ).parquet(staging)
+        spark.read.parquet(args.source).withColumn("bucket", bcol).write.mode(
+            "overwrite"
+        ).partitionBy("bucket").parquet(staging)
         n_staged = spark.read.parquet(staging).count()  # footer metadata only
         staged_row = LineageRow(
             run_id=args.run_id,
@@ -204,19 +219,9 @@ def run(args, spark=None) -> dict:
             wall_ms=int((time.time() - t0) * 1000),
         )
         log.commit_many(args.run_id, [staged_row])
-    staged = spark.read.parquet(staging)
+    if todo:
+        staged = spark.read.parquet(staging)
 
-    all_buckets = list(range(args.buckets))
-
-    def bkey(b: int) -> str:
-        # modulus-scoped lineage key: bucket 3-of-8 and 3-of-4 hold
-        # different conversations (see pending_buckets docstring)
-        return f"{b}/{args.buckets}"
-
-    # a bucket counts as done when its deepest tier committed
-    todo = pending_buckets(
-        log, args.run_id, f"rollup_{TIER_ORDER[-1]}", all_buckets, args.buckets
-    )
     stats = {
         "master": spark.sparkContext.master,
         "buckets_total": len(all_buckets),
@@ -496,6 +501,8 @@ def run(args, spark=None) -> dict:
 
             with ThreadPoolExecutor(max_workers=workers) as pool:
                 list(pool.map(_run_bucket, range(len(todo)), todo))
+    # every bucket has committed: the staged copy of the source is spent
+    shutil.rmtree(staging, ignore_errors=True)
     if own_spark:
         spark.stop()
     return stats

@@ -10,7 +10,7 @@ from biomed_timeseries_preprocessing_spark.session import get_spark  # noqa: E40
 
 @pytest.fixture(scope="session")
 def spark():
-    s = get_spark(app_name="tests", master="local[4]", shuffle_partitions=4)
+    s = get_spark(app_name="tests", master="local[4]")
     yield s
 
 

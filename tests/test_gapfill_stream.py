@@ -10,38 +10,105 @@ import pandas as pd
 from pyspark.sql import functions as F
 
 from biomed_timeseries_preprocessing_spark.operators.gapfill import gapfill
+from biomed_timeseries_preprocessing_spark.session import engine_cores
 from biomed_timeseries_preprocessing_spark.streaming.gapfill_stream import (
     run_gapfill_to_memory,
+    streaming_gapfill,
 )
+
+TURNS_SCHEMA = "conv_id string, turn_idx int, role string, text string, tool string, ts timestamp"
+
+
+def append_file(df, path):
+    """Append ``df`` to ``path`` as one file the stream picks up as one
+    micro-batch after the files already there."""
+    df.coalesce(1).write.mode("append").parquet(path)
+    time.sleep(1.2)  # distinct mtimes → deterministic file pickup order
+
+
+def split_halves(turns):
+    """Every conversation split across two micro-batches, so gaps
+    spanning the split are bounded only by a later batch's first turn."""
+    return turns.filter(F.col("turn_idx") < 10), turns.filter(F.col("turn_idx") >= 10)
+
+
+def by_turn(df):
+    return (
+        df.toPandas()
+        .sort_values(["conv_id", "turn_idx"], kind="mergesort")
+        .reset_index(drop=True)
+    )
+
+
+def assert_equals_batch_gapfill(got, turns):
+    want = by_turn(gapfill(turns))
+    got = by_turn(got)
+    pd.testing.assert_frame_equal(
+        got[want.columns], want, check_dtype=False, check_exact=True
+    )
+    assert got["is_gap_filled"].sum() > 0  # the stream really filled gaps
+
+
+def drain_to_parquet(session, turns_path, out, ckpt) -> list[int]:
+    """Run the stateful gap-fill over every new file of ``turns_path``
+    into the parquet sink ``out``, checkpointed at ``ckpt``; returns the
+    state-partition count of each micro-batch that read rows."""
+    src = session.readStream.schema(TURNS_SCHEMA).option("maxFilesPerTrigger", 1).parquet(
+        turns_path
+    )
+    q = (
+        streaming_gapfill(src)
+        .writeStream.outputMode("append")
+        .format("parquet")
+        .option("path", out)
+        .option("checkpointLocation", ckpt)
+        .start()
+    )
+    q.processAllAvailable()
+    q.stop()
+    return [
+        p["stateOperators"][0]["numShufflePartitions"]
+        for p in q.recentProgress
+        if p["numInputRows"] > 0
+    ]
 
 
 def test_stream_replay_equals_batch_gapfill(spark, tmp_path, small_transcripts):
     path = str(tmp_path / "turns")
     os.makedirs(path)
-    # split every conversation across two micro-batches so gaps spanning
-    # the split are bounded only by a later batch's first turn
-    lo = small_transcripts.filter(F.col("turn_idx") < 10)
-    hi = small_transcripts.filter(F.col("turn_idx") >= 10)
-    lo.coalesce(1).write.mode("append").parquet(path)
-    time.sleep(1.2)  # distinct mtimes → deterministic file pickup order
-    hi.coalesce(1).write.mode("append").parquet(path)
+    for half in split_halves(small_transcripts):
+        append_file(half, path)
+    assert_equals_batch_gapfill(run_gapfill_to_memory(spark, path, "t_gapfill"), small_transcripts)
 
-    got = (
-        run_gapfill_to_memory(spark, path, "t_gapfill")
-        .toPandas()
-        .sort_values(["conv_id", "turn_idx"], kind="mergesort")
-        .reset_index(drop=True)
-    )
-    want = (
-        gapfill(small_transcripts)
-        .toPandas()
-        .sort_values(["conv_id", "turn_idx"], kind="mergesort")
-        .reset_index(drop=True)
-    )
-    pd.testing.assert_frame_equal(
-        got[want.columns], want, check_dtype=False, check_exact=True
-    )
-    assert got["is_gap_filled"].sum() > 0  # the stream really filled gaps
+
+def test_stream_runs_one_state_partition_per_core(spark, tmp_path, small_transcripts):
+    """A new stateful stream takes the session's partition count, one
+    per core, so each micro-batch is one wave of state tasks."""
+    path, out = str(tmp_path / "turns"), str(tmp_path / "out")
+    os.makedirs(path)
+    for half in split_halves(small_transcripts):
+        append_file(half, path)
+    parts = drain_to_parquet(spark, path, out, str(tmp_path / "ckpt"))
+    assert parts == [engine_cores(spark)] * 2
+    assert_equals_batch_gapfill(spark.read.parquet(out), small_transcripts)
+
+
+def test_checkpoint_keeps_its_state_partition_count(spark, tmp_path, small_transcripts):
+    """A checkpoint written under the old 4-per-core default (16 at
+    local[4]) restarts on the default session with its own 16 state
+    partitions, and the state it carries fills the gaps that span the
+    restart."""
+    path, out, ckpt = str(tmp_path / "turns"), str(tmp_path / "out"), str(tmp_path / "ckpt")
+    os.makedirs(path)
+    lo, hi = split_halves(small_transcripts)
+    old = spark.newSession()
+    old.conf.set("spark.sql.shuffle.partitions", "16")
+    append_file(lo, path)
+    assert drain_to_parquet(old, path, out, ckpt) == [16]
+    append_file(hi, path)
+    assert engine_cores(spark) != 16
+    assert drain_to_parquet(spark, path, out, ckpt) == [16]
+    assert_equals_batch_gapfill(spark.read.parquet(out), small_transcripts)
 
 
 def test_stream_state_ttl_expires_idle_conversations(spark, tmp_path):
@@ -51,7 +118,6 @@ def test_stream_state_ttl_expires_idle_conversations(spark, tmp_path):
     keeps filling normally."""
     path = str(tmp_path / "ttlturns")
     os.makedirs(path)
-    schema = "conv_id string, turn_idx int, role string, text string, tool string, ts timestamp"
     t0 = pd.Timestamp("2026-01-01 00:00:00")
 
     def write_batch(rows):
@@ -59,8 +125,7 @@ def test_stream_state_ttl_expires_idle_conversations(spark, tmp_path):
             (*r[:-1], r[-1].to_pydatetime())  # Spark rejects pd.Timestamp objects
             for r in rows
         ]
-        spark.createDataFrame(rows, schema).coalesce(1).write.mode("append").parquet(path)
-        time.sleep(1.2)  # distinct mtimes → deterministic batch order
+        append_file(spark.createDataFrame(rows, TURNS_SCHEMA), path)
 
     h = pd.Timedelta(hours=1)
     # batch 1: conv A head (state created, timeout set at ts+TTL)

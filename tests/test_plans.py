@@ -138,6 +138,9 @@ def test_session_multiwave_coalesce_config(spark):
         spark.conf.get("spark.sql.adaptive.coalescePartitions.initialPartitionNum")
         == str(16 * threads)
     )
+    # batch exchanges start at initialPartitionNum; shuffle.partitions is
+    # the state-partition count of stateful streams: one per core
+    assert spark.conf.get("spark.sql.shuffle.partitions") == str(threads)
     assert (
         spark.conf.get(
             "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning"

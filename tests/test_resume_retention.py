@@ -3,6 +3,7 @@ resume-after-kill == uninterrupted run; FIXTURES F5)."""
 
 import argparse
 import datetime as dt
+import os
 import re
 
 import pandas as pd
@@ -82,10 +83,13 @@ def test_kill_and_resume_equals_uninterrupted(spark, tmp_path, source):
     assert stats["buckets_run"] == 4
 
     # killed after 2 buckets, then resumed
+    staging = os.path.join(wh_b, "_staging", "r1")
     with pytest.raises(RuntimeError, match="injected failure"):
         run_job(job_args(source, warehouse=wh_b, run_id="r1", fail_after_buckets=2), spark=spark)
+    assert os.path.isdir(staging)  # the resume reads it
     resumed = run_job(job_args(source, warehouse=wh_b, run_id="r1"), spark=spark)
     assert resumed["buckets_run"] == 2  # only the pending buckets ran
+    assert not os.path.exists(staging)  # every bucket committed: spent
 
     cat_a, cat_b = LocalSnapshotCatalog(wh_a), LocalSnapshotCatalog(wh_b)
     for tier in ("1m", "5m", "1h", "1d"):
@@ -261,14 +265,26 @@ def test_job_with_gapfill_and_codec(spark, tmp_path, source):
     assert sums["c"] < sums["r"]
 
 
+def test_resubmitted_completed_run_stages_nothing(spark, tmp_path, source):
+    """Re-submitting a run id whose buckets have all committed runs no
+    bucket and writes no staged copy of the source."""
+    wh = str(tmp_path / "wh")
+    assert run_job(job_args(source, warehouse=wh, run_id="done"), spark=spark)["buckets_run"] == 4
+    stats = run_job(job_args(source, warehouse=wh, run_id="done"), spark=spark)
+    assert stats["buckets_run"] == 0
+    assert not os.path.exists(os.path.join(wh, "_staging", "done"))
+    lin = LocalSnapshotCatalog(wh).read(spark, "lineage").toPandas()
+    assert len(lin[lin.stage == "stage_source"]) == 1  # staged by the first run only
+
+
 def test_staging_prunes_per_bucket_scan(spark, tmp_path, source):
     """The source is scanned once into a bucket-partitioned staging dir;
     each per-bucket read must hit a PartitionFilter (directory pruning),
     not a full re-scan — the scan-multiplication fix."""
-    import os
-
     wh = str(tmp_path / "wh")
-    run_job(job_args(source, warehouse=wh, run_id="r2"), spark=spark)
+    # killed after one bucket: a finished run deletes its staging
+    with pytest.raises(RuntimeError, match="injected failure"):
+        run_job(job_args(source, warehouse=wh, run_id="r2", fail_after_buckets=1), spark=spark)
     staging = os.path.join(wh, "_staging", "r2")
     parts = {d for d in os.listdir(staging) if d.startswith("bucket=")}
     assert parts and parts <= {f"bucket={b}" for b in range(4)}
