@@ -1,19 +1,54 @@
-"""Time-series codecs: delta-of-delta timestamps + Gorilla XOR floats.
+"""Time-series codecs: delta-of-delta integers + Gorilla XOR floats.
 
 Public-knowledge basis: the Facebook Gorilla paper (Pelkonen et al.,
 VLDB 2015) — delta-of-delta prefix codes for timestamps and XOR
-compression for IEEE-754 doubles. The reference repo compresses nothing
-(it ships raw float64 npz/hdf5/zarr blobs, ``Save_Agent.py:369-493``);
-these codecs are the capability the north_rule adds on top.
+compression for IEEE-754 doubles — with the two predictors that Camel
+(SIGMOD 2024) and TerseTS (EDBT 2026) get their ratios from: integer
+values coded at their quantum, and a prediction XORed out in place of
+the previous value. The reference repo compresses nothing (it ships raw
+float64 npz/hdf5/zarr blobs, ``Save_Agent.py:369-493``); these codecs
+are the capability the north_rule adds on top.
+
+Blob layout. One blob per stream and (conv_id, chunk) block; every
+integer is big-endian. The first word is ``tag << 56 | n``: the tag
+names the layout and n is the block's point count.
+
+- ``dod`` (tag 0xD0): ``[word][v0:int64][d0:int64][codes]``; a block of
+  n <= 2 omits the absent fields and has no codes. From the third point
+  on, each point's zigzag(delta-of-delta) is one ``_DOD_BUCKETS`` code.
+- ``dod`` on ms (tag 0xD3): the same layout over ``w = v // 1000``, and
+  after the codes an exception list of the points whose ``v % 1000`` is
+  not 0: their count (a ``_DOD_BUCKETS`` code), then per exception its
+  position in the block (``bit_length(n - 1)`` bits) and its remainder
+  (10 bits). ``encode_dod`` codes a block both ways and keeps the
+  shorter blob (the plain one on a tie): a µs timestamp on a whole
+  millisecond costs ~7 bits less, token counts keep the plain layout.
+- ``xor`` (tag 0xA0): ``[word][u0:uint64][codes]``; per point after the
+  first, '0' when its bit pattern equals the previous one, else '11' +
+  6 bits of leading zeros + 6 bits of (length - 1) + the meaningful
+  bits of the XOR.
+
+The latency stream is the ``xor`` blob of ``xor_ts_prediction(latency,
+ts)``: each latency's bit pattern XOR that of ``(ts_i - ts_{i-1}) //
+1000`` in the block's (ts, turn_idx) order, which is the value
+``with_derived`` gave it wherever ts rises with turn_idx; the block head
+has no prediction and stays raw. A matching prediction leaves a 0, and a
+run of them costs Gorilla's 1-bit '0' code per point. XOR with any
+prediction is a bijection, so every float64 still round-trips bit for
+bit (NaN payloads, ±inf, -0.0, latencies that disagree with ts); a wrong
+prediction costs bits, never exactness. Decoding latency needs the
+decoded ts of the same block. A blob whose first byte is not one of the
+tags (the untagged layout that came before) raises ``ValueError``
+instead of being misread.
 
 Design for Spark:
-- **Encode** runs per (conv_id, chunk) group inside ``applyInPandas`` —
+- **Encode** runs per (conv_id, chunk) group inside ``mapInPandas`` —
   fully **vectorized numpy bit-packing** (bucket-at-a-time scatter into a
   bit array; no per-element Python loop), per input_hint's "no per-row
   Python" mandate. Output is one row per chunk with ``binary`` blobs.
-- **Decode** is inherently sequential (prefix codes); it is used on the
-  verification/read path (round-trip property tests, FIXTURES F7), and is
-  implemented as a plain numpy-assisted loop.
+- **Decode** is inherently sequential (prefix codes). The per-block
+  decoders here are the reference for the batch decoders in
+  ``codec_batch`` (round-trip property tests, FIXTURES F7).
 - Exactness: round-trip is bit-exact — timestamps as int64 µs, floats by
   reinterpreting the IEEE-754 bit pattern (NaN patterns preserved).
 
@@ -56,6 +91,15 @@ def _pack_bits(codes: np.ndarray, lengths: np.ndarray) -> bytes:
     return np.packbits(stream).tobytes()
 
 
+def _slots(*pairs: tuple[np.ndarray, np.ndarray]) -> tuple[np.ndarray, np.ndarray]:
+    """Interleave per-element (codes, bits) slots into packing order:
+    element 0's slots, then element 1's, and so on."""
+    return (
+        np.column_stack([np.asarray(c, dtype=np.uint64) for c, _ in pairs]).ravel(),
+        np.column_stack([np.asarray(b, dtype=np.int64) for _, b in pairs]).ravel(),
+    )
+
+
 class _BitReader:
     def __init__(self, buf: bytes):
         self.bits = np.unpackbits(np.frombuffer(buf, dtype=np.uint8))
@@ -83,81 +127,126 @@ def _wrap64(v: int) -> int:
     return (v + (1 << 63)) % (1 << 64) - (1 << 63)
 
 
+# ------------------------------------------------------------ blob header
+
+_N_MASK = (1 << 56) - 1
+_TAG_DOD, _TAG_DOD_MS, _TAG_XOR = 0xD0, 0xD3, 0xA0
+_MS = 1000  # quantum of the ms layout, in µs
+_REM_BITS = 10  # an exception's remainder, 1..999
+
+
+def _header(tag: int, n: int) -> bytes:
+    return struct.pack(">Q", (tag << 56) | n)
+
+
+def _layout_error(tag: int, tags: tuple[int, ...]) -> ValueError:
+    return ValueError(
+        f"codec blob has layout tag {tag:#04x}, not one of "
+        f"{', '.join(f'{t:#04x}' for t in tags)}: a blob of an older layout "
+        "must be re-encoded from its source"
+    )
+
+
+def _read_header(buf: bytes, tags: tuple[int, ...]) -> tuple[int, int]:
+    """(tag, n) of a blob; raises on a tag outside ``tags``."""
+    word = struct.unpack(">Q", buf[:8])[0]
+    if word >> 56 not in tags:
+        raise _layout_error(word >> 56, tags)
+    return word >> 56, word & _N_MASK
+
+
 # ------------------------------------------------- delta-of-delta (int64)
 
-# Gorilla timestamp buckets (zigzagged dod value -> prefix code)
-_DOD_BUCKETS = (  # (max zigzag value exclusive, prefix, prefix_len, payload_bits)
-    (1, 0b0, 1, 0),          # dod == 0            -> '0'
-    (1 << 7, 0b10, 2, 7),    # |dod| small         -> '10'  + 7
+# Gorilla timestamp buckets (unsigned value -> prefix code)
+_DOD_BUCKETS = (  # (max value exclusive, prefix, prefix_len, payload_bits)
+    (1, 0b0, 1, 0),          # 0                   -> '0'
+    (1 << 7, 0b10, 2, 7),    # small               -> '10'  + 7
     (1 << 9, 0b110, 3, 9),   # -> '110' + 9
     (1 << 12, 0b1110, 4, 12),  # -> '1110'+ 12
     (1 << 32, 0b11110, 5, 32),  # -> '11110' + 32
-    (1 << 63, 0b11111, 5, 64),  # -> '11111' + 64 (full zigzag)
+    (1 << 63, 0b11111, 5, 64),  # -> '11111' + 64 (the full value)
 )
+_BUCKET_UPPER = np.array([b[0] for b in _DOD_BUCKETS[:-1]], dtype=np.uint64)
+_PREFIX = np.array([b[1] for b in _DOD_BUCKETS], dtype=np.uint64)
+_PREFIX_BITS = np.array([b[2] for b in _DOD_BUCKETS], dtype=np.int64)
+_PAYLOAD_BITS = np.array([b[3] for b in _DOD_BUCKETS], dtype=np.int64)
+_PAYLOAD_MASK = np.array([(1 << b[3]) - 1 for b in _DOD_BUCKETS], dtype=np.uint64)
+
+
+def _bucket_codes(u: np.ndarray) -> tuple[np.ndarray, ...]:
+    """``_DOD_BUCKETS`` code of each uint64: (prefix code, prefix bits,
+    payload code, payload bits) — two slots, so no slot exceeds 64 bits."""
+    u = np.asarray(u, dtype=np.uint64)
+    k = np.searchsorted(_BUCKET_UPPER, u, side="right")  # bucket index
+    return _PREFIX[k], _PREFIX_BITS[k], u & _PAYLOAD_MASK[k], _PAYLOAD_BITS[k]
+
+
+def _bucket_slots(u: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+    hc, hb, pc, pb = _bucket_codes(u)
+    return _slots((hc, hb), (pc, pb))
+
+
+def _read_bucket(r: _BitReader) -> int:
+    """One ``_DOD_BUCKETS`` code: its leading ones (at most 5) pick the
+    bucket, whose payload follows."""
+    ones = 0
+    while ones < 5 and r.read(1):
+        ones += 1
+    return r.read(int(_PAYLOAD_BITS[ones]))
+
+
+def _dod_blob(tag: int, w: np.ndarray, tail: list[tuple[np.ndarray, np.ndarray]]) -> bytes:
+    """Header, first value, first delta and the prefix-coded zigzag
+    delta-of-deltas of ``w``, then the (codes, bits) slots of ``tail``."""
+    n = len(w)
+    out = _header(tag, n)
+    deltas = np.diff(w)  # wraps like the decoder's _wrap64
+    if n >= 1:
+        out += struct.pack(">q", int(w[0]))
+    if n >= 2:
+        out += struct.pack(">q", int(deltas[0]))
+    slots = [_bucket_slots(_zigzag(deltas[1:] - deltas[:-1]))] + tail
+    return out + _pack_bits(
+        np.concatenate([c for c, _ in slots]), np.concatenate([b for _, b in slots])
+    )
 
 
 def encode_dod(values: np.ndarray) -> bytes:
-    """Delta-of-delta encode an int64 array. Header: count + first value +
-    first delta (raw 64-bit); body: prefix-coded zigzag(dod)."""
+    """Delta-of-delta encode an int64 block: the plain layout, or the ms
+    layout with its exception list when that blob is shorter (module
+    docstring)."""
     v = np.asarray(values, dtype=np.int64)
     n = len(v)
-    head = struct.pack(">q", n)
-    if n == 0:
-        return head
-    head += struct.pack(">q", int(v[0]))
-    if n == 1:
-        return head
-    deltas = np.diff(v)
-    head += struct.pack(">q", int(deltas[0]))
-    if n == 2:
-        return head
-    dod = (deltas[1:] - deltas[:-1]).astype(np.int64)
-    zz = _zigzag(dod)
-    # two slots per element (header, payload) so a 5+64-bit code never
-    # overflows a single uint64; zero-length slots pack to nothing.
-    m = len(zz)
-    codes = np.zeros((m, 2), dtype=np.uint64)
-    lengths = np.zeros((m, 2), dtype=np.int64)
-    assigned = np.zeros(m, dtype=bool)
-    for upper, prefix, plen, pbits in _DOD_BUCKETS:
-        sel = ((~assigned) & (zz < np.uint64(upper))) if pbits < 64 else ~assigned
-        codes[sel, 0] = np.uint64(prefix)
-        lengths[sel, 0] = plen
-        if pbits:
-            mask = (np.uint64(1) << np.uint64(min(pbits, 63))) - np.uint64(1) if pbits < 64 else np.uint64(0xFFFFFFFFFFFFFFFF)
-            codes[sel, 1] = zz[sel] & mask
-            lengths[sel, 1] = pbits
-        assigned |= sel
-    return head + _pack_bits(codes.ravel(), lengths.ravel())
+    plain = _dod_blob(_TAG_DOD, v, [])
+    w, rem = np.divmod(v, _MS)
+    at = np.flatnonzero(rem)
+    width = max(n - 1, 0).bit_length()
+    exceptions = [
+        _bucket_slots(np.array([len(at)])),
+        _slots((at, np.full(len(at), width)), (rem[at], np.full(len(at), _REM_BITS))),
+    ]
+    ms = _dod_blob(_TAG_DOD_MS, w, exceptions)
+    return ms if len(ms) < len(plain) else plain
 
 
 def decode_dod(buf: bytes) -> np.ndarray:
-    n = struct.unpack(">q", buf[:8])[0]
+    tag, n = _read_header(buf, (_TAG_DOD, _TAG_DOD_MS))
     out = np.empty(n, dtype=np.int64)
-    if n == 0:
-        return out
-    out[0] = struct.unpack(">q", buf[8:16])[0]
-    if n == 1:
-        return out
-    delta = struct.unpack(">q", buf[16:24])[0]
-    out[1] = _wrap64(int(out[0]) + delta)
-    r = _BitReader(buf[24:])
+    if n >= 1:
+        out[0] = struct.unpack(">q", buf[8:16])[0]
+    if n >= 2:
+        delta = struct.unpack(">q", buf[16:24])[0]
+        out[1] = _wrap64(int(out[0]) + delta)
+    r = _BitReader(buf[8 + 8 * min(n, 2) :])
     for i in range(2, n):
-        if r.read(1) == 0:
-            dod = 0
-        else:
-            if r.read(1) == 0:
-                dod = _unzigzag(r.read(7))
-            elif r.read(1) == 0:
-                dod = _unzigzag(r.read(9))
-            elif r.read(1) == 0:
-                dod = _unzigzag(r.read(12))
-            elif r.read(1) == 0:
-                dod = _unzigzag(r.read(32))
-            else:
-                dod = _unzigzag(r.read(64))
-        delta = _wrap64(delta + dod)
+        delta = _wrap64(delta + _unzigzag(_read_bucket(r)))
         out[i] = _wrap64(int(out[i - 1]) + delta)
+    if tag == _TAG_DOD_MS:
+        out = np.array([_wrap64(int(x) * _MS) for x in out], dtype=np.int64)
+        width = max(n - 1, 0).bit_length()
+        for _ in range(_read_bucket(r)):
+            at = r.read(width)
+            out[at] = _wrap64(int(out[at]) + r.read(_REM_BITS))
     return out
 
 
@@ -170,7 +259,7 @@ def encode_xor(values: np.ndarray) -> bytes:
     f = np.asarray(values, dtype=np.float64)
     u = f.view(np.uint64)
     n = len(u)
-    head = struct.pack(">q", n)
+    head = _header(_TAG_XOR, n)
     if n == 0:
         return head
     head += struct.pack(">Q", int(u[0]))
@@ -221,7 +310,7 @@ def encode_xor(values: np.ndarray) -> bytes:
 
 
 def decode_xor(buf: bytes) -> np.ndarray:
-    n = struct.unpack(">q", buf[:8])[0]
+    _, n = _read_header(buf, (_TAG_XOR,))
     out = np.empty(n, dtype=np.uint64)
     if n == 0:
         return out.view(np.float64)
@@ -238,6 +327,22 @@ def decode_xor(buf: bytes) -> np.ndarray:
             tz = 64 - lz - nb
             out[i] = out[i - 1] ^ (np.uint64(mean) << np.uint64(tz))
     return out.view(np.float64)
+
+
+def xor_ts_prediction(values: np.ndarray, ts_us: np.ndarray, starts=(0,)) -> np.ndarray:
+    """Each float64's bit pattern XOR that of its prediction
+    ``(ts_i - ts_{i-1}) // 1000`` (wrapping int64), over the blocks that
+    begin at ``starts``; a block head has no prediction and passes
+    unchanged. Its own inverse: the encoder applies it to latencies
+    before ``encode_xor``, the decoder to ``decode_xor``'s output."""
+    u = np.asarray(values, dtype=np.float64).view(np.uint64)
+    ts = np.asarray(ts_us, dtype=np.int64)
+    gap = np.zeros(len(ts), dtype=np.int64)
+    gap[1:] = ts[1:] - ts[:-1]
+    pred = (gap // _MS).astype(np.float64).view(np.uint64)
+    starts = np.asarray(starts, dtype=np.int64)
+    pred[starts[starts < len(pred)]] = 0
+    return (u ^ pred).view(np.float64)
 
 
 # ------------------------------------------------------- Spark operators
@@ -289,7 +394,7 @@ def encode_chunks(derived, chunk_seconds: int = 3600):
         lat = pdf["latency_ms"].astype("float64").to_numpy()
         tok = pdf["token_count"].astype("int64").to_numpy()
         ts_blobs = encode_dod_batch(ts_us, starts)
-        lat_blobs = encode_xor_batch(lat, starts)
+        lat_blobs = encode_xor_batch(xor_ts_prediction(lat, ts_us, starts), starts)
         tok_blobs = encode_dod_batch(tok, starts)
         n = ends - starts
         return pd.DataFrame(
@@ -329,9 +434,10 @@ def encode_chunks(derived, chunk_seconds: int = 3600):
 
 def decode_chunk_row(row) -> dict[str, np.ndarray]:
     """Round-trip helper for tests: blobs → arrays (exact)."""
+    ts_us = decode_dod(bytes(row["ts_blob"]))
     return {
-        "ts_us": decode_dod(bytes(row["ts_blob"])),
-        "latency_ms": decode_xor(bytes(row["latency_blob"])),
+        "ts_us": ts_us,
+        "latency_ms": xor_ts_prediction(decode_xor(bytes(row["latency_blob"])), ts_us),
         "token_count": decode_dod(bytes(row["token_blob"])),
     }
 
@@ -345,8 +451,10 @@ def decode_chunks_df(chunks):
     Decode is **vectorized across all blocks in the Arrow batch**
     (``codec_batch.decode_*_batch``: step k of every block decodes
     simultaneously as numpy array ops — the read-path mirror of the batch
-    encoder; no per-row Python). latency comes back as float64 with NaN
-    for the conversation-head NULL (bit-preserved by the XOR codec).
+    encoder; no per-row Python). ts decodes first, because latency is
+    stored as its XOR against the ts prediction (``xor_ts_prediction``).
+    latency comes back as float64 with NaN for the conversation-head NULL
+    (bit-preserved by the XOR codec).
     """
 
     def decode_partition(batches):
@@ -356,7 +464,8 @@ def decode_chunks_df(chunks):
             if not len(pdf):
                 continue
             ts_us, starts = decode_dod_batch(list(pdf["ts_blob"]))
-            lat, _ = decode_xor_batch(list(pdf["latency_blob"]))
+            resid, _ = decode_xor_batch(list(pdf["latency_blob"]))
+            lat = xor_ts_prediction(resid, ts_us, starts)
             tok, _ = decode_dod_batch(list(pdf["token_blob"]))
             n = np.diff(np.append(starts, len(ts_us)))
             yield pd.DataFrame(

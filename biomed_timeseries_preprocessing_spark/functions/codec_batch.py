@@ -4,23 +4,34 @@ vectorized numpy pass.
 The per-block encoders in codec.py are vectorized *within* a block, but
 transcript chunks are small (tens of turns), so per-block numpy overhead
 dominates at scale (~12 µs/row measured). These batch variants compute
-bucket codes, bit lengths, per-block bit offsets (add.reduceat), and a
-single global bit-scatter for the whole Arrow batch — per-row cost is
-O(1) numpy work regardless of block count. Output blobs are
-**byte-identical** to codec.py's per-block output (property-tested), so
-decode_dod/decode_xor read them unchanged.
+bucket codes, bit lengths, per-block bit offsets, and a single global
+bit-scatter for the whole Arrow batch — per-row cost is O(1) numpy work
+regardless of block count. Output blobs are **byte-identical** to
+codec.py's per-block output (property-tested), and the batch decoders
+read exactly what decode_dod/decode_xor read.
 
-Layout per block (same as codec.py):
-  dod:  [n:int64][v0:int64][d0:int64][prefix-coded zigzag dods...]
-        (short blocks: n<=2 omit the absent fields)
-  xor:  [n:int64][u0:uint64][coded xors...]
+The blob layouts (plain and ms delta-of-delta, Gorilla XOR) are defined
+in codec.py's module docstring. Like ``encode_dod``, ``encode_dod_batch``
+sizes every block under both delta-of-delta layouts and keeps the
+shorter one, so it needs no option to tell ts from token counts.
 """
 
 from __future__ import annotations
 
 import numpy as np
 
-from .codec import _DOD_BUCKETS
+from .codec import (
+    _MS,
+    _N_MASK,
+    _PAYLOAD_BITS,
+    _PREFIX_BITS,
+    _REM_BITS,
+    _TAG_DOD,
+    _TAG_DOD_MS,
+    _TAG_XOR,
+    _bucket_codes,
+    _layout_error,
+)
 
 _U1 = np.uint64(1)
 
@@ -29,6 +40,29 @@ def _block_ids(starts: np.ndarray, total: int) -> np.ndarray:
     ids = np.zeros(total, dtype=np.int64)
     np.add.at(ids, starts[1:], 1)
     return np.cumsum(ids)
+
+
+def _bit_length(x: np.ndarray) -> np.ndarray:
+    """``int.bit_length`` of each uint64 (0 for 0), by halving shifts —
+    float log2 is unsafe near 2^53."""
+    x = np.asarray(x, dtype=np.uint64)
+    bl = np.zeros(len(x), dtype=np.int64)
+    tmp = x.copy()
+    for shift in (32, 16, 8, 4, 2, 1):
+        m = tmp >= (_U1 << np.uint64(shift))
+        bl[m] += shift
+        tmp[m] >>= np.uint64(shift)
+    return bl + (x != 0)
+
+
+def _block_prefix(ibid: np.ndarray, bits: np.ndarray, nb: int) -> tuple[np.ndarray, np.ndarray]:
+    """For items sorted by block id ``ibid``: each block's total of
+    ``bits``, and each item's offset from its block's first item."""
+    cs = np.concatenate(([0], np.cumsum(bits)))
+    blocks = np.arange(nb)
+    base = cs[np.searchsorted(ibid, blocks)]
+    total = cs[np.searchsorted(ibid, blocks, side="right")] - base
+    return total, cs[:-1] - base[ibid]
 
 
 def _scatter_bits(
@@ -58,96 +92,105 @@ def _scatter_bits(
 
 
 def _write_be64(buf: np.ndarray, byte_offsets: np.ndarray, values: np.ndarray) -> None:
-    """Scatter big-endian int64s into buf at the given byte offsets."""
-    b = values.astype(">i8").view(np.uint8).reshape(-1, 8)
+    """Scatter big-endian 64-bit words into buf at the given byte offsets."""
+    b = np.asarray(values).astype(">u8").view(np.uint8).reshape(-1, 8)
     pos = byte_offsets[:, None] + np.arange(8)[None, :]
     buf[pos.ravel()] = b.ravel()
 
 
 def _pack_blocks(
-    starts: np.ndarray,
     lens: np.ndarray,
-    bid: np.ndarray,
+    tags: np.ndarray,
     fields: list[tuple[np.ndarray, np.ndarray]],
-    hdr_code: np.ndarray,
-    hdr_bits: np.ndarray,
-    pay_code: np.ndarray,
-    pay_bits: np.ndarray,
+    sections: list[tuple[np.ndarray, ...]],
 ) -> list[bytes]:
-    """Lay out one blob per block: big-endian int64 ``n``, then field k
-    of ``fields`` (mask of the blocks that carry it, its values for those
-    blocks) at byte 8k, then the block's rows' prefix+payload codes, bit
-    packed from the end of its header. A row without codes has zero
-    ``hdr_bits`` and ``pay_bits``; a field is carried only by blocks that
-    carry every field before it."""
-    nb = len(starts)
-    row_bits = hdr_bits + pay_bits
-    block_code_bits = np.where(
-        lens > 0, np.add.reduceat(row_bits, starts) if len(row_bits) else 0, 0
-    )
+    """Lay out one blob per block: the word ``tag << 56 | n``, then field
+    k of ``fields`` (mask of the blocks that carry it, its values for
+    those blocks) at byte 8k, then the block's codes bit packed from the
+    end of its header. A field is carried only by blocks that carry
+    every field before it. ``sections`` are packed in order, each one's
+    items in order within a block; a section is (item block ids, sorted;
+    prefix code; prefix bits; payload code; payload bits), and an item
+    with zero bits packs to nothing."""
+    nb = len(lens)
+    placed = [_block_prefix(s[0], s[2] + s[4], nb) for s in sections]
+    code_bits = sum(total for total, _ in placed)
     head_bytes = 8 + 8 * sum(has.astype(np.int64) for has, _ in fields)
-    block_bytes = head_bytes + (block_code_bits + 7) // 8
+    block_bytes = head_bytes + (code_bits + 7) // 8
     byte_start = np.concatenate(([0], np.cumsum(block_bytes)[:-1]))
     out = np.zeros(int(block_bytes.sum()), dtype=np.uint8)
 
-    _write_be64(out, byte_start, lens)
+    words = (tags.astype(np.uint64) << np.uint64(56)) | lens.astype(np.uint64)
+    _write_be64(out, byte_start, words)
     for k, (has, vals) in enumerate(fields, 1):
         _write_be64(out, byte_start[has] + 8 * k, vals)
 
-    # code bits: absolute offsets
-    cum = np.cumsum(row_bits)
-    block_cum_base = np.zeros(nb, dtype=np.int64)
-    if nb > 1:
-        block_cum_base[1:] = cum[starts[1:] - 1]
-    bits_before = cum - row_bits - block_cum_base[bid]
-    abs_bit = (byte_start[bid] + head_bytes[bid]) * 8 + bits_before
-    if row_bits.any():
-        out |= _scatter_bits(len(out), hdr_code, hdr_bits, pay_code, pay_bits, abs_bit)
+    # absolute bit of each item: its block's first code bit, the bits of
+    # the block's earlier sections, its offset within this section
+    first_bit = (byte_start + head_bytes) * 8
+    slots = []
+    for (ibid, hc, hb, pc, pb), (total, off) in zip(sections, placed):
+        slots.append((hc.astype(np.uint64), hb, pc.astype(np.uint64), pb, first_bit[ibid] + off))
+        first_bit = first_bit + total
+    hc, hb, pc, pb, at = (np.concatenate(x) for x in zip(*slots))
+    if hb.any() or pb.any():
+        out |= _scatter_bits(len(out), hc, hb, pc, pb, at)
     b = out.tobytes()
     return [b[int(s) : int(s + L)] for s, L in zip(byte_start, block_bytes)]
 
 
 def encode_dod_batch(values: np.ndarray, starts: np.ndarray) -> list[bytes]:
     """values: concatenated int64 series; starts: block start indices
-    (sorted, starts[0]==0). Returns one blob per block."""
+    (sorted, starts[0]==0). Returns one blob per block, in the shorter of
+    the plain and the ms layout (``encode_dod``)."""
     v = np.asarray(values, dtype=np.int64)
     starts = np.asarray(starts, dtype=np.int64)
-    total = len(v)
-    ends = np.append(starts[1:], total)
-    lens = ends - starts
+    total, nb = len(v), len(starts)
+    lens = np.append(starts[1:], total) - starts
     bid = _block_ids(starts, total)
-    off_in_block = np.arange(total) - starts[bid]
-
-    delta = np.zeros(total, dtype=np.int64)
-    delta[1:] = v[1:] - v[:-1]
-    dod = np.zeros(total, dtype=np.int64)
-    dod[1:] = delta[1:] - delta[:-1]
-    coded = off_in_block >= 2  # rows that emit prefix codes
-
-    zz = ((dod << 1) ^ (dod >> 63)).astype(np.uint64)
-    hdr_code = np.zeros(total, dtype=np.uint64)
-    hdr_bits = np.zeros(total, dtype=np.int64)
-    pay_code = np.zeros(total, dtype=np.uint64)
-    pay_bits = np.zeros(total, dtype=np.int64)
-    assigned = ~coded
-    for upper, prefix, plen, pbits in _DOD_BUCKETS:
-        sel = ((~assigned) & (zz < np.uint64(upper))) if pbits < 64 else ~assigned
-        hdr_code[sel] = np.uint64(prefix)
-        hdr_bits[sel] = plen
-        if pbits:
-            mask = (
-                (_U1 << np.uint64(pbits)) - _U1
-                if pbits < 64
-                else np.uint64(0xFFFFFFFFFFFFFFFF)
-            )
-            pay_code[sel] = zz[sel] & mask
-            pay_bits[sel] = pbits
-        assigned |= sel
-
+    uncoded = np.arange(total) - starts[bid] < 2  # rows without a prefix code
     has_v0 = lens >= 1
     has_d0 = lens >= 2  # n==2 stores n, v0, d0 and no codes
-    fields = [(has_v0, v[starts[has_v0]]), (has_d0, delta[starts[has_d0] + 1])]
-    return _pack_blocks(starts, lens, bid, fields, hdr_code, hdr_bits, pay_code, pay_bits)
+
+    def layout(w):
+        """Row codes, their bits per block, and the two header fields of
+        the delta-of-delta layout of w."""
+        delta = np.zeros(total, dtype=np.int64)
+        delta[1:] = w[1:] - w[:-1]
+        dod = np.zeros(total, dtype=np.int64)
+        dod[1:] = delta[1:] - delta[:-1]
+        hc, hb, pc, pb = _bucket_codes(((dod << 1) ^ (dod >> 63)).view(np.uint64))
+        hb[uncoded] = 0
+        pb[uncoded] = 0
+        bits = _block_prefix(bid, hb + pb, nb)[0]
+        return (hc, hb, pc, pb), bits, [w[starts[has_v0]], delta[starts[has_d0] + 1]]
+
+    plain_rows, plain_bits, plain_fields = layout(v)
+    w, rem = np.divmod(v, _MS)
+    ms_rows, ms_bits, ms_fields = layout(w)
+    exc = np.flatnonzero(rem)
+    count = np.bincount(bid[exc], minlength=nb)
+    width = _bit_length(np.maximum(lens - 1, 0))
+    chc, chb, cpc, cpb = _bucket_codes(count)
+    ms_bits = ms_bits + chb + cpb + count * (width + _REM_BITS)
+    ms = (ms_bits + 7) // 8 < (plain_bits + 7) // 8
+
+    in_ms = ms[bid]
+    rows = [np.where(in_ms, a, b) for a, b in zip(ms_rows, plain_rows)]
+    fields = [
+        (has, np.where(ms[has], a, b))
+        for has, a, b in zip((has_v0, has_d0), ms_fields, plain_fields)
+    ]
+    mb = np.flatnonzero(ms)
+    exc = exc[in_ms[exc]]
+    eb = bid[exc]
+    sections = [
+        (bid, *rows),
+        (mb, chc[mb], chb[mb], cpc[mb], cpb[mb]),
+        (eb, exc - starts[eb], width[eb], rem[exc], np.full(len(exc), _REM_BITS)),
+    ]
+    tags = np.where(ms, _TAG_DOD_MS, _TAG_DOD)
+    return _pack_blocks(lens, tags, fields, sections)
 
 
 def _concat_blobs(blobs) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
@@ -169,6 +212,16 @@ def _read_be64(buf: np.ndarray, byte_offsets: np.ndarray) -> np.ndarray:
     return buf[pos.ravel()].reshape(-1, 8).copy().view(">i8").ravel().astype(np.int64)
 
 
+def _read_headers(buf: np.ndarray, offs: np.ndarray, tags: tuple[int, ...]):
+    """(tag, n) of every blob; raises on a tag outside ``tags``."""
+    word = _read_be64(buf, offs).view(np.uint64)
+    tag = (word >> np.uint64(56)).astype(np.int64)
+    bad = ~np.isin(tag, tags)
+    if bad.any():
+        raise _layout_error(int(tag[bad][0]), tags)
+    return tag, (word & np.uint64(_N_MASK)).astype(np.int64)
+
+
 def _gather_value(bits: np.ndarray, pos: np.ndarray, nbits: np.ndarray, width: int) -> np.ndarray:
     """Vectorized variable-length big-endian bit-field read: for each row
     i, the integer formed by bits[pos[i] : pos[i]+nbits[i]] (nbits ≤ width
@@ -183,18 +236,29 @@ def _gather_value(bits: np.ndarray, pos: np.ndarray, nbits: np.ndarray, width: i
     )
 
 
+def _read_buckets(bits: np.ndarray, pos: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+    """The ``_DOD_BUCKETS`` code at each bit position: (values, the
+    positions after the codes). A code's leading ones (0..5) are its
+    bucket's index."""
+    ctl = bits[pos[:, None] + np.arange(5)[None, :]]
+    cls = np.cumprod(ctl, axis=1).sum(axis=1)
+    hw, pw = _PREFIX_BITS[cls], _PAYLOAD_BITS[cls]
+    return _gather_value(bits, pos + hw, pw, 64), pos + hw + pw
+
+
 def decode_dod_batch(blobs) -> tuple[np.ndarray, np.ndarray]:
     """Vectorized-across-blocks delta-of-delta decode: step k decodes
     element k of EVERY still-active block at once (prefix classification,
     payload gather, and the delta chain are all numpy array ops), so the
     per-row cost is O(1) numpy work regardless of block count — the read-
-    path mirror of the batch encoders above. Returns (values, starts)
-    exactly inverse to ``encode_dod_batch``."""
+    path mirror of the batch encoders above. Then the ms blocks scale by
+    1000 and add back their exceptions, all blocks' at once. Returns
+    (values, starts) exactly inverse to ``encode_dod_batch``."""
     nb = len(blobs)
     if nb == 0:
         return np.zeros(0, dtype=np.int64), np.zeros(0, dtype=np.int64)
     buf, offs, bits = _concat_blobs(blobs)
-    n = _read_be64(buf, offs)
+    tag, n = _read_headers(buf, offs, (_TAG_DOD, _TAG_DOD_MS))
     starts = np.concatenate(([0], np.cumsum(n)[:-1]))
     out = np.zeros(int(n.sum()), dtype=np.int64)
 
@@ -203,33 +267,34 @@ def decode_dod_batch(blobs) -> tuple[np.ndarray, np.ndarray]:
     has2 = n >= 2
     d0 = np.zeros(nb, dtype=np.int64)
     d0[has2] = _read_be64(buf, offs[has2] + 16)
-    with np.errstate(over="ignore"):
-        out[starts[has2] + 1] = out[starts[has2]] + d0[has2]
+    out[starts[has2] + 1] = out[starts[has2]] + d0[has2]
 
-    head_bytes = np.where(n >= 2, 24, np.where(n == 1, 16, 8))
-    pos = (offs + head_bytes) * 8  # absolute bit cursor per block
+    pos = (offs + 8 + 8 * np.minimum(n, 2)) * 8  # absolute bit cursor per block
     delta = d0.copy()
     cur = np.zeros(nb, dtype=np.int64)
     cur[has2] = out[starts[has2] + 1]
-    max_n = int(n.max()) if nb else 0
-    # payload widths by prefix class '0','10','110','1110','11110','11111'
-    pay_w = np.array([0, 7, 9, 12, 32, 64], dtype=np.int64)
-    hdr_w = np.array([1, 2, 3, 4, 5, 5], dtype=np.int64)
-    for k in range(2, max_n):
+    for k in range(2, int(n.max())):
         act = np.flatnonzero(n > k)
-        p = pos[act]
-        ctl = bits[p[:, None] + np.arange(5)[None, :]]
-        ones = np.cumprod(ctl, axis=1).sum(axis=1)  # leading ones (0..5)
-        cls = ones  # class index == number of leading ones
-        hw = hdr_w[cls]
-        pw = pay_w[cls]
-        zz = _gather_value(bits, p + hw, pw, 64)
-        dod = ((zz >> np.uint64(1)) ^ (np.uint64(0) - (zz & np.uint64(1)))).view(np.int64)
-        with np.errstate(over="ignore"):
-            delta[act] = delta[act] + dod
-            cur[act] = cur[act] + delta[act]
+        zz, pos[act] = _read_buckets(bits, pos[act])
+        dod = ((zz >> _U1) ^ (np.uint64(0) - (zz & _U1))).view(np.int64)
+        delta[act] = delta[act] + dod
+        cur[act] = cur[act] + delta[act]
         out[starts[act] + k] = cur[act]
-        pos[act] = p + hw + pw
+
+    ms = np.flatnonzero(tag == _TAG_DOD_MS)
+    if len(ms):
+        out[np.repeat(tag == _TAG_DOD_MS, n)] *= _MS
+        count, at = _read_buckets(bits, pos[ms])
+        count = count.astype(np.int64)
+        width = _bit_length(np.maximum(n[ms] - 1, 0))
+        # exception j of block b: (position, remainder) at bit
+        # at_b + j * (width_b + _REM_BITS)
+        e = np.repeat(np.arange(len(ms)), count)
+        j = np.arange(len(e)) - np.repeat(np.cumsum(count) - count, count)
+        p = at[e] + j * (width[e] + _REM_BITS)
+        where = _gather_value(bits, p, width[e], int(width.max()))
+        rem = _gather_value(bits, p + width[e], np.full(len(e), _REM_BITS), _REM_BITS)
+        out[starts[ms][e] + where.astype(np.int64)] += rem.astype(np.int64)
     return out, starts
 
 
@@ -241,7 +306,7 @@ def decode_xor_batch(blobs) -> tuple[np.ndarray, np.ndarray]:
     if nb == 0:
         return np.zeros(0, dtype=np.float64), np.zeros(0, dtype=np.int64)
     buf, offs, bits = _concat_blobs(blobs)
-    n = _read_be64(buf, offs)
+    _, n = _read_headers(buf, offs, (_TAG_XOR,))
     starts = np.concatenate(([0], np.cumsum(n)[:-1]))
     out = np.zeros(int(n.sum()), dtype=np.uint64)
 
@@ -289,14 +354,7 @@ def encode_xor_batch(values: np.ndarray, starts: np.ndarray) -> list[bytes]:
     x[~coded] = 0
     nzc = coded & (x != 0)
 
-    bl = np.zeros(total, dtype=np.int64)
-    tmp = x.copy()
-    for shift in (32, 16, 8, 4, 2, 1):
-        m = tmp >= (_U1 << np.uint64(shift))
-        bl[m] += shift
-        tmp[m] >>= np.uint64(shift)
-    bl[x != 0] += 1
-    lz = np.where(x != 0, 64 - bl, 0)
+    lz = np.where(x != 0, 64 - _bit_length(x), 0)
     lz = np.minimum(lz, 63)
     tz = np.zeros(total, dtype=np.int64)
     low = x.copy()
@@ -323,5 +381,7 @@ def encode_xor_batch(values: np.ndarray, starts: np.ndarray) -> list[bytes]:
         pay_bits[nzc] = nbits[nzc]
 
     has_v0 = lens >= 1
-    fields = [(has_v0, u[starts[has_v0]].view(np.int64))]
-    return _pack_blocks(starts, lens, bid, fields, hdr_code, hdr_bits, pay_code, pay_bits)
+    fields = [(has_v0, u[starts[has_v0]])]
+    tags = np.full(len(starts), _TAG_XOR)
+    sections = [(bid, hdr_code, hdr_bits, pay_code, pay_bits)]
+    return _pack_blocks(lens, tags, fields, sections)

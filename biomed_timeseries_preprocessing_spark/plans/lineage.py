@@ -77,7 +77,24 @@ def tier_audit(
 
 def gapfill_in_audit() -> list[Column]:
     """Source side of the text-equality invariant: rows and Σ of the
-    carried per-turn hash ``_th`` = xxhash64(conv_id, turn_idx, text)."""
+    carried per-turn hash ``_th`` = xxhash64(conv_id, turn_idx, text).
+
+    Collision bound of the (count, Σ) check. Assume xxhash64 acts as a
+    uniform random function (independent uniform 64-bit values on
+    distinct (conv_id, turn_idx, text) inputs) and the sum is exact
+    (``_exact_sum``: DECIMAL(38,0) holds any sum of fewer than ~10^19
+    int64s, so it never wraps). Let the filled bucket's turns differ from
+    the source's as multisets. Then some input t has multiplicities that
+    differ by c != 0, and Σout − Σin = c·h(t) + R, where R does not
+    depend on h(t). Since c·h(t) is injective in h(t) over the integers,
+    at most one of the 2^64 values of h(t) makes the sums equal. So a
+    bucket whose turns were lost, duplicated, misrouted or had their
+    text changed passes with probability at most 2^-64, whatever the
+    count check says; over B differing buckets, at most B·2^-64. The
+    bound is void against inputs built to collide (xxhash64 is not a
+    cryptographic hash). A wrapping int64 sum would weaken it: modulo
+    2^64, c·h(t) for c = 2^k·(odd) hits each reachable value 2^k times,
+    so a turn lost or duplicated 2^k times would pass with 2^(k-64)."""
     return [
         F.count(F.lit(1)).alias("n_in"),
         _exact_sum(F.col("_th")).alias("c_in"),

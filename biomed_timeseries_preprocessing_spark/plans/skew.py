@@ -11,9 +11,8 @@ us three tools, applied by stage *type* (SURVEY §7.4.2):
    mergeable (the File_Struct.py:361-399 algebra); bit-for-bit safe
    because the state is exact integers.
 2. **Ordered-window stages** (lag/lead/gap-fill) — NEVER salt: order
-   within conv_id must be total. Use ``repartitionByRange(conv_id,
-   turn_idx)`` so a hot conv still lands in one partition but coexists
-   with fewer neighbors.
+   within conv_id must be total, so a hot conversation is still one
+   task (the segmented scan on the ROADMAP is the planned remedy).
 3. **AQE** — ``spark.sql.adaptive.skewJoin`` + partition coalescing is
    enabled in session.py for everything joins/shuffle-sized.
 
@@ -57,24 +56,9 @@ def rollup_from_turns_salted(derived: DataFrame, tier: str, n_salts: int = 8) ->
     return rollup_merge(unsalted, tier)
 
 
-def repartition_for_ordered_stage(df: DataFrame, n_partitions: int | None = None) -> DataFrame:
-    """Stable layout for ordered-window stages (rule 2)."""
-    if n_partitions:
-        return df.repartitionByRange(n_partitions, "conv_id", "turn_idx")
-    return df.repartitionByRange("conv_id", "turn_idx")
-
-
-def hot_keys(df: DataFrame, key: str = "conv_id", min_rows: int = 100_000) -> DataFrame:
-    """Diagnostic: keys whose row counts exceed ``min_rows`` (what AQE's
-    skew stats would flag); used by jobs to decide salting."""
-    return df.groupBy(key).count().filter(F.col("count") >= min_rows)
-
-
 __all__ = [
     "TIER_SECONDS",
     "bucket_start",
-    "hot_keys",
-    "repartition_for_ordered_stage",
     "rollup_from_turns_salted",
     "with_salt",
 ]

@@ -203,10 +203,13 @@ def run(args, spark=None) -> dict:
     stage_done = stage_key in staged_keys and os.path.isdir(staging)
     if todo and not stage_done:
         t0 = time.time()
-        spark.read.parquet(args.source).withColumn("bucket", bcol).write.mode(
-            "overwrite"
-        ).partitionBy("bucket").parquet(staging)
-        n_staged = spark.read.parquet(staging).count()  # footer metadata only
+        # the row count rides the staging write as an observe: no re-read
+        src, obs = attach_audit(
+            spark.read.parquet(args.source).withColumn("bucket", bcol),
+            [F.count(F.lit(1)).alias("n")],
+        )
+        src.write.mode("overwrite").partitionBy("bucket").parquet(staging)
+        n_staged = read_audit(obs)["n"]
         staged_row = LineageRow(
             run_id=args.run_id,
             stage="stage_source",

@@ -105,6 +105,9 @@ def test_kill_and_resume_equals_uninterrupted(spark, tmp_path, source):
     assert (per == 1).all()
     assert len(per) == 5 * 4 + 1
     assert len(lin[lin.stage == "stage_source"]) == 1
+    # the staging write counts what it stages (an observe, not a re-read)
+    staged = lin[lin.stage == "stage_source"].iloc[0]
+    assert staged.rows_in == staged.rows_out == spark.read.parquet(source).count()
 
 
 def test_snapshot_isolation_and_expiry(spark, tmp_path):
