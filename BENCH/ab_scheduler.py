@@ -1,14 +1,18 @@
-"""Interleaved A/B: global vs per-bucket scheduler on the shipped job.
+"""Interleaved A/B/C: the job's bucket-group shapes on the shipped job.
 
 Same process, same staged input, alternating arms so host weather hits
-both equally; rep 0 per arm is JVM/codegen warmup and is discarded. The
-job picks its scheduler from the master, so each arm is forced by
-replacing ``jobs.rollup_job.resolve_scheduler``.
+every arm equally; rep 0 per arm is JVM/codegen warmup and is
+discarded. Each arm is forced by replacing
+``jobs.rollup_job.bucket_groups``: ``singles`` (groups of one bucket,
+the old per-bucket scheduler's shape), ``one-group`` (every bucket in
+one group, the old global scheduler's shape) and ``rule`` (the job's own
+``bucket_groups``).
 
 Usage: python BENCH/ab_scheduler.py [n_convs] [reps] [buckets] [master]
 
 ``master`` defaults to ``local[32]``. Results merge into
-BENCH/ab_scheduler.json under the key ``{n_convs}convs_{buckets}buckets``;
+BENCH/ab_scheduler.json under the key ``{n_convs}convs_{buckets}buckets_groups``
+(keys without ``_groups`` hold the old schedulers' runs);
 a ``local-cluster[...]`` master writes BENCH/ab_scheduler_local_cluster.json
 instead. A local-cluster master launches executor JVMs from
 ``$SPARK_HOME`` (their work dirs land in ``$SPARK_HOME/work``) and needs
@@ -25,6 +29,7 @@ from __future__ import annotations
 import json
 import os
 import shutil
+import statistics
 import sys
 import tempfile
 import time
@@ -32,14 +37,22 @@ import time
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
-from biomed_timeseries_preprocessing_spark.session import get_spark  # noqa: E402
+from biomed_timeseries_preprocessing_spark.session import engine_cores, get_spark  # noqa: E402
 from biomed_timeseries_preprocessing_spark.sources.synth import synth_transcripts  # noqa: E402
 import jobs.rollup_job as rollup_job  # noqa: E402
 
 
-def one_run(spark, raw_path, work, tag, scheduler, buckets="8") -> float:
+RULE = rollup_job.bucket_groups
+ARMS = {
+    "singles": lambda todo, workers: [[b] for b in todo],
+    "one-group": lambda todo, workers: [todo],
+    "rule": RULE,
+}
+
+
+def one_run(spark, raw_path, work, tag, arm, buckets="8") -> float:
     wh = os.path.join(work, f"wh_{tag}")
-    rollup_job.resolve_scheduler = lambda master: scheduler
+    rollup_job.bucket_groups = ARMS[arm]
     t0 = time.time()
     rollup_job.run(
         rollup_job.parse_args(
@@ -50,6 +63,11 @@ def one_run(spark, raw_path, work, tag, scheduler, buckets="8") -> float:
     el = time.time() - t0
     shutil.rmtree(wh, ignore_errors=True)
     return el
+
+
+def iqr(t: list[float]) -> float:
+    q = statistics.quantiles(t, n=4, method="inclusive")
+    return q[2] - q[0]
 
 
 def main() -> None:
@@ -71,26 +89,29 @@ def main() -> None:
     spark = get_spark(app_name="ab_scheduler", master=master, extra_conf=extra)
     base = os.environ.get("TMPDIR") or ("/dev/shm" if os.path.isdir("/dev/shm") else None)
     work = tempfile.mkdtemp(prefix="ab_sched_", dir=base)
-    times = {"global": [], "per-bucket": []}
+    times = {arm: [] for arm in ARMS}
     try:
         raw_path = os.path.join(work, "transcripts")
         synth_transcripts(spark, n_convs).write.mode("overwrite").parquet(raw_path)
         spark.range(1_000_000).count()
         for rep in range(reps + 1):
-            for arm in ("global", "per-bucket"):
+            for arm in ARMS:
                 el = one_run(spark, raw_path, work, f"{arm}_{rep}", arm, buckets)
                 if rep > 0:
                     times[arm].append(round(el, 2))
                 print(f"rep{rep} {arm}: {el:.2f}s", flush=True)
         n_turns = spark.read.parquet(raw_path).count()
+        workers = max(4, engine_cores(spark) // 4)
         out = {
             "master": master,
+            "rule_groups": [len(g) for g in RULE(list(range(int(buckets))), workers)],
             "n_convs": n_convs,
             "n_turns": n_turns,
             "buckets": buckets,
             "reps_sec": times,
             "best_sec": {a: min(t) for a, t in times.items()},
-            "median_sec": {a: sorted(t)[len(t) // 2] for a, t in times.items()},
+            "median_sec": {a: statistics.median(t) for a, t in times.items()},
+            "iqr_sec": {a: round(iqr(t), 2) for a, t in times.items()},
         }
         name = "ab_scheduler_local_cluster.json" if cluster else "ab_scheduler.json"
         path = os.path.join(REPO, "BENCH", name)
@@ -98,7 +119,7 @@ def main() -> None:
         if os.path.exists(path):
             with open(path) as f:
                 merged = json.load(f)
-        merged[f"{n_convs}convs_{buckets}buckets"] = out
+        merged[f"{n_convs}convs_{buckets}buckets_groups"] = out
         with open(path, "w") as f:
             json.dump(merged, f, indent=2)
         print(json.dumps(out))

@@ -183,16 +183,7 @@ def stft_per_bin_stats(
     cols = ["conv_id", "idx", value_col] + (
         [length_col] if length_col is not None else []
     )
-    src = series.select(*cols)
-    if length_col is not None:
-        # the sparse feed is tiny but each group DENSIFIES to
-        # frame-matrix work inside the kernel. Under AQE this exchange
-        # starts at initialPartitionNum (16 per core) and is coalesced
-        # by size like the groupBy's own exchange, so it does not widen
-        # a tiny feed: at local[4] a 100k-row feed ran as 1 Python task
-        # with it and 2 without, a 1M-row feed as 12 and 16
-        src = src.repartition("conv_id")
-    partials = src.groupBy("conv_id").applyInPandas(
+    partials = series.select(*cols).groupBy("conv_id").applyInPandas(
         kernel, "freq_bin int, n long, s1 double, s2 double"
     )
     n, s1, s2 = F.sum("n"), F.sum("s1"), F.sum("s2")

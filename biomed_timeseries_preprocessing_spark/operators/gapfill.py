@@ -18,8 +18,8 @@ MNE reader maps missing channels to ``-1`` sentinels
 - ``role``/``tool`` of **gap rows only** are forward-filled
   (``last(..., ignoreNulls)`` over the stable order); present rows keep
   their own values, including NULLs the schema allows;
-- ``text`` of filled turns is a configurable default (NULL-free so the
-  per-turn text-equality invariant can distinguish filled rows via
+- ``text`` of filled turns is ``GAP_TEXT`` (NULL-free so the per-turn
+  text-equality invariant can distinguish filled rows via
   ``is_gap_filled`` instead of sentinel values).
 
 Everything is window functions over the stable (conv_id, turn_idx) order
@@ -35,10 +35,14 @@ from pyspark.sql.window import Window
 
 OUT_COLS = ["conv_id", "turn_idx", "role", "text", "tool", "ts", "is_gap_filled"]
 
+# text of every filled turn. The rollup job's narrow plan drops text
+# before the gap-fill and carries token_count=0 for gap rows, because
+# derive computes 0 tokens from this value.
+GAP_TEXT = ""
+
 
 def gapfill(
     turns: DataFrame,
-    default_text: str = "",
     carry: dict[str, object] | None = None,
 ) -> DataFrame:
     """Return turns with missing turn_idx rows materialized and filled,
@@ -124,7 +128,7 @@ def gapfill(
     ]
     if has_text:
         out.append(
-            F.when(is_gap, F.lit(default_text)).otherwise(F.col("text")).alias("text")
+            F.when(is_gap, F.lit(GAP_TEXT)).otherwise(F.col("text")).alias("text")
         )
     out += [
         F.when(is_gap, F.col("_tool_f")).otherwise(F.col("tool")).alias("tool"),

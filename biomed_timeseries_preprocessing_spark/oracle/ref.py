@@ -74,11 +74,11 @@ def rollup_pdf(derived: pd.DataFrame, tier: str) -> pd.DataFrame:
     return out
 
 
-def gapfill_pdf(turns: pd.DataFrame, default_text: str = "") -> pd.DataFrame:
+def gapfill_pdf(turns: pd.DataFrame) -> pd.DataFrame:
     """Materialize missing turn_idx per conv (0..max present) and fill:
     ts linearly interpolated between neighbors (exact integer µs midpoint
-    math — same formula as operators/gapfill.py), text forward-filled from
-    the previous present turn, role/tool forward-filled. Mirrors the
+    math — same formula as operators/gapfill.py), text "" (its
+    ``GAP_TEXT``), role/tool forward-filled. Mirrors the
     reference's Background gap-fill (Extract_Transform_Labeler.py:49-70)."""
     out = []
     for conv, g in turns.sort_values(["conv_id", "turn_idx"]).groupby("conv_id", sort=True):
@@ -106,7 +106,7 @@ def gapfill_pdf(turns: pd.DataFrame, default_text: str = "") -> pd.DataFrame:
         gg["ts"] = pd.to_datetime(filled.astype("int64"), unit="us")
         for c in ("role", "tool"):
             gg[c] = gg[c].where(~gg["is_gap_filled"], gg[c].ffill())
-        gg["text"] = gg["text"].where(~gg["is_gap_filled"], default_text)
+        gg["text"] = gg["text"].where(~gg["is_gap_filled"], "")
         gg = gg.reset_index().rename(columns={"index": "turn_idx"})
         out.append(gg)
     res = pd.concat(out, ignore_index=True)

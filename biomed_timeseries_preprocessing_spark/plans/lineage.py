@@ -40,42 +40,42 @@ def bucket_of(conv_id_col, n_buckets: int):
     return F.pmod(F.xxhash64(conv_id_col), F.lit(n_buckets)).cast("int")
 
 
-def _exact_sum(col: Column) -> Column:
-    """Σ of int64 hashes as an exact decimal: with xxhash64 summands this
-    is an order-independent multiset checksum, the same value on any
-    partitioning."""
-    return F.sum(col.cast("decimal(38,0)"))
+def _exact_sum(e: str) -> str:
+    """Σ of the int64 hashes ``e`` (SQL) as an exact decimal: with
+    xxhash64 summands this is an order-independent multiset checksum, the
+    same value on any partitioning."""
+    return f"sum(CAST({e} AS DECIMAL(38,0)))"
 
 
-# Each audit's aggregates, defined once. The per-bucket scheduler applies
-# them with ``attach_audit`` (``df.observe``), the global one with
-# ``grouped_audit`` (``groupBy(bucket).agg``); ``read_audit`` reads either.
+def _on(e: str, where: str | None) -> str:
+    """``e`` on the rows matching the SQL predicate ``where`` (NULL on the
+    others, which every audit aggregate skips)."""
+    return e if where is None else f"CASE WHEN {where} THEN {e} END"
+
+
+# Each audit is a list of SQL aggregates over the rows matching ``where``
+# (all rows when None), so one ``attach_audit`` pass can audit every
+# bucket of a frame that holds several: the rollup job observes one
+# struct of them per bucket (and per tier). SQL text, not column
+# functions: the JVM parses each aggregate in one call, where the
+# column-function form costs a Py4J round trip per function (the four
+# tiers' audits took ~0.14 s that way against ~2 ms, on a 4-vCPU VM).
 
 
 def tier_audit(
     checksum_cols: list[str], extent_col: str, where: str | None = None
 ) -> list[Column]:
-    """Row count, min/max extent and the frame checksum of a tier — of
-    the rows matching the SQL predicate ``where`` when given, so one pass
-    can audit each tier of a frame that holds several. Written in SQL:
-    the JVM parses each aggregate in one call, where the column-function
-    form costs a Py4J round trip per function (the four tiers' audits
-    took ~0.14 s that way against ~2 ms, on a 4-vCPU VM)."""
-
-    def on(e: str) -> str:
-        return e if where is None else f"CASE WHEN {where} THEN {e} END"
-
+    """Row count, min/max extent and the frame checksum of a tier."""
     checksum = f"xxhash64({', '.join(checksum_cols)})"
     return [
-        F.expr(f"count({on('1')}) AS n"),
-        F.expr(f"min({on(extent_col)}) AS lo"),
-        F.expr(f"max({on(extent_col)}) AS hi"),
-        # the SQL form of _exact_sum
-        F.expr(f"sum(CAST({on(checksum)} AS DECIMAL(38,0))) AS c"),
+        F.expr(f"count({_on('1', where)}) AS n"),
+        F.expr(f"min({_on(extent_col, where)}) AS lo"),
+        F.expr(f"max({_on(extent_col, where)}) AS hi"),
+        F.expr(f"{_exact_sum(_on(checksum, where))} AS c"),
     ]
 
 
-def gapfill_in_audit() -> list[Column]:
+def gapfill_in_audit(where: str | None = None) -> list[Column]:
     """Source side of the text-equality invariant: rows and Σ of the
     carried per-turn hash ``_th`` = xxhash64(conv_id, turn_idx, text).
 
@@ -96,25 +96,27 @@ def gapfill_in_audit() -> list[Column]:
     2^64, c·h(t) for c = 2^k·(odd) hits each reachable value 2^k times,
     so a turn lost or duplicated 2^k times would pass with 2^(k-64)."""
     return [
-        F.count(F.lit(1)).alias("n_in"),
-        _exact_sum(F.col("_th")).alias("c_in"),
+        F.expr(f"count({_on('1', where)}) AS n_in"),
+        F.expr(f"{_exact_sum(_on('_th', where))} AS c_in"),
     ]
 
 
-def gapfill_out_audit() -> list[Column]:
+def gapfill_out_audit(where: str | None = None) -> list[Column]:
     """Filled side: total and gap rows, and Σ ``_th`` over the non-gap
     rows — equal multisets of source turns give equal (count, Σ)."""
-    gap = F.col("is_gap_filled")
     return [
-        F.count(F.lit(1)).alias("n"),
-        F.count_if(gap).alias("nf"),
-        _exact_sum(F.when(~gap, F.col("_th"))).alias("c_out"),
+        F.expr(f"count({_on('1', where)}) AS n"),
+        F.expr(f"count_if({_on('is_gap_filled', where)}) AS nf"),
+        F.expr(f"{_exact_sum(_on(_on('_th', 'NOT is_gap_filled'), where))} AS c_out"),
     ]
 
 
-def codec_audit() -> list[Column]:
+def codec_audit(where: str | None = None) -> list[Column]:
     """Blobs and encoded points of a codec_chunks write."""
-    return [F.count(F.lit(1)).alias("blobs"), F.sum("n").alias("pts")]
+    return [
+        F.expr(f"count({_on('1', where)}) AS blobs"),
+        F.expr(f"sum({_on('n', where)}) AS pts"),
+    ]
 
 
 def attach_audit(df: DataFrame, exprs: list[Column]) -> tuple[DataFrame, Observation]:
@@ -129,29 +131,12 @@ def attach_audit(df: DataFrame, exprs: list[Column]) -> tuple[DataFrame, Observa
     return df.observe(obs, *exprs), obs
 
 
-def grouped_audit(
-    df: DataFrame, by: list[Column], exprs: list[Column], keys: list
-) -> dict:
-    """``{key: read_audit(...)}`` for every key in ``keys`` from ONE
-    ``groupBy(*by).agg(*exprs)`` action over ``df``. A key is its group's
-    value, or the tuple of them when grouping by several columns (e.g.
-    ``(bucket, tier)``); a key with no rows reads as an empty input."""
-    agg = df.groupBy(*[c.alias(f"_by{i}") for i, c in enumerate(by)]).agg(*exprs)
-    names = agg.columns[len(by):]
-    got = {}
-    for r in agg.collect():
-        key = tuple(r[: len(by)])
-        got[key if len(by) > 1 else key[0]] = dict(zip(names, r[len(by):]))
-    empty = dict.fromkeys(names)
-    return {k: read_audit(got.get(k, empty)) for k in keys}
-
-
 def read_audit(m: Observation | dict) -> dict:
     """Lineage values from one audit result — an ``attach_audit``
     observation (blocks until the frame's first action completes) or one
-    row of a grouped aggregate. Counts and sums of an empty input read 0, extents
-    (``lo``/``hi``) stay None, and the tier checksum ``c`` folds the
-    exact decimal sum back into int64 range (ANSI-safe)."""
+    struct of its values, as a dict. Counts and sums of an empty input
+    read 0, extents (``lo``/``hi``) stay None, and the tier checksum
+    ``c`` folds the exact decimal sum back into int64 range (ANSI-safe)."""
     if isinstance(m, Observation):
         m = m.get
     out = {k: v if k in ("lo", "hi") else int(v or 0) for k, v in m.items()}

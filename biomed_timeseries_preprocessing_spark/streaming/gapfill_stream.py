@@ -62,6 +62,8 @@ from pyspark.sql.types import (
     TimestampType,
 )
 
+from ..operators.gapfill import GAP_TEXT
+
 GAPFILL_OUT = StructType(
     [
         StructField("conv_id", StringType()),
@@ -83,7 +85,7 @@ GAPFILL_STATE = StructType(
 )
 
 
-def _make_fill_group(default_text: str, state_ttl_sec: int | None = None):
+def _make_fill_group(state_ttl_sec: int | None = None):
     def _fill_group(
         key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
     ) -> Iterator[pd.DataFrame]:
@@ -110,7 +112,7 @@ def _make_fill_group(default_text: str, state_ttl_sec: int | None = None):
                     # exact integer floor interpolation == batch operator
                     fill_us = last_us + (span_us * (g - last_idx)) // span_idx
                     out.append(
-                        (conv_id, g, last_role, default_text, last_tool,
+                        (conv_id, g, last_role, GAP_TEXT, last_tool,
                          pd.Timestamp(fill_us, unit="us"), True)
                     )
             if last_idx is None or idx > last_idx:
@@ -145,7 +147,6 @@ def _make_fill_group(default_text: str, state_ttl_sec: int | None = None):
 
 def streaming_gapfill(
     turns: DataFrame,
-    default_text: str = "",
     state_ttl_sec: int | None = None,
     watermark_delay: str = "1 hour",
 ) -> DataFrame:
@@ -164,7 +165,7 @@ def streaming_gapfill(
         src = src.withWatermark("ts", watermark_delay)
         timeout = GroupStateTimeout.EventTimeTimeout
     return src.groupBy("conv_id").applyInPandasWithState(
-        _make_fill_group(default_text, state_ttl_sec),
+        _make_fill_group(state_ttl_sec),
         GAPFILL_OUT,
         GAPFILL_STATE,
         "append",

@@ -17,13 +17,13 @@ prunes to its own partition directory instead of re-scanning the input
 (the Iceberg analog is writing the ingest table with a
 ``bucket(conv_id, N)`` partition transform). The staged copy is deleted
 once every bucket has committed; a killed run keeps it for its resume.
-Per bucket: gap-fill of missing turns → derive → every data file
-written (the codec archive, then all four tiers (1m, 5m, 1h, 1d) by ONE
-Spark job, each tier's rows in its own directory) → ONE check of the
-per-turn text-equality invariant (the job fails before any commit of a
-bucket that violates it) → dynamic-partition-overwrite commit of each
-table + ONE batched lineage commit carrying all of the bucket's stage
-rows.
+Per group of buckets (below): gap-fill of missing turns → derive →
+every data file written (the codec archive, then all four tiers (1m,
+5m, 1h, 1d) by ONE Spark job, each tier's rows in its own directory) →
+ONE check of the per-turn text-equality invariant (the job fails before
+any commit of a group holding a bucket that violates it) → per bucket,
+a dynamic-partition-overwrite commit of each table + ONE batched
+lineage commit carrying all of the bucket's stage rows.
 ``rollup_merge(tier_1m, TIER_ORDER)`` merges the 1m aggregate into every
 tier inside the plan; the gap-fill's conv_id exchange already groups
 every tier, so no tier adds a shuffle, and no tier is read back from the
@@ -33,22 +33,19 @@ files of the tier below. A killed job re-submitted with the same
 half-written bucket is safely re-committed because tier writes are
 partition *overwrites* (idempotent), not appends.
 
-One plan, two commit slicings (same commits, same lineage,
-bit-identical tables). ``_run_plan`` builds the whole job once — narrow
-projection and gap-fill, the text-equality check, derive, the codec
-archive, the fused tier write — and the two
-schedulers differ only in which staged buckets it selects, how it writes
-data files, and how the commits are sliced. ``resolve_scheduler`` picks
-one from the master. On a single-JVM local master, ``per-bucket`` runs
-the plan once per bucket in a thread pool — the Spark-shaped version of
-the reference's per-patient joblib loop (``File_Struct.py:576-579``)
-with the two things it lacks, atomic commits and resume; stages of
-different buckets overlap, which wins on one JVM
-(BENCH/ab_scheduler.json). On a multi-executor master, ``global`` runs
-the plan once over every pending bucket — ONE partitionBy(bucket) Spark
-job per stage, its output sliced per bucket directory for independent
-commits — the shape that wins there once buckets outnumber the pool
-(BENCH/ab_scheduler_local_cluster.json).
+One plan over a group of buckets. ``_run_plan`` builds the whole job
+once for a group — narrow projection and gap-fill, derive, the codec
+archive, the fused tier write, the text-equality check — and each stage
+is ONE Spark job over the group, its files split per bucket directory so
+every bucket commits, and records its lineage, on its own. Each audit
+rides the job it audits as ONE ``observe()`` holding a struct of
+aggregates per bucket. ``bucket_groups`` sizes the groups from the
+pending bucket count and the pool's workers, and a thread pool runs
+them: the Spark-shaped version of the reference's per-patient joblib
+loop (``File_Struct.py:576-579``) with the two things it lacks, atomic
+commits and resume. Groups of one bucket overlap their stages in the
+pool; wider groups, once buckets outnumber the workers, pay a plan's
+fixed cost once per group (BENCH/ab_scheduler*.json).
 """
 
 from __future__ import annotations
@@ -59,6 +56,7 @@ import shutil
 import sys
 import threading
 import time
+from functools import partial
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -83,7 +81,6 @@ from biomed_timeseries_preprocessing_spark.plans.lineage import (  # noqa: E402
     codec_audit,
     gapfill_in_audit,
     gapfill_out_audit,
-    grouped_audit,
     pending_buckets,
     read_audit,
     tier_audit,
@@ -129,27 +126,39 @@ def parse_args(argv=None):
     return p.parse_args(argv)
 
 
-def resolve_scheduler(master: str) -> str:
-    """Pick the bucket scheduler for the deployment shape.
+#: widest bucket group: its observes hold MAX_GROUP × (4 tiers × 4 + 7
+#: gap-fill and codec) aggregates
+MAX_GROUP = 64
 
-    'per-bucket' on a single-JVM local master (local / local[n] /
-    local[*]), where overlapping independent bucket pipelines beat the
-    global barrier plan (BENCH/ab_scheduler.json, 4-vCPU VM: median 8.15
-    vs 12.05 s at local[4], 16 buckets, 327k turns); 'global' on any
-    multi-executor master (yarn, spark://, k8s://, local-cluster), where
-    one partitionBy(bucket) job per stage fills a wide cluster once
-    buckets outnumber the driver pool. On local-cluster[2,2,2048]
-    (BENCH/ab_scheduler_local_cluster.json) 'global' wins at 32 buckets
-    (13.89 vs 16.41 s), ties at 16 and loses at 4 (6.18 vs 4.15 s), so a
-    few-bucket cluster run takes the slower shape; a bucket-count rule
-    waits for a cluster workload in the benchmark. Both schedulers
-    produce bit-identical tables and lineage
-    (BENCH/scheduler_identity_scale.json, proven at 54M turns), so the
-    choice is purely a throughput decision."""
-    is_local = master == "local" or (
-        master.startswith("local[") and not master.startswith("local-cluster")
-    )
-    return "per-bucket" if is_local else "global"
+
+def bucket_groups(todo: list[int], workers: int) -> list[list[int]]:
+    """Split the pending buckets ``todo`` into the groups the job plans,
+    in order: one bucket per group while the pool has a worker for every
+    bucket, otherwise one group per worker of at most MAX_GROUP buckets.
+    A one-worker run (the kill hook's) also keeps one bucket per group,
+    since the hook counts committed buckets.
+
+    A group is one plan: each stage is one Spark job over the group, so
+    fewer, wider groups cut per-plan fixed cost (planning, job launch,
+    stage barriers) while smaller groups let the pool overlap them. The
+    rule against groups of one and one group of every bucket
+    (BENCH/ab_scheduler*.json, ``*_groups`` keys; 4-vCPU VM, a pool of 4
+    workers on both masters, median (IQR) of 4 interleaved reps after a
+    warm-up, seconds):
+
+      master                   buckets  rule       singles       one group     rule
+      local-cluster[2,2,2048]   4       4 × 1      3.91 (0.76)    4.49 (0.40)   3.83 (0.48)
+      local-cluster[2,2,2048]  16       4 × 4     10.61 (0.59)   14.07 (0.46)   9.03 (0.51)
+      local-cluster[2,2,2048]  32       4 × 8     18.42 (1.49)   23.84 (0.43)  12.26 (1.17)
+      local[4]                 16       4 × 4      9.81 (0.60)   15.10 (0.60)   8.28 (0.64)
+
+    The rule is the fastest arm in every row (at 4 buckets it IS groups
+    of one), so one group per worker needs no more groups per worker."""
+    if workers <= 1 or len(todo) <= workers:
+        size = 1
+    else:
+        size = min(MAX_GROUP, -(-len(todo) // workers))
+    return [todo[i : i + size] for i in range(0, len(todo), size)]
 
 
 def auto_buckets(spark, source: str, target_bytes: int = 512 << 20) -> int:
@@ -254,24 +263,21 @@ def run(args, spark=None) -> dict:
             )
     commit_lock = threading.Lock()  # snapshot catalog + lineage are
     # last-writer-wins files; commits must serialize. Compute does not:
-    # buckets are independent Spark jobs and the scheduler interleaves
+    # groups are independent Spark jobs and the scheduler interleaves
     # their tasks, so a small thread pool keeps all cores busy while one
-    # bucket sits in its (short, locked) commit section.
+    # group sits in its (short, locked) commit section.
 
     # partitionBy copy of ``tier``: the fused tier write splits its rows
     # per tier directory, and the data files keep their tier column
     TIER_DIR = "tier_dir"
 
-    def _run_plan(buckets: list[int], grouped: bool) -> None:
-        """The job plan over ``buckets``, committed per bucket.
+    def _run_plan(buckets: list[int]) -> None:
+        """The job plan over a group of ``buckets``, committed per bucket.
 
-        Both schedulers run this plan; ``grouped`` only picks how data
-        files are written and how audits are read. Per-bucket
-        (``grouped=False``, one bucket): one write per stage, and each
-        audit rides the job it audits as an ``observe()``. Global
-        (``grouped=True``, every pending bucket): ONE partitionBy(bucket)
-        write per stage, sliced per bucket directory for the commits, and
-        each audit is one groupBy(bucket) aggregate."""
+        Every data-file write is ONE Spark job over the group, its files
+        split per bucket directory for the commits, and every audit rides
+        the job that materializes its frame as ONE ``observe()`` holding a
+        struct of aggregates per bucket (``CASE WHEN bucket = b``)."""
         t0 = time.time()
         lineage: dict[int, list[LineageRow]] = {b: [] for b in buckets}
         persisted = []
@@ -292,41 +298,37 @@ def run(args, spark=None) -> dict:
                 )
             )
 
-        def tap(df, exprs):
-            """(frame to run on, reader of its audit per bucket)."""
-            if grouped:
-                return df, lambda: grouped_audit(df, [bcol], exprs, buckets)
-            df, obs = attach_audit(df, exprs)
-            return df, lambda: {buckets[0]: read_audit(obs)}
+        def tap(df, audit, where):
+            """(``df`` observing ``audit(where=...)`` per key of ``where``,
+            a {key: SQL predicate} map, and the reader of {key: values})."""
+            keys = list(where)
+            df, obs = attach_audit(
+                df, [F.struct(*audit(where[k])).alias(f"k{i}") for i, k in enumerate(keys)]
+            )
+            return df, lambda: {
+                k: read_audit(obs.get[f"k{i}"].asDict()) for i, k in enumerate(keys)
+            }
+
+        # each bucket's audit predicate. Spark inlines an int literal in the
+        # code it compiles for an audit, so in a one-bucket group, whose
+        # rows are all its own, the predicate is "true" (folded away): its
+        # audit code is then the same for every bucket and compiles once
+        per_bucket = {b: f"bucket = {b}" if len(buckets) > 1 else "true" for b in buckets}
 
         def write(table, df, split=()):
             """Write ``df``'s data files lock-free (Iceberg model: files in
             an uninstalled uuid dir are invisible; only the snapshot swap
             serializes) in ONE Spark job → files per (bucket, *split
             values), the rows of each ``split`` value in their own
-            directory."""
-            if grouped:
-                # bucket innermost: one task repeats a part-file name in
-                # every bucket directory it writes, and the retention
-                # rewrite keys a file by its last two path components
-                got = catalog.write_data_files(
-                    table, df.withColumn("bucket", bcol), None, [*split, "bucket"]
-                )
-                return {
-                    (k[-1], *k[:-1]): [dict(f, partition={"bucket": k[-1]}) for f in fs]
-                    for k, fs in got.items()
-                }
-            (b,) = buckets
-            if not split:
-                return {(b,): catalog.write_data_files(table, df, {"bucket": b})}
-            got = catalog.write_data_files(table, df, {"bucket": b}, split)
-            return {(b, *k): fs for k, fs in got.items()}
-
-        def audit_back(files, df, by, exprs, keys):
-            """Global audit: ONE groupBy over the (tiny) files just written."""
-            paths = [f["path"] for fs in files.values() for f in fs]
-            back = spark.read.parquet(*paths) if paths else df.limit(0)
-            return grouped_audit(back, by, exprs, keys)
+            directory. ``df`` carries a ``bucket`` column."""
+            # bucket innermost: one task repeats a part-file name in every
+            # bucket directory it writes, and the retention rewrite keys a
+            # file by its last two path components
+            got = catalog.write_data_files(table, df, None, [*split, "bucket"])
+            return {
+                (k[-1], *k[:-1]): [dict(f, partition={"bucket": k[-1]}) for f in fs]
+                for k, fs in got.items()
+            }
 
         def commit(table, files, *split):
             with commit_lock:
@@ -335,7 +337,7 @@ def run(args, spark=None) -> dict:
                         table, files.get((b, *split), []), {"bucket": b}
                     )
 
-        part = staged.filter(F.col("bucket").isin(buckets)).drop("bucket")
+        part = staged.filter(F.col("bucket").isin(buckets))
 
         def check_gapfill(ins, outs) -> dict[int, int]:
             """Validate the text-equality invariant from the source
@@ -373,8 +375,8 @@ def run(args, spark=None) -> dict:
             # invariant hash are computed map-side from text BEFORE the
             # gap-fill exchange and the text payload is DROPPED — only
             # ~40 B/row crosses the shuffle instead of the raw text; gap
-            # rows get token_count=0, exactly what derive computes from
-            # their "" fill text. The text-equality invariant is an
+            # rows get token_count=0, what derive computes from their
+            # GAP_TEXT. The text-equality invariant is an
             # order-independent multiset checksum (count + Σ xxhash64(conv,
             # turn, text)) of the source rows against the non-gap output
             # rows: equal multisets ⇒ equal (count, Σ), and the carried
@@ -389,30 +391,25 @@ def run(args, spark=None) -> dict:
                 "ts",
                 token_count_col().alias("token_count"),
                 F.xxhash64("conv_id", "turn_idx", "text").alias("_th"),
+                "bucket",
             )
-            src, read_in = tap(narrow, gapfill_in_audit())
-            filled = gapfill(src, carry={"token_count": 0, "_th": None})
-            if grouped:  # its audit is a second consumer
-                filled = filled.persist()
-                persisted.append(filled)
-            filled, read_out = tap(filled, gapfill_out_audit())
+            src, read_in = tap(narrow, gapfill_in_audit, per_bucket)
+            filled = gapfill(src.drop("bucket"), carry={"token_count": 0, "_th": None})
+            filled, read_out = tap(
+                filled.withColumn("bucket", bcol), gapfill_out_audit, per_bucket
+            )
             # derived is persisted ONLY when a second consumer (codec)
             # exists; otherwise the tier write is its sole consumer and
             # caching it just adds reduce-side serialization to the
             # heaviest stage (BENCH/BASELINE.md round-4 read-back note)
-            derived = with_derived(filled.drop("is_gap_filled", "_th"))
+            derived = with_derived(filled.drop("is_gap_filled", "_th", "bucket"))
             if args.codec_chunks:
                 derived = derived.persist()
                 persisted.append(derived)
-                enc = encode_chunks(derived)
-                if not grouped:
-                    enc, obs = attach_audit(enc, codec_audit())
-                codec_files = write("codec_chunks", enc)
-                codec = (
-                    audit_back(codec_files, enc, [bcol], codec_audit(), buckets)
-                    if grouped
-                    else {buckets[0]: read_audit(obs)}
+                enc, read_codec = tap(
+                    encode_chunks(derived).withColumn("bucket", bcol), codec_audit, per_bucket
                 )
+                codec_files = write("codec_chunks", enc)
             # all four tiers in ONE Spark job: the 1m aggregate is merged
             # into every tier inside the plan, with no shuffle beyond the
             # gap-fill's conv_id exchange, and the write splits the rows
@@ -422,25 +419,14 @@ def run(args, spark=None) -> dict:
             # only the O(manifest) snapshot swaps take the lock. It is the
             # 1m table's write; each tier's slice commits to its own table.
             tiers = rollup_merge(rollup_from_turns(derived, TIER_ORDER[0]), TIER_ORDER)
-            out = tiers.withColumn(TIER_DIR, F.col("tier"))
             cols = ["conv_id", "bucket_start", "cnt", "sum_tokens"]
-            if not grouped:  # one observe: a struct of audits per tier
-                out, tier_obs = attach_audit(
-                    out,
-                    [
-                        F.struct(*tier_audit(cols, "bucket_start", f"tier = '{t}'")).alias(t)
-                        for t in TIER_ORDER
-                    ],
-                )
-            files = write(f"rollup_{TIER_ORDER[0]}", out, [TIER_DIR])
             keys = [(b, t) for b in buckets for t in TIER_ORDER]
-            audit = (
-                audit_back(
-                    files, tiers, [bcol, F.col("tier")], tier_audit(cols, "bucket_start"), keys
-                )
-                if grouped
-                else {(buckets[0], t): read_audit(r.asDict()) for t, r in tier_obs.get.items()}
+            out, read_tiers = tap(
+                tiers.withColumn(TIER_DIR, F.col("tier")).withColumn("bucket", bcol),
+                partial(tier_audit, cols, "bucket_start"),
+                {(b, t): f"{per_bucket[b]} AND tier = '{t}'" for b, t in keys},
             )
+            files = write(f"rollup_{TIER_ORDER[0]}", out, [TIER_DIR])
             for b, t in keys:
                 if not files.get((b, t)):
                     # a bucket with no rows: a schema-only file keeps the
@@ -448,13 +434,15 @@ def run(args, spark=None) -> dict:
                     files[(b, t)] = catalog.write_data_files(
                         f"rollup_{t}", tiers.limit(0), {"bucket": b}
                     )
-            # every data file is written: the one check, then the commits
-            # (per-bucket, the gap-fill audits rode the first write)
+            # every data file is written: the one check over the group,
+            # then the commits
             rows_in = check_gapfill(read_in(), read_out())
             if args.codec_chunks:
                 commit("codec_chunks", codec_files)
+                codec = read_codec()
                 for b in buckets:
                     row(b, "codec_chunks", codec[b]["pts"], codec[b]["blobs"])
+            audit = read_tiers()
             for tier in TIER_ORDER:
                 commit(f"rollup_{tier}", files, tier)
                 for b in buckets:
@@ -475,35 +463,28 @@ def run(args, spark=None) -> dict:
             stats["rows_out"] += tier_rows
             stats["buckets_run"] += len(buckets)
 
-    def _run_bucket(i: int, b: int) -> None:
-        if args.fail_after_buckets and i >= args.fail_after_buckets:
-            raise RuntimeError(f"injected failure before bucket {b} (test hook)")
-        _run_plan([b], grouped=False)
+    def _run_group(group: list[int]) -> None:
+        if args.fail_after_buckets and stats["buckets_run"] >= args.fail_after_buckets:
+            raise RuntimeError(f"injected failure before bucket {group[0]} (test hook)")
+        _run_plan(group)
 
-    scheduler = resolve_scheduler(spark.sparkContext.master)
-    per_bucket = scheduler == "per-bucket" or bool(args.fail_after_buckets)
-    if todo and not per_bucket:
-        _run_plan(todo, grouped=True)
-    elif todo:
-        # bucket compute runs in a small thread pool (concurrent Spark
-        # jobs — the cluster scheduler fills slot gaps one bucket's stage
-        # barriers leave); the test kill-hook forces sequential so "fail
-        # after N buckets committed" stays deterministic
-        # pool size scales with the session's cores: 8 workers beat 4
-        # by ~14% on every rep at 32 cores (concurrent bucket pipelines
-        # fill the slot gaps each bucket's stage barriers leave) and tied
-        # at 8 cores — BENCH/ab_workers.json
-        workers = min(len(todo), max(4, engine_cores(spark) // 4))
-        if args.fail_after_buckets:
-            workers = 1
-        if workers <= 1:
-            for i, b in enumerate(todo):
-                _run_bucket(i, b)
-        else:
-            from concurrent.futures import ThreadPoolExecutor
+    # groups run in a small thread pool (concurrent Spark jobs — the
+    # cluster scheduler fills slot gaps one group's stage barriers
+    # leave); the test kill-hook runs one worker, so "fail after N
+    # buckets committed" stays deterministic. The pool scales with the
+    # session's cores: 8 workers beat 4 by ~14% on every rep at 32 cores
+    # and tied at 8 cores — BENCH/ab_workers.json
+    workers = 1 if args.fail_after_buckets else max(4, engine_cores(spark) // 4)
+    groups = bucket_groups(todo, workers)
+    workers = min(len(groups), workers)
+    if workers <= 1:
+        for group in groups:
+            _run_group(group)
+    else:
+        from concurrent.futures import ThreadPoolExecutor
 
-            with ThreadPoolExecutor(max_workers=workers) as pool:
-                list(pool.map(_run_bucket, range(len(todo)), todo))
+        with ThreadPoolExecutor(max_workers=workers) as pool:
+            list(pool.map(_run_group, groups))
     # every bucket has committed: the staged copy of the source is spent
     shutil.rmtree(staging, ignore_errors=True)
     if own_spark:

@@ -46,12 +46,25 @@ def source(synth_lake):
     return synth_lake(6)
 
 
-@pytest.fixture
-def use_scheduler(monkeypatch):
-    """``use_scheduler(name)``: the job runs ``name`` whatever its master."""
+#: bucket-group shapes the job can take: groups of 1 (the old per-bucket
+#: scheduler), one group (the old global one) and an uneven split (8
+#: buckets in groups of 3/3/2)
+GROUP_SHAPES = {
+    "per-bucket": lambda todo: [[b] for b in todo],
+    "global": lambda todo: [todo],
+    "uneven": lambda todo: [todo[i : i + 3] for i in range(0, len(todo), 3)],
+}
 
-    def use(name):
-        monkeypatch.setattr(rollup_job, "resolve_scheduler", lambda master: name)
+
+@pytest.fixture
+def use_groups(monkeypatch):
+    """``use_groups(shape)``: the job splits its pending buckets into the
+    groups of ``GROUP_SHAPES[shape]``, whatever its pool."""
+
+    def use(shape):
+        monkeypatch.setattr(
+            rollup_job, "bucket_groups", lambda todo, workers: GROUP_SHAPES[shape](todo)
+        )
 
     return use
 
@@ -301,44 +314,42 @@ def test_staging_prunes_per_bucket_scan(spark, tmp_path, source):
     assert "PartitionFilters" in plan and "bucket" in plan.split("PartitionFilters")[1][:120]
 
 
-def test_global_scheduler_bit_identical(spark, tmp_path, source, use_scheduler):
-    """The global scheduler (one partitioned job per stage, per-bucket
-    manifest slicing) must produce byte-identical tier tables and the
-    same per-(stage, bucket) lineage cardinality as the per-bucket
-    thread-pool scheduler — including with gapfill + codec on, and with
-    an empty bucket in play (6 convs over 8 buckets)."""
-    wh_g, wh_p = str(tmp_path / "glob"), str(tmp_path / "perb")
-    use_scheduler("global")
-    stats_g = run_job(
-        job_args(source, warehouse=wh_g, run_id="sched", buckets=8, codec_chunks=True),
-        spark=spark,
-    )
-    use_scheduler("per-bucket")
-    stats_p = run_job(
-        job_args(source, warehouse=wh_p, run_id="sched", buckets=8, codec_chunks=True),
-        spark=spark,
-    )
-    assert stats_g["buckets_run"] == stats_p["buckets_run"] == 8
-    assert stats_g["rows_out"] == stats_p["rows_out"]
-    cat_g, cat_p = LocalSnapshotCatalog(wh_g), LocalSnapshotCatalog(wh_p)
-    for tier in ("1m", "5m", "1h", "1d"):
-        a = read_sorted(cat_g, spark, f"rollup_{tier}")
-        b = read_sorted(cat_p, spark, f"rollup_{tier}")
-        pd.testing.assert_frame_equal(a, b, check_exact=True)
-    lin_g = cat_g.read(spark, "lineage").toPandas()
-    lin_p = cat_p.read(spark, "lineage").toPandas()
-    key = ["stage", "partition_key", "rows_in", "rows_out", "checksum"]
-    pd.testing.assert_frame_equal(
-        lin_g[key].sort_values(key).reset_index(drop=True),
-        lin_p[key].sort_values(key).reset_index(drop=True),
-        check_exact=True,
-    )
-    # codec table identical blob-for-blob
-    cg = cat_g.read(spark, "codec_chunks").toPandas().sort_values(
-        ["conv_id", "chunk_start"]).reset_index(drop=True)
-    cp = cat_p.read(spark, "codec_chunks").toPandas().sort_values(
-        ["conv_id", "chunk_start"]).reset_index(drop=True)
-    pd.testing.assert_frame_equal(cg[sorted(cg.columns)], cp[sorted(cp.columns)])
+def test_global_scheduler_bit_identical(spark, tmp_path, source, use_groups):
+    """One group of every bucket (the old global scheduler's shape) and an
+    uneven 3/3/2 split must write the same tier tables, codec blobs and
+    per-(stage, bucket) lineage as groups of one bucket — with gapfill +
+    codec on, and with empty buckets in play (6 convs over 8 buckets)."""
+
+    def run(shape):
+        wh = str(tmp_path / shape)
+        use_groups(shape)
+        stats = run_job(
+            job_args(source, warehouse=wh, run_id="sched", buckets=8, codec_chunks=True),
+            spark=spark,
+        )
+        assert stats["buckets_run"] == 8
+        cat = LocalSnapshotCatalog(wh)
+        lin = cat.read(spark, "lineage").toPandas()
+        key = ["stage", "partition_key", "rows_in", "rows_out", "checksum"]
+        codec = cat.read(spark, "codec_chunks").toPandas()
+        return (
+            stats["rows_out"],
+            {t: read_sorted(cat, spark, f"rollup_{t}") for t in TIER_ORDER},
+            lin[key].sort_values(key).reset_index(drop=True),
+            codec.sort_values(["conv_id", "chunk_start"]).reset_index(drop=True)[
+                sorted(codec.columns)
+            ],
+        )
+
+    rows, tiers, lin, codec = run("per-bucket")
+    for shape in ("global", "uneven"):
+        rows_g, tiers_g, lin_g, codec_g = run(shape)
+        assert rows_g == rows, shape
+        for t in TIER_ORDER:
+            pd.testing.assert_frame_equal(tiers_g[t], tiers[t], check_exact=True)
+        pd.testing.assert_frame_equal(lin_g, lin, check_exact=True)
+        # codec table identical blob-for-blob
+        pd.testing.assert_frame_equal(codec_g, codec)
 
 
 def test_two_phase_overwrite_invisible_until_commit(spark, tmp_path):
@@ -424,9 +435,9 @@ def test_resume_under_changed_bucket_modulus_reruns_everything(spark, tmp_path, 
 
 
 @pytest.mark.parametrize("codec_chunks", [False, True])
-@pytest.mark.parametrize("scheduler", ["per-bucket", "global"])
+@pytest.mark.parametrize("shape", ["per-bucket", "global"])
 def test_text_equality_violation_fails_before_commit(
-    spark, tmp_path, monkeypatch, source, use_scheduler, scheduler, codec_chunks
+    spark, tmp_path, monkeypatch, source, use_groups, shape, codec_chunks
 ):
     """A gap-fill that loses a source turn must fail the job with an error
     naming the bucket, after the first data-file write and before any
@@ -441,7 +452,7 @@ def test_text_equality_violation_fails_before_commit(
         return out.filter(~((F.col("conv_id") == victim) & (F.col("turn_idx") == 0)))
 
     monkeypatch.setattr(rollup_job, "gapfill", lossy_gapfill)
-    use_scheduler(scheduler)
+    use_groups(shape)
     wh = str(tmp_path / "wh")
     args = job_args(source, warehouse=wh, run_id="bad", buckets=1, codec_chunks=codec_chunks)
     with pytest.raises(RuntimeError, match="invariant violated") as err:
@@ -458,9 +469,48 @@ def test_text_equality_violation_fails_before_commit(
     assert list(lin["stage"]) == ["stage_source"]
 
 
-@pytest.mark.parametrize("scheduler", ["per-bucket", "global"])
+def test_text_equality_violation_names_only_its_bucket_in_a_group(
+    spark, tmp_path, monkeypatch, source, use_groups
+):
+    """One group of four buckets, a turn lost in exactly one of them: the
+    error names that bucket alone, with its in/out row counts, and no
+    bucket of the group commits anything."""
+    from biomed_timeseries_preprocessing_spark.plans.lineage import bucket_of
+
+    convs = spark.read.parquet(source).select(
+        "conv_id", bucket_of(F.col("conv_id"), 4).alias("b")
+    ).distinct().collect()
+    victim, bad = min((r.conv_id, r.b) for r in convs)
+    assert len({r.b for r in convs}) > 1  # other buckets of the group hold rows
+    real_gapfill = rollup_job.gapfill
+
+    def lossy_gapfill(df, **kw):
+        out = real_gapfill(df, **kw)
+        return out.filter(~((F.col("conv_id") == victim) & (F.col("turn_idx") == 0)))
+
+    monkeypatch.setattr(rollup_job, "gapfill", lossy_gapfill)
+    use_groups("global")
+    wh = str(tmp_path / "wh")
+    with pytest.raises(RuntimeError, match="invariant violated") as err:
+        run_job(job_args(source, warehouse=wh, run_id="bad", buckets=4), spark=spark)
+    msg = str(err.value)
+    assert f"bucket(s) [{bad}]" in msg, msg
+    counts = re.findall(r"bucket (\d+): in=(\d+) rows, out=(\d+) rows", msg)
+    assert [int(b) for b, _, _ in counts] == [bad], msg
+    (_, n_in, n_out), = counts
+    assert int(n_out) == int(n_in) - 1
+    n_bad = spark.read.parquet(source).filter(bucket_of(F.col("conv_id"), 4) == bad).count()
+    assert int(n_in) == n_bad
+
+    cat = LocalSnapshotCatalog(wh)
+    for table in ("rollup_1m", "rollup_5m", "rollup_1h", "rollup_1d"):
+        assert cat.snapshots(table) == []
+    assert list(cat.read(spark, "lineage").toPandas()["stage"]) == ["stage_source"]
+
+
+@pytest.mark.parametrize("shape", ["per-bucket", "global", "uneven"])
 def test_failed_tier_write_commits_no_codec_snapshot(
-    spark, tmp_path, monkeypatch, source, use_scheduler, scheduler
+    spark, tmp_path, monkeypatch, source, use_groups, shape
 ):
     """The codec archive commits with the tiers, after every write: a tier
     write that raises leaves no codec_chunks snapshot and no lineage row
@@ -473,7 +523,7 @@ def test_failed_tier_write_commits_no_codec_snapshot(
         return real_write(self, table, *a, **k)
 
     monkeypatch.setattr(LocalSnapshotCatalog, "write_data_files", failing_write)
-    use_scheduler(scheduler)
+    use_groups(shape)
     wh = str(tmp_path / "wh")
     with pytest.raises(OSError, match="injected rollup_1m write failure"):
         run_job(job_args(source, warehouse=wh, run_id="w", codec_chunks=True), spark=spark)
@@ -482,14 +532,14 @@ def test_failed_tier_write_commits_no_codec_snapshot(
     assert list(cat.read(spark, "lineage").toPandas()["stage"]) == ["stage_source"]
 
 
-@pytest.mark.parametrize("scheduler", ["per-bucket", "global"])
-def test_job_tiers_equal_inline_cascade(spark, tmp_path, source, use_scheduler, scheduler):
+@pytest.mark.parametrize("shape", ["per-bucket", "global", "uneven"])
+def test_job_tiers_equal_inline_cascade(spark, tmp_path, source, use_groups, shape):
     """Every tier table the job commits equals the inline reference
     ``rollup_cascade(with_derived(gapfill(src)))`` exactly, column for
-    column, under both schedulers and with the codec on (a second
+    column, whatever its bucket groups and with the codec on (a second
     consumer of the derived frame)."""
     wh = str(tmp_path / "wh")
-    use_scheduler(scheduler)
+    use_groups(shape)
     run_job(job_args(source, warehouse=wh, run_id="ref", codec_chunks=True), spark=spark)
     cat = LocalSnapshotCatalog(wh)
     ref = reference_tiers(spark, source)
@@ -500,16 +550,16 @@ def test_job_tiers_equal_inline_cascade(spark, tmp_path, source, use_scheduler, 
         )
 
 
-@pytest.mark.parametrize("scheduler", ["per-bucket", "global"])
+@pytest.mark.parametrize("shape", ["per-bucket", "global", "uneven"])
 def test_empty_bucket_commits_a_schema_only_file_per_tier(
-    spark, tmp_path, synth_lake, use_scheduler, scheduler
+    spark, tmp_path, synth_lake, use_groups, shape
 ):
     """One conversation over four buckets leaves three buckets without
     rows. Each of them still commits one file to every tier table, with no
     rows and all of the tier's columns, so every tier table stays readable
     with its columns whichever buckets hold rows."""
     wh = str(tmp_path / "wh")
-    use_scheduler(scheduler)
+    use_groups(shape)
     run_job(job_args(synth_lake(1), warehouse=wh, run_id="e", buckets=4), spark=spark)
     cat = LocalSnapshotCatalog(wh)
     ref = reference_tiers(spark, synth_lake(1))
@@ -524,7 +574,7 @@ def test_empty_bucket_commits_a_schema_only_file_per_tier(
 
 
 def test_tier_frame_plans_one_exchange_and_no_read_back(
-    spark, tmp_path, monkeypatch, source, use_scheduler
+    spark, tmp_path, monkeypatch, source, use_groups
 ):
     """Per bucket, all four tiers are ONE data-file write, and the frame
     it writes plans exactly one Exchange, the gap-fill's conv_id shuffle,
@@ -540,7 +590,7 @@ def test_tier_frame_plans_one_exchange_and_no_read_back(
     monkeypatch.setattr(LocalSnapshotCatalog, "write_data_files", spy)
     wh = str(tmp_path / "wh")
     # 6 conversations over 3 buckets: every bucket holds rows
-    use_scheduler("per-bucket")
+    use_groups("per-bucket")
     run_job(job_args(source, warehouse=wh, run_id="shape", buckets=3), spark=spark)
     assert [t for t, _ in writes] == ["rollup_1m"] * 3
     for _, df in writes:

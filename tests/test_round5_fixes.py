@@ -40,18 +40,62 @@ def test_compare_fails_on_negative_zero_like_the_driver_hash():
     assert compare("same", spark_pdf, spark_pdf.copy()) == []
 
 
-def test_resolve_scheduler_auto_follows_deployment_shape():
-    # VERDICT r4 #4: the scheduler flips itself — per-bucket thread pool
-    # on a single JVM, one partitioned job per stage on a wide cluster
-    from jobs.rollup_job import resolve_scheduler
+def test_bucket_groups_cover_pending_in_order():
+    # one rule sizes the job's bucket groups from (pending, pool workers)
+    from jobs.rollup_job import MAX_GROUP, bucket_groups
 
-    assert resolve_scheduler("local[32]") == "per-bucket"
-    assert resolve_scheduler("local[*]") == "per-bucket"
-    assert resolve_scheduler("local") == "per-bucket"
-    assert resolve_scheduler("yarn") == "global"
-    assert resolve_scheduler("spark://host:7077") == "global"
-    assert resolve_scheduler("k8s://https://host:443") == "global"
-    assert resolve_scheduler("local-cluster[2,2,1024]") == "global"
+    for workers in (1, 4, 8, 13):
+        for n in (0, 1, 3, 4, 5, 8, 16, 32, 33, 100, 1000, 5000):
+            todo = [b * 3 + 1 for b in range(n)]  # resume: any subset, in order
+            groups = bucket_groups(todo, workers)
+            # every pending bucket lands in exactly one group, in order
+            assert [b for g in groups for b in g] == todo
+            assert all(groups)
+            assert max(map(len, groups), default=0) <= MAX_GROUP == 64
+            if n <= workers or workers == 1:
+                # a worker per bucket, or the kill hook's one-worker run
+                assert groups == [[b] for b in todo]
+            else:
+                # equal groups (the last may be short), at most one per
+                # worker unless that would put more than MAX_GROUP in one
+                size = len(groups[0])
+                assert all(len(g) == size for g in groups[:-1]) and size > 1
+                assert len(groups) <= workers or size == MAX_GROUP
+    # the benchmark's shapes: 4 buckets at local[4]; 6 killed after 3, then 3
+    assert bucket_groups([0, 1, 2, 3], 4) == [[0], [1], [2], [3]]
+    assert bucket_groups(list(range(6)), 1) == [[b] for b in range(6)]
+    assert bucket_groups([3, 4, 5], 4) == [[3], [4], [5]]
+
+
+def test_rollup_job_options_are_pinned(monkeypatch):
+    # a new knob on the job has to change this test
+    import argparse
+
+    from jobs.rollup_job import parse_args
+
+    added = []
+    real = argparse.ArgumentParser.add_argument
+
+    def spy(self, *names, **kw):
+        added.append((names, kw))
+        return real(self, *names, **kw)
+
+    monkeypatch.setattr(argparse.ArgumentParser, "add_argument", spy)
+    args = parse_args(["--source", "s", "--warehouse", "w", "--run-id", "r", "--gapfill"])
+    options = {n for names, _ in added for n in names} - {"-h", "--help"}
+    assert options == {
+        "--source",
+        "--warehouse",
+        "--run-id",
+        "--buckets",
+        "--codec-chunks",
+        "--fail-after-buckets",
+        "--gapfill",
+    }
+    # --gapfill is accepted, hidden from -h, and changes nothing
+    hidden = {n for names, kw in added if kw.get("help") is argparse.SUPPRESS for n in names}
+    assert hidden == {"--gapfill"}
+    assert (args.buckets, args.codec_chunks, args.fail_after_buckets) == (0, False, 0)
 
 
 def test_parse_local_cores_cluster_masters_are_unpinned():
