@@ -366,13 +366,16 @@ def encode_chunks(derived, chunk_seconds: int = 3600):
     shape the reference's per-file save loop has (``Save_Agent.py:90-136``)
     — with real compression instead of raw npz.
     """
-    from pyspark.sql import functions as F
+    from ..operators.rollup import bucket_start
 
-    us = chunk_seconds * 1_000_000
-    with_chunk = derived.withColumn(
-        "chunk_start",
-        F.timestamp_micros(F.floor(F.unix_micros(F.col("ts")) / us).cast("long") * us),
-    ).select("conv_id", "chunk_start", "ts", "turn_idx", "latency_ms", "token_count")
+    with_chunk = derived.selectExpr(
+        "conv_id",
+        f"{bucket_start('ts', chunk_seconds)} AS chunk_start",
+        "ts",
+        "turn_idx",
+        "latency_ms",
+        "token_count",
+    )
 
     # partition by (conv_id, chunk_start) — encoding only needs per-chunk
     # locality, so a hot conversation's history spreads across tasks

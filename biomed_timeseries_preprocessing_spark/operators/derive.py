@@ -22,15 +22,18 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 
-def token_count_col(text=None):
-    """Whitespace token count; empty/NULL text → 0. JVM-side regex split —
-    deliberately not a Python UDF."""
-    trimmed = F.trim(text if text is not None else F.col("text"))
-    return (
-        F.when(trimmed.isNull() | (trimmed == ""), F.lit(0))
-        .otherwise(F.size(F.split(trimmed, r"\s+")))
-        .cast("int")
-    )
+#: Whitespace token count of ``text``; empty/NULL text → 0. JVM-side
+#: regex split — deliberately not a Python UDF. SQL text, as are the
+#: other plan operators (operators/rollup.py says why).
+TOKEN_COUNT = (
+    "CAST(CASE WHEN trim(text) IS NULL OR trim(text) = '' THEN 0"
+    " ELSE size(split(trim(text), '\\\\s+')) END AS INT)"
+)
+#: ts − lag(ts) over the stable (conv_id, turn_idx) order, in whole ms
+LATENCY_MS = (
+    "CAST(floor((unix_micros(ts)"
+    " - unix_micros(lag(ts) OVER (PARTITION BY conv_id ORDER BY turn_idx))) / 1000) AS BIGINT)"
+)
 
 
 def with_neighbor_context(
@@ -88,15 +91,11 @@ def with_derived(df: DataFrame) -> DataFrame:
     hashes+counts text BEFORE its gap-fill shuffle and drops the
     payload; recomputing here would both be wrong — the text column is
     gone — and defeat that narrow-shuffle plan)."""
-    w = Window.partitionBy("conv_id").orderBy("turn_idx")
-    lat_us = F.unix_micros(F.col("ts")) - F.unix_micros(F.lag("ts").over(w))
-    if "token_count" in df.columns:
-        out_cols = [c for c in df.columns if c != "token_count"]
-        return df.withColumn(
-            "latency_ms", F.floor(lat_us / 1000).cast("long")
-        ).select(*out_cols, "latency_ms", "token_count")
-    return (
-        df.withColumn("token_count", token_count_col())
-        .withColumn("latency_ms", F.floor(lat_us / 1000).cast("long"))
-        .select(*df.columns, "latency_ms", "token_count")
+    cols = [f"`{c}`" for c in df.columns]
+    latency = f"{LATENCY_MS} AS latency_ms"
+    if "`token_count`" in cols:
+        cols.remove("`token_count`")
+        return df.selectExpr(*cols, latency, "token_count")
+    return df.selectExpr("*", f"{TOKEN_COUNT} AS token_count").selectExpr(
+        *cols, latency, "token_count"
     )

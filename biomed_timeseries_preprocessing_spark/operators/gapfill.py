@@ -28,9 +28,9 @@ Everything is window functions over the stable (conv_id, turn_idx) order
 
 from __future__ import annotations
 
+import math
+
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
-from pyspark.sql.window import Window
 
 
 OUT_COLS = ["conv_id", "turn_idx", "role", "text", "tool", "ts", "is_gap_filled"]
@@ -39,6 +39,52 @@ OUT_COLS = ["conv_id", "turn_idx", "role", "text", "tool", "ts", "is_gap_filled"
 # before the gap-fill and carries token_count=0 for gap rows, because
 # derive computes 0 tokens from this value.
 GAP_TEXT = ""
+
+# The plan in SQL text (operators/rollup.py says why). Every window runs
+# over the stable (conv_id, turn_idx) order.
+_W = "OVER (PARTITION BY conv_id ORDER BY turn_idx)"
+_W_BACK = (
+    "OVER (PARTITION BY conv_id ORDER BY turn_idx"
+    " ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)"
+)
+#: the next present turn, and the running forward-fill of role/tool
+STEP = [
+    f"lead(turn_idx) {_W} AS _next_idx",
+    f"unix_micros(lead(ts) {_W}) AS _next_us",
+    f"last(role, true) {_W_BACK} AS _role_f",
+    f"last(tool, true) {_W_BACK} AS _tool_f",
+]
+#: a present row and the missing positions up to the next present turn
+EXPLODE = (
+    "explode(CASE WHEN _next_idx > turn_idx + 1 THEN sequence(turn_idx, _next_idx - 1)"
+    " ELSE array(turn_idx) END) AS turn_idx"
+)
+IS_GAP = "turn_idx != _prev_idx"
+# exact integer interpolation with explicit FLOOR semantics (pmod-based
+# floordiv — matches DuckDB/pandas ``//`` even when timestamps decrease
+# within a conversation); the step denominator (next_idx - prev_idx) is
+# always positive for generated gap rows.
+INTERP = (
+    "timestamp_micros(unix_micros(ts) + ("
+    "((_next_us - unix_micros(ts)) * (turn_idx - _prev_idx)"
+    " - pmod((_next_us - unix_micros(ts)) * (turn_idx - _prev_idx), _next_idx - _prev_idx))"
+    " DIV (_next_idx - _prev_idx)))"
+)
+
+
+def _fill(gap: str, present: str, name: str) -> str:
+    return f"CASE WHEN {IS_GAP} THEN {gap} ELSE {present} END AS {name}"
+
+
+def _sql_value(v) -> str:
+    """``v`` as a SQL literal: NULL, a boolean or a finite number (a
+    float's repr is the shortest text that reads back as the same
+    double)."""
+    if v is None:
+        return "NULL"
+    if isinstance(v, (bool, int)) or (isinstance(v, float) and math.isfinite(v)):
+        return repr(v)
+    raise TypeError(f"gap value {v!r}: expected None, a boolean or a finite number")
 
 
 def gapfill(
@@ -75,29 +121,13 @@ def gapfill(
     window, so the derive lag that follows in the rollup job re-uses
     this exchange instead of re-shuffling the text payload."""
     carry = carry or {}
-    has_text = "text" in turns.columns
-    payload = (["text"] if has_text else []) + list(carry)
-    w = Window.partitionBy("conv_id").orderBy("turn_idx")
-    w_back = w.rowsBetween(Window.unboundedPreceding, 0)
-    stepped = turns.select(
+    schema = turns.schema
+    has_text = "text" in schema.fieldNames()
+    payload = (["text"] if has_text else []) + [f"`{c}`" for c in carry]
+    stepped = turns.selectExpr("conv_id", "turn_idx", "role", *payload, "tool", "ts", *STEP)
+    ex = stepped.selectExpr(
         "conv_id",
-        "turn_idx",
-        "role",
-        *payload,
-        "tool",
-        "ts",
-        F.lead("turn_idx").over(w).alias("_next_idx"),
-        F.unix_micros(F.lead("ts").over(w)).alias("_next_us"),
-        F.last("role", ignorenulls=True).over(w_back).alias("_role_f"),
-        F.last("tool", ignorenulls=True).over(w_back).alias("_tool_f"),
-    )
-    idxs = F.when(
-        F.col("_next_idx") > F.col("turn_idx") + F.lit(1),
-        F.sequence(F.col("turn_idx"), F.col("_next_idx") - F.lit(1)),
-    ).otherwise(F.array(F.col("turn_idx")))
-    ex = stepped.select(
-        "conv_id",
-        F.col("turn_idx").alias("_prev_idx"),
+        "turn_idx AS _prev_idx",
         "role",
         *payload,
         "tool",
@@ -106,39 +136,17 @@ def gapfill(
         "_next_us",
         "_role_f",
         "_tool_f",
-        F.explode(idxs).alias("turn_idx"),
+        EXPLODE,
     )
-    is_gap = F.col("turn_idx") != F.col("_prev_idx")
-    # exact integer interpolation with explicit FLOOR semantics
-    # (pmod-based floordiv — matches DuckDB/pandas ``//`` even when
-    # timestamps decrease within a conversation); the step denominator
-    # (next_idx - prev_idx) is always positive for generated gap rows.
-    interp = F.timestamp_micros(
-        F.unix_micros(F.col("ts"))
-        + F.expr(
-            "((_next_us - unix_micros(ts)) * (turn_idx - _prev_idx)"
-            " - pmod((_next_us - unix_micros(ts)) * (turn_idx - _prev_idx), _next_idx - _prev_idx))"
-            " DIV (_next_idx - _prev_idx)"
-        )
-    )
-    out = [
-        F.col("conv_id"),
-        F.col("turn_idx"),
-        F.when(is_gap, F.col("_role_f")).otherwise(F.col("role")).alias("role"),
-    ]
+    out = ["conv_id", "turn_idx", _fill("_role_f", "role", "role")]
     if has_text:
-        out.append(
-            F.when(is_gap, F.lit(GAP_TEXT)).otherwise(F.col("text")).alias("text")
-        )
+        out.append(_fill(f"'{GAP_TEXT}'", "text", "text"))
     out += [
-        F.when(is_gap, F.col("_tool_f")).otherwise(F.col("tool")).alias("tool"),
-        F.when(is_gap, interp).otherwise(F.col("ts")).alias("ts"),
-        is_gap.alias("is_gap_filled"),
+        _fill("_tool_f", "tool", "tool"),
+        _fill(INTERP, "ts", "ts"),
+        f"{IS_GAP} AS is_gap_filled",
     ]
     for c, gap_value in carry.items():
-        out.append(
-            F.when(is_gap, F.lit(gap_value).cast(turns.schema[c].dataType))
-            .otherwise(F.col(c))
-            .alias(c)
-        )
-    return ex.select(*out)
+        dtype = schema[c].dataType.simpleString()
+        out.append(_fill(f"CAST({_sql_value(gap_value)} AS {dtype})", f"`{c}`", f"`{c}`"))
+    return ex.selectExpr(*out)

@@ -16,14 +16,19 @@ duplicating it.
 from __future__ import annotations
 
 import datetime as dt
+from concurrent.futures import ThreadPoolExecutor
 
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
-from ..sources.catalog import LocalSnapshotCatalog
+from ..sources.catalog import CommitConflictError, LocalSnapshotCatalog
 
 #: default horizons per tier (seconds) — raw-most expires first
 DEFAULT_RETENTION = {"1m": 7 * 86400, "5m": 30 * 86400, "1h": 180 * 86400, "1d": None}
+
+#: rewrites of a tier retried from the current snapshot after a commit
+#: landed on the table mid-rewrite, before the conflict is raised
+COMMIT_RETRIES = 3
 
 
 def expire_rewrite(
@@ -39,6 +44,22 @@ def expire_rewrite(
     return catalog.overwrite(spark, table, F.col(ts_col) >= F.lit(older_than))
 
 
+def _expire_tier(
+    catalog: LocalSnapshotCatalog, spark: SparkSession, table: str, cutoff: dt.datetime
+) -> int:
+    """``expire_rewrite`` of one table (0 rows when it has no data),
+    retried on a commit conflict: each try rewrites the then-current
+    snapshot, so the commit that landed meanwhile is kept."""
+    for attempt in range(COMMIT_RETRIES + 1):
+        try:
+            return expire_rewrite(catalog, spark, table, cutoff)
+        except FileNotFoundError:
+            return 0
+        except CommitConflictError:
+            if attempt == COMMIT_RETRIES:
+                raise
+
+
 def apply_retention(
     catalog: LocalSnapshotCatalog,
     spark: SparkSession,
@@ -47,16 +68,22 @@ def apply_retention(
     table_prefix: str = "rollup_",
 ) -> dict[str, int]:
     """Run expiry across all tiers per their horizons; returns
-    tier → rows removed."""
+    tier → rows removed.
+
+    Each tier is its own table, with its own commit lock, so the tiers
+    rewrite concurrently: one thread (and one Spark job at a time) per
+    tier with a horizon."""
     retention = retention or DEFAULT_RETENTION
-    removed: dict[str, int] = {}
-    for tier, horizon in retention.items():
-        if horizon is None:
-            continue
-        cutoff = now - dt.timedelta(seconds=horizon)
-        table = f"{table_prefix}{tier}"
-        try:
-            removed[tier] = expire_rewrite(catalog, spark, table, cutoff)
-        except FileNotFoundError:
-            removed[tier] = 0
-    return removed
+    cutoffs = {
+        tier: now - dt.timedelta(seconds=horizon)
+        for tier, horizon in retention.items()
+        if horizon is not None
+    }
+    if not cutoffs:
+        return {}
+    with ThreadPoolExecutor(max_workers=len(cutoffs)) as pool:
+        removed = {
+            tier: pool.submit(_expire_tier, catalog, spark, f"{table_prefix}{tier}", cutoff)
+            for tier, cutoff in cutoffs.items()
+        }
+    return {tier: f.result() for tier, f in removed.items()}

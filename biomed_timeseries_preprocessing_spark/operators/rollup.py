@@ -28,11 +28,23 @@ Bucket assignment is pure integer math on microseconds — the analog of
 the reference's sample-index window cursor ``start + win <= len``
 (``edf_reader.py:174-213``) without its float-rescale truncation bugs
 (``edf_reader.py:139-150``).
+
+SQL text, not column functions. Every projection and aggregate of the
+plan operators (here, in ``gapfill``, ``derive``, the codec's chunk key,
+the streaming 1m tier and the rollup job's narrow projection) is SQL
+text applied by ``selectExpr``/``F.expr``. The driver builds a plan
+through Py4J, at least one round trip per column-function call
+(``F.col``, ``F.when``, ``.alias``, ...), where the JVM parses a whole
+SQL expression in one. Built from column functions, the tier frame of
+a group plan (gap-fill → derive → 1m → every tier) took ~2,450 round
+trips of serial driver work; as SQL text it takes ~230
+(BENCH/plan_build.json; ``tests/test_plans.py`` holds the budget). The
+optimized plans are the same, so the outputs are too.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 TIER_SECONDS: dict[str, int] = {"1m": 60, "5m": 300, "1h": 3600, "1d": 86400}
@@ -55,62 +67,76 @@ STATE_COLS = [
 ]
 
 
-def bucket_start(ts_col, seconds: int):
-    """floor(ts, seconds) as timestamp via exact integer µs arithmetic."""
+def bucket_start(ts: str, seconds: int) -> str:
+    """floor(``ts``, seconds) as a timestamp via exact integer µs
+    arithmetic, as SQL text over the SQL expression ``ts``."""
     us = seconds * 1_000_000
-    return F.timestamp_micros(F.floor(F.unix_micros(ts_col) / us).cast("long") * us)
+    return f"timestamp_micros(CAST(floor(unix_micros({ts}) / {us}) AS BIGINT) * {us})"
 
 
-def _last(ts: str, turn_idx: str, latency: str, tokens: str) -> Column:
+def _last(ts: str, turn_idx: str, latency: str, tokens: str) -> str:
     """The last row's state, as ONE max over a struct whose leading
     fields are the (ts, turn_idx) ordering — (ts, turn_idx) is unique per
     conversation, so lexicographic struct max selects exactly the row
     four max_by(col, struct(ts, turn_idx)) aggregates would, with one
     aggregation buffer and one comparison per row (the payload fields
     after the unique prefix are never compared)."""
-    return F.max(
-        F.struct(
-            F.col(ts).alias("last_ts"),
-            F.col(turn_idx).alias("last_turn_idx"),
-            F.col(latency).alias("last_latency"),
-            F.col(tokens).alias("last_token_count"),
-        )
-    ).alias("_last")
-
-
-def _tier_rows(agg: DataFrame, tier: Column) -> DataFrame:
-    """A tier's rows from its aggregate, in ONE projection: the mergeable
-    state (``_last`` unpacked), ``tier``, and the means derived from exact
-    integer sums — the only float math in the rollup path, applied
-    identically at every tier (File_Struct.py:388-396 analog: finalize
-    from partials, never accumulate floats)."""
-    return agg.select(
-        "conv_id", "bucket_start",
-        *[c for c in STATE_COLS if not c.startswith("last_")], "_last.*",
-        tier.alias("tier"),
-        F.when(
-            F.col("n_latency") > 0,
-            F.col("sum_latency").cast("double") / F.col("n_latency").cast("double"),
-        ).alias("mean_latency"),
-        (F.col("sum_tokens").cast("double") / F.col("cnt").cast("double")).alias("mean_tokens"),
+    return (
+        f"max(struct({ts} AS last_ts, {turn_idx} AS last_turn_idx, "
+        f"{latency} AS last_latency, {tokens} AS last_token_count)) AS _last"
     )
 
 
-def turn_aggs() -> list[Column]:
-    """The mergeable state of a tier row aggregated from derived turns
-    (``_last`` packed) — shared by the batch 1m tier and the streaming
-    one, so both carry the same state."""
-    return [
-        F.count(F.lit(1)).alias("cnt"),
-        F.count("latency_ms").alias("n_latency"),
-        F.sum("latency_ms").alias("sum_latency"),
-        F.min("latency_ms").alias("min_latency"),
-        F.max("latency_ms").alias("max_latency"),
-        F.sum("token_count").cast("long").alias("sum_tokens"),
-        F.min("token_count").alias("min_tokens"),
-        F.max("token_count").alias("max_tokens"),
-        _last("ts", "turn_idx", "latency_ms", "token_count"),
-    ]
+#: The mergeable state of a tier row aggregated from derived turns
+#: (``_last`` packed) — shared by the batch 1m tier and the streaming
+#: one, so both carry the same state.
+TURN_AGGS = [
+    "count(1) AS cnt",
+    "count(latency_ms) AS n_latency",
+    "sum(latency_ms) AS sum_latency",
+    "min(latency_ms) AS min_latency",
+    "max(latency_ms) AS max_latency",
+    "CAST(sum(token_count) AS BIGINT) AS sum_tokens",
+    "min(token_count) AS min_tokens",
+    "max(token_count) AS max_tokens",
+    _last("ts", "turn_idx", "latency_ms", "token_count"),
+]
+
+#: The merge of tier rows' state into a coarser tier: the
+#: File_Struct.py:361-399 count-weighted combine.
+MERGE_AGGS = [
+    "sum(cnt) AS cnt",
+    "sum(n_latency) AS n_latency",
+    "sum(sum_latency) AS sum_latency",
+    "min(min_latency) AS min_latency",
+    "max(max_latency) AS max_latency",
+    "sum(sum_tokens) AS sum_tokens",
+    "min(min_tokens) AS min_tokens",
+    "max(max_tokens) AS max_tokens",
+    _last("last_ts", "last_turn_idx", "last_latency", "last_token_count"),
+]
+
+#: A tier row's columns from its aggregate: the mergeable state
+#: (``_last`` unpacked), the tier (``{tier}``: SQL text) and the means
+#: derived from exact integer sums — the only float math in the rollup
+#: path, applied identically at every tier (File_Struct.py:388-396
+#: analog: finalize from partials, never accumulate floats).
+TIER_ROW = [
+    "conv_id",
+    "bucket_start",
+    *[c for c in STATE_COLS if not c.startswith("last_")],
+    "_last.*",
+    "{tier} AS tier",
+    "CASE WHEN n_latency > 0 THEN CAST(sum_latency AS DOUBLE) / CAST(n_latency AS DOUBLE)"
+    " END AS mean_latency",
+    "CAST(sum_tokens AS DOUBLE) / CAST(cnt AS DOUBLE) AS mean_tokens",
+]
+
+
+def _tier_rows(agg: DataFrame, tier: str) -> DataFrame:
+    """A tier's rows from its aggregate, in ONE projection (``TIER_ROW``);
+    ``tier`` is SQL text (a literal or the ``tier`` column)."""
+    return agg.selectExpr(*[c.format(tier=tier) for c in TIER_ROW])
 
 
 def rollup_from_turns(derived: DataFrame, tier: str = "1m") -> DataFrame:
@@ -119,11 +145,9 @@ def rollup_from_turns(derived: DataFrame, tier: str = "1m") -> DataFrame:
     Input: output of ``derive.with_derived`` —
     (conv_id, turn_idx, role, text, tool, ts, latency_ms, token_count).
     """
-    secs = TIER_SECONDS[tier]
-    agg = derived.groupBy(
-        "conv_id", bucket_start(F.col("ts"), secs).alias("bucket_start")
-    ).agg(*turn_aggs())
-    return _tier_rows(agg, F.lit(tier))
+    key = F.expr(f"{bucket_start('ts', TIER_SECONDS[tier])} AS bucket_start")
+    agg = derived.groupBy("conv_id", key).agg(*map(F.expr, TURN_AGGS))
+    return _tier_rows(agg, f"'{tier}'")
 
 
 def rollup_merge(tier_df: DataFrame, to_tier: str | list[str]) -> DataFrame:
@@ -139,35 +163,13 @@ def rollup_merge(tier_df: DataFrame, to_tier: str | list[str]) -> DataFrame:
     frame already hash-partitioned by ``conv_id`` (the gap-fill exchange)
     needs no further shuffle."""
     tiers = [to_tier] if isinstance(to_tier, str) else to_tier
-    keys = F.inline(
-        F.array(
-            *[
-                F.struct(
-                    F.lit(t).alias("tier"),
-                    bucket_start(F.col("bucket_start"), TIER_SECONDS[t]).alias(
-                        "bucket_start"
-                    ),
-                )
-                for t in tiers
-            ]
-        )
+    keys = ", ".join(
+        f"struct('{t}' AS tier, {bucket_start('bucket_start', TIER_SECONDS[t])} AS bucket_start)"
+        for t in tiers
     )
-    agg = (
-        tier_df.select("conv_id", *STATE_COLS, keys)
-        .groupBy("conv_id", "tier", "bucket_start")
-        .agg(
-            F.sum("cnt").alias("cnt"),
-            F.sum("n_latency").alias("n_latency"),
-            F.sum("sum_latency").alias("sum_latency"),
-            F.min("min_latency").alias("min_latency"),
-            F.max("max_latency").alias("max_latency"),
-            F.sum("sum_tokens").alias("sum_tokens"),
-            F.min("min_tokens").alias("min_tokens"),
-            F.max("max_tokens").alias("max_tokens"),
-            _last("last_ts", "last_turn_idx", "last_latency", "last_token_count"),
-        )
-    )
-    return _tier_rows(agg, F.col("tier"))
+    exploded = tier_df.selectExpr("conv_id", *STATE_COLS, f"inline(array({keys}))")
+    agg = exploded.groupBy("conv_id", "tier", "bucket_start").agg(*map(F.expr, MERGE_AGGS))
+    return _tier_rows(agg, "tier")
 
 
 def rollup_cascade(derived: DataFrame) -> dict[str, DataFrame]:

@@ -56,26 +56,25 @@ def _on(e: str, where: str | None) -> str:
 # Each audit is a list of SQL aggregates over the rows matching ``where``
 # (all rows when None), so one ``attach_audit`` pass can audit every
 # bucket of a frame that holds several: the rollup job observes one
-# struct of them per bucket (and per tier). SQL text, not column
-# functions: the JVM parses each aggregate in one call, where the
-# column-function form costs a Py4J round trip per function (the four
-# tiers' audits took ~0.14 s that way against ~2 ms, on a 4-vCPU VM).
+# struct of them per bucket (and per tier). SQL text, as every plan
+# operator is (operators/rollup.py says why; the four tiers' audits took
+# ~0.14 s as column functions against ~2 ms, on a 4-vCPU VM).
 
 
 def tier_audit(
     checksum_cols: list[str], extent_col: str, where: str | None = None
-) -> list[Column]:
+) -> list[str]:
     """Row count, min/max extent and the frame checksum of a tier."""
     checksum = f"xxhash64({', '.join(checksum_cols)})"
     return [
-        F.expr(f"count({_on('1', where)}) AS n"),
-        F.expr(f"min({_on(extent_col, where)}) AS lo"),
-        F.expr(f"max({_on(extent_col, where)}) AS hi"),
-        F.expr(f"{_exact_sum(_on(checksum, where))} AS c"),
+        f"count({_on('1', where)}) AS n",
+        f"min({_on(extent_col, where)}) AS lo",
+        f"max({_on(extent_col, where)}) AS hi",
+        f"{_exact_sum(_on(checksum, where))} AS c",
     ]
 
 
-def gapfill_in_audit(where: str | None = None) -> list[Column]:
+def gapfill_in_audit(where: str | None = None) -> list[str]:
     """Source side of the text-equality invariant: rows and Σ of the
     carried per-turn hash ``_th`` = xxhash64(conv_id, turn_idx, text).
 
@@ -96,26 +95,26 @@ def gapfill_in_audit(where: str | None = None) -> list[Column]:
     2^64, c·h(t) for c = 2^k·(odd) hits each reachable value 2^k times,
     so a turn lost or duplicated 2^k times would pass with 2^(k-64)."""
     return [
-        F.expr(f"count({_on('1', where)}) AS n_in"),
-        F.expr(f"{_exact_sum(_on('_th', where))} AS c_in"),
+        f"count({_on('1', where)}) AS n_in",
+        f"{_exact_sum(_on('_th', where))} AS c_in",
     ]
 
 
-def gapfill_out_audit(where: str | None = None) -> list[Column]:
+def gapfill_out_audit(where: str | None = None) -> list[str]:
     """Filled side: total and gap rows, and Σ ``_th`` over the non-gap
     rows — equal multisets of source turns give equal (count, Σ)."""
     return [
-        F.expr(f"count({_on('1', where)}) AS n"),
-        F.expr(f"count_if({_on('is_gap_filled', where)}) AS nf"),
-        F.expr(f"{_exact_sum(_on(_on('_th', 'NOT is_gap_filled'), where))} AS c_out"),
+        f"count({_on('1', where)}) AS n",
+        f"count_if({_on('is_gap_filled', where)}) AS nf",
+        f"{_exact_sum(_on(_on('_th', 'NOT is_gap_filled'), where))} AS c_out",
     ]
 
 
-def codec_audit(where: str | None = None) -> list[Column]:
+def codec_audit(where: str | None = None) -> list[str]:
     """Blobs and encoded points of a codec_chunks write."""
     return [
-        F.expr(f"count({_on('1', where)}) AS blobs"),
-        F.expr(f"sum({_on('n', where)}) AS pts"),
+        f"count({_on('1', where)}) AS blobs",
+        f"sum({_on('n', where)}) AS pts",
     ]
 
 

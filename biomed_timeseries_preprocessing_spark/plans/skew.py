@@ -27,7 +27,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..operators.rollup import TIER_SECONDS, bucket_start, rollup_from_turns, rollup_merge
+from ..operators.rollup import TIER_SECONDS, rollup_from_turns, rollup_merge
 
 
 def with_salt(df: DataFrame, n_salts: int, cols=("ts", "turn_idx")) -> DataFrame:
@@ -58,7 +58,6 @@ def rollup_from_turns_salted(derived: DataFrame, tier: str, n_salts: int = 8) ->
 
 __all__ = [
     "TIER_SECONDS",
-    "bucket_start",
     "rollup_from_turns_salted",
     "with_salt",
 ]

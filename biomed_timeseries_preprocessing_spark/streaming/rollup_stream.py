@@ -16,7 +16,7 @@ aggregation (its per-file partials). This module materializes the same
   ``rollup_merge`` unchanged.
 
 The aggregates and the row projection are the batch 1m tier's own
-(``turn_aggs`` and ``_tier_rows``), so a completed streaming bucket is
+(``TURN_AGGS`` and ``_tier_rows``), so a completed streaming bucket is
 bit-identical to the batch bucket (tested by replaying a batch table
 through the stream). Only the grouping differs: append mode with a
 watermark needs an event-time window, so buckets come from
@@ -30,7 +30,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..operators.rollup import _tier_rows, turn_aggs
+from ..operators.rollup import TURN_AGGS, _tier_rows
 
 
 def streaming_rollup_1m(turns: DataFrame, watermark: str = "10 minutes") -> DataFrame:
@@ -42,11 +42,11 @@ def streaming_rollup_1m(turns: DataFrame, watermark: str = "10 minutes") -> Data
     replays a batch-derived table)."""
     agg = (
         turns.withWatermark("ts", watermark)
-        .groupBy("conv_id", F.window("ts", "1 minute").alias("win"))
-        .agg(*turn_aggs())
-        .withColumn("bucket_start", F.col("win.start"))
+        .groupBy("conv_id", F.expr("window(ts, '1 minute') AS win"))
+        .agg(*map(F.expr, TURN_AGGS))
+        .selectExpr("*", "win.start AS bucket_start")
     )
-    return _tier_rows(agg, F.lit("1m"))
+    return _tier_rows(agg, "'1m'")
 
 
 def run_stream_to_memory(

@@ -64,7 +64,7 @@ from pyspark.sql import functions as F  # noqa: E402
 
 from biomed_timeseries_preprocessing_spark.functions.codec import encode_chunks  # noqa: E402
 from biomed_timeseries_preprocessing_spark.operators.derive import (  # noqa: E402
-    token_count_col,
+    TOKEN_COUNT,
     with_derived,
 )
 from biomed_timeseries_preprocessing_spark.operators.gapfill import gapfill  # noqa: E402
@@ -215,7 +215,7 @@ def run(args, spark=None) -> dict:
         # the row count rides the staging write as an observe: no re-read
         src, obs = attach_audit(
             spark.read.parquet(args.source).withColumn("bucket", bcol),
-            [F.count(F.lit(1)).alias("n")],
+            [F.expr("count(1) AS n")],
         )
         src.write.mode("overwrite").partitionBy("bucket").parquet(staging)
         n_staged = read_audit(obs)["n"]
@@ -303,7 +303,8 @@ def run(args, spark=None) -> dict:
             a {key: SQL predicate} map, and the reader of {key: values})."""
             keys = list(where)
             df, obs = attach_audit(
-                df, [F.struct(*audit(where[k])).alias(f"k{i}") for i, k in enumerate(keys)]
+                df,
+                [F.expr(f"struct({', '.join(audit(where[k]))}) AS k{i}") for i, k in enumerate(keys)],
             )
             return df, lambda: {
                 k: read_audit(obs.get[f"k{i}"].asDict()) for i, k in enumerate(keys)
@@ -337,7 +338,7 @@ def run(args, spark=None) -> dict:
                         table, files.get((b, *split), []), {"bucket": b}
                     )
 
-        part = staged.filter(F.col("bucket").isin(buckets))
+        part = staged.filter(f"bucket IN ({', '.join(map(str, buckets))})")
 
         def check_gapfill(ins, outs) -> dict[int, int]:
             """Validate the text-equality invariant from the source
@@ -383,14 +384,14 @@ def run(args, spark=None) -> dict:
             # hash keeps its power against row loss, duplication and
             # misrouting (no text is left in flight to corrupt). The
             # precise row-listing join runs only on the failure path.
-            narrow = part.select(
+            narrow = part.selectExpr(
                 "conv_id",
                 "turn_idx",
                 "role",
                 "tool",
                 "ts",
-                token_count_col().alias("token_count"),
-                F.xxhash64("conv_id", "turn_idx", "text").alias("_th"),
+                f"{TOKEN_COUNT} AS token_count",
+                "xxhash64(conv_id, turn_idx, text) AS _th",
                 "bucket",
             )
             src, read_in = tap(narrow, gapfill_in_audit, per_bucket)
@@ -422,7 +423,7 @@ def run(args, spark=None) -> dict:
             cols = ["conv_id", "bucket_start", "cnt", "sum_tokens"]
             keys = [(b, t) for b in buckets for t in TIER_ORDER]
             out, read_tiers = tap(
-                tiers.withColumn(TIER_DIR, F.col("tier")).withColumn("bucket", bcol),
+                tiers.selectExpr("*", f"tier AS {TIER_DIR}").withColumn("bucket", bcol),
                 partial(tier_audit, cols, "bucket_start"),
                 {(b, t): f"{per_bucket[b]} AND tier = '{t}'" for b, t in keys},
             )

@@ -4,7 +4,7 @@ import datetime as dt
 
 import pytest
 
-from biomed_timeseries_preprocessing_spark.operators.derive import token_count_col, with_derived
+from biomed_timeseries_preprocessing_spark.operators.derive import TOKEN_COUNT, with_derived
 from biomed_timeseries_preprocessing_spark.sources.ingest import (
     SchemaArityError,
     resolve_aliases,
@@ -34,7 +34,7 @@ def test_token_count_edges(spark):
     df = spark.createDataFrame(
         [("", ), ("   ",), (None,), ("one",), ("  a  b\tc\nd ",)], "text string"
     )
-    got = [r[0] for r in df.select(token_count_col().alias("n")).collect()]
+    got = [r[0] for r in df.selectExpr(f"{TOKEN_COUNT} AS n").collect()]
     assert got == [0, 0, 0, 1, 4]
 
 

@@ -5,13 +5,21 @@ around must not silently regress (SURVEY §4's Catalyst table).
 - the derive→1m→5m→1h→1d cascade introduces exactly ONE exchange: the
   derive window's hash partitioning by conv_id satisfies every
   downstream groupBy (clustering on a grouping-key subset);
-- filters on scan columns reach the parquet reader (PushedFilters).
+- filters on scan columns reach the parquet reader (PushedFilters);
+- a group plan builds from SQL text: its Py4J round trips stay in budget.
 """
 
+from py4j.clientserver import ClientServerConnection
 from pyspark.sql import functions as F
 
 from biomed_timeseries_preprocessing_spark.operators.derive import with_derived
-from biomed_timeseries_preprocessing_spark.operators.rollup import rollup_cascade
+from biomed_timeseries_preprocessing_spark.operators.gapfill import gapfill
+from biomed_timeseries_preprocessing_spark.operators.rollup import (
+    TIER_ORDER,
+    rollup_cascade,
+    rollup_from_turns,
+    rollup_merge,
+)
 
 
 def plan_str(df) -> str:
@@ -56,6 +64,32 @@ def test_cascade_single_exchange(spark, small_transcripts, tmp_path):
     # conv_id hash partitioning. (AQE may add a final coalesce read, which
     # is not an Exchange node.)
     assert n_exchanges == 1, f"cascade grew extra shuffles:\n{p}"
+
+
+#: Py4J round trips allowed for building one group plan's tier frame.
+#: The SQL-text operators take ~230 on a warm JVM; built from column
+#: functions (``F.col``, ``F.when``, ``.alias``, ...) the same plan took
+#: ~2,450, every one of them serial driver time on the job's critical path.
+PLAN_ROUND_TRIP_BUDGET = 400
+
+
+def test_group_plan_builds_within_round_trip_budget(spark, small_transcripts, monkeypatch):
+    def build():
+        derived = with_derived(gapfill(small_transcripts))
+        return rollup_merge(rollup_from_turns(derived, TIER_ORDER[0]), TIER_ORDER)
+
+    build()  # warm the JVM views and the input's cached schema
+    sent = []
+    send = ClientServerConnection.send_command
+
+    def counting(self, command):
+        sent.append(command)
+        return send(self, command)
+
+    monkeypatch.setattr(ClientServerConnection, "send_command", counting)
+    build()
+    monkeypatch.undo()
+    assert 0 < len(sent) <= PLAN_ROUND_TRIP_BUDGET, f"{len(sent)} Py4J round trips"
 
 
 def test_lsh_topk_broadcasts_query_side(spark):

@@ -12,7 +12,10 @@ from pyspark.sql import functions as F
 
 from biomed_timeseries_preprocessing_spark.operators.derive import with_derived
 from biomed_timeseries_preprocessing_spark.operators.gapfill import gapfill
-from biomed_timeseries_preprocessing_spark.operators.retention import apply_retention
+from biomed_timeseries_preprocessing_spark.operators.retention import (
+    COMMIT_RETRIES,
+    apply_retention,
+)
 from biomed_timeseries_preprocessing_spark.operators.rollup import (
     TIER_ORDER,
     rollup_cascade,
@@ -168,6 +171,52 @@ def test_retention_rewrite_rejects_a_commit_landing_mid_rewrite(spark, tmp_path,
     monkeypatch.undo()
     assert cat.overwrite(spark, "t", F.col("v") >= 5) == 5
     assert sorted(r.v for r in cat.read(spark, "t").collect()) == everything[5:]
+
+
+def test_apply_retention_retries_a_tier_when_a_commit_lands_mid_rewrite(
+    spark, tmp_path, monkeypatch
+):
+    """A nightly job's partition commit landing while ``apply_retention``
+    rewrites a tier fails that rewrite's commit; the tier is rewritten
+    again from the current snapshot, so the late partition survives and
+    the expiry still applies. A commit landing before every try raises."""
+    cat = LocalSnapshotCatalog(str(tmp_path / "wh"))
+
+    def days(lo, hi):  # row v at day v
+        return spark.range(lo, hi).selectExpr(
+            "id AS v", "timestamp_seconds(1767225600 + id * 86400) AS bucket_start"
+        )
+
+    for b in (0, 1):
+        cat.overwrite_partitions("rollup_1m", days(10 * b, 10 * b + 10), {"bucket": b})
+    cutoff = cat.read(spark, "rollup_1m").filter("v = 5").first().bucket_start
+    now, horizon = cutoff + dt.timedelta(days=7), {"1m": 7 * 86400}
+    real_mutex = cat._commit_mutex
+    job = LocalSnapshotCatalog(cat.warehouse)  # a nightly job's catalog
+    late = []
+
+    def racing_mutex(table):
+        # the rewrite has read its snapshot and is about to commit: a
+        # job's partition commit lands first
+        if late:
+            job.commit_overwrite_partitions("rollup_1m", late.pop(), {"bucket": 2})
+        return real_mutex(table)
+
+    monkeypatch.setattr(cat, "_commit_mutex", racing_mutex)
+    late.append(cat.write_data_files("rollup_1m", days(100, 103), {"bucket": 2}))
+    assert apply_retention(cat, spark, now, retention=horizon) == {"1m": 5}
+    assert not late
+    kept = sorted(r.v for r in cat.read(spark, "rollup_1m").collect())
+    assert kept == list(range(5, 20)) + [100, 101, 102]
+
+    # a commit lands before each of the 1 + COMMIT_RETRIES tries
+    late.extend(
+        cat.write_data_files("rollup_1m", days(100 + i, 101 + i), {"bucket": 2})
+        for i in range(COMMIT_RETRIES + 1)
+    )
+    with pytest.raises(CommitConflictError, match="retry from current"):
+        apply_retention(cat, spark, now + dt.timedelta(days=1), retention=horizon)
+    assert not late
 
 
 def test_retention_expiry(spark, tmp_path, small_transcripts):
