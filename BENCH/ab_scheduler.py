@@ -5,14 +5,19 @@ every arm equally; rep 0 per arm is JVM/codegen warmup and is
 discarded. Each arm is forced by replacing
 ``jobs.rollup_job.bucket_groups``: ``singles`` (groups of one bucket,
 the old per-bucket scheduler's shape), ``one-group`` (every bucket in
-one group, the old global scheduler's shape) and ``rule`` (the job's own
-``bucket_groups``).
+one group, the old global scheduler's shape), ``rule`` (the job's own
+``bucket_groups``) and ``uncapped`` (the rule without its ``MAX_GROUP``
+cap: one group per worker however wide).
 
-Usage: python BENCH/ab_scheduler.py [n_convs] [reps] [buckets] [master]
+Usage: python BENCH/ab_scheduler.py [n_convs] [reps] [buckets] [master] [arms]
+
+``arms`` is a comma-separated subset of the arms (default
+``singles,one-group,rule``).
 
 ``master`` defaults to ``local[32]``. Results merge into
-BENCH/ab_scheduler.json under the key ``{n_convs}convs_{buckets}buckets_groups``
-(keys without ``_groups`` hold the old schedulers' runs);
+BENCH/ab_scheduler.json under the key ``{n_convs}convs_{buckets}buckets_groups``,
+followed by ``_{arm}`` for each arm when ``arms`` is given (keys without
+``_groups`` hold the old schedulers' runs);
 a ``local-cluster[...]`` master writes BENCH/ab_scheduler_local_cluster.json
 instead. A local-cluster master launches executor JVMs from
 ``$SPARK_HOME`` (their work dirs land in ``$SPARK_HOME/work``) and needs
@@ -43,10 +48,18 @@ import jobs.rollup_job as rollup_job  # noqa: E402
 
 
 RULE = rollup_job.bucket_groups
+
+
+def uncapped(todo: list[int], workers: int) -> list[list[int]]:
+    size = 1 if len(todo) <= workers else -(-len(todo) // workers)
+    return [todo[i : i + size] for i in range(0, len(todo), size)]
+
+
 ARMS = {
     "singles": lambda todo, workers: [[b] for b in todo],
     "one-group": lambda todo, workers: [todo],
     "rule": RULE,
+    "uncapped": uncapped,
 }
 
 
@@ -75,6 +88,7 @@ def main() -> None:
     reps = int(sys.argv[2]) if len(sys.argv) > 2 else 4
     buckets = sys.argv[3] if len(sys.argv) > 3 else "8"
     master = sys.argv[4] if len(sys.argv) > 4 else "local[32]"
+    arms = sys.argv[5].split(",") if len(sys.argv) > 5 else ["singles", "one-group", "rule"]
     cluster = master.startswith("local-cluster")
     extra = {}
     if cluster:
@@ -89,13 +103,13 @@ def main() -> None:
     spark = get_spark(app_name="ab_scheduler", master=master, extra_conf=extra)
     base = os.environ.get("TMPDIR") or ("/dev/shm" if os.path.isdir("/dev/shm") else None)
     work = tempfile.mkdtemp(prefix="ab_sched_", dir=base)
-    times = {arm: [] for arm in ARMS}
+    times = {arm: [] for arm in arms}
     try:
         raw_path = os.path.join(work, "transcripts")
         synth_transcripts(spark, n_convs).write.mode("overwrite").parquet(raw_path)
         spark.range(1_000_000).count()
         for rep in range(reps + 1):
-            for arm in ARMS:
+            for arm in arms:
                 el = one_run(spark, raw_path, work, f"{arm}_{rep}", arm, buckets)
                 if rep > 0:
                     times[arm].append(round(el, 2))
@@ -105,6 +119,7 @@ def main() -> None:
         out = {
             "master": master,
             "rule_groups": [len(g) for g in RULE(list(range(int(buckets))), workers)],
+            "max_group": rollup_job.MAX_GROUP,
             "n_convs": n_convs,
             "n_turns": n_turns,
             "buckets": buckets,
@@ -119,7 +134,8 @@ def main() -> None:
         if os.path.exists(path):
             with open(path) as f:
                 merged = json.load(f)
-        merged[f"{n_convs}convs_{buckets}buckets_groups"] = out
+        key = f"{n_convs}convs_{buckets}buckets_groups"
+        merged[key if len(sys.argv) <= 5 else f"{key}_{'_'.join(arms)}"] = out
         with open(path, "w") as f:
             json.dump(merged, f, indent=2)
         print(json.dumps(out))

@@ -2,8 +2,8 @@
 wall time of each plan operator, the retention phase wall, and the cold
 kill-then-resume op, for two checkouts of this repo run interleaved.
 
-    python BENCH/plan_build.py --parent DIR [--convs 16] [--pairs 5]
-        [--work DIR] [--out BENCH/plan_build.json]
+    python BENCH/plan_build.py --parent DIR [--kind plan|resume]
+        [--convs 16] [--pairs 5] [--work DIR] [--out BENCH/plan_build.json]
 
 1. Lake: ``synth_transcripts(convs, seed)`` written once under ``--work``
    (16 convs at seed 1: 1,633 turns; plan building does not depend on
@@ -16,9 +16,10 @@ kill-then-resume op, for two checkouts of this repo run interleaved.
      (``gapfill`` → ``with_derived`` → ``rollup_from_turns`` →
      ``rollup_merge(…, TIER_ORDER)``, and ``encode_chunks`` on the derived
      frame) once cold, then ``WARM`` times warm. Each operator's Py4J
-     round trips (calls of ``ClientServerConnection.send_command``) and
-     wall are recorded. It then runs the rollup job on the lake
-     (``--buckets 6``) and times ``apply_retention`` at rollbench's clock
+     round trips (calls of ``ClientServerConnection.send_command`` from
+     the building thread; py4j's finalizer thread sends object deletes
+     through the same method) and wall are recorded. It then runs the
+     rollup job on the lake (``--buckets 6``) and times ``apply_retention`` at rollbench's clock
      on ``RETENTION_REPS`` copies of the warehouse's snapshot metadata
      (the parent arm rewrites the tiers one after another, the change
      arm concurrently).
@@ -26,6 +27,7 @@ kill-then-resume op, for two checkouts of this repo run interleaved.
      ``resume_retention`` (6 buckets, killed after 3, resumed) as the
      first work of the JVM; ``plan_s`` sums the wall spent in the job
      module's plan functions over all threads, as rollbench does.
+   ``--kind`` runs only one kind (default: both).
 3. Pairs alternate which arm runs first. The JSON holds every rep and
    the per-arm medians.
 """
@@ -93,9 +95,12 @@ def run_plan(lake: str, work: str) -> dict:
     src = spark.read.parquet(lake)
     sent = [0]
     send = ClientServerConnection.send_command
+    me = threading.get_ident()
 
     def counting(self, command):
-        sent[0] += 1
+        # this thread's sends only, not py4j's background object deletes
+        if threading.get_ident() == me:
+            sent[0] += 1
         return send(self, command)
 
     ClientServerConnection.send_command = counting
@@ -198,11 +203,11 @@ def main() -> None:
     ap.add_argument("--pairs", type=int, default=5)
     ap.add_argument("--work", default=os.path.join(REPO, ".plan_build_work"))
     ap.add_argument("--out", default=os.path.join(HERE, "plan_build.json"))
-    ap.add_argument("--kind", help=argparse.SUPPRESS)
+    ap.add_argument("--kind", choices=("plan", "resume"), help="run only this kind of rep")
     ap.add_argument("--arm", help=argparse.SUPPRESS)
     ap.add_argument("--lake", help=argparse.SUPPRESS)
     args = ap.parse_args()
-    if args.kind:
+    if args.arm:
         sys.path.insert(0, args.arm)
         run = run_plan if args.kind == "plan" else run_resume
         print(json.dumps(run(args.lake, args.work)))
@@ -215,7 +220,7 @@ def main() -> None:
     reps = {a: {"plan": [], "resume": []} for a in arms}
     for i in range(args.pairs):
         order = ("parent", "change") if i % 2 == 0 else ("change", "parent")
-        for kind in ("plan", "resume"):
+        for kind in [args.kind] if args.kind else ["plan", "resume"]:
             for a in order:
                 work = os.path.join(os.path.abspath(args.work), a)
                 os.makedirs(work, exist_ok=True)
@@ -228,19 +233,23 @@ def main() -> None:
     def med(xs):
         return statistics.median(xs)
 
-    ops = list(reps["change"]["plan"][0]["cold"])
-    summary = {}
+    summary = {a: {} for a in arms}
     for a in arms:
-        plans = reps[a]["plan"]
-        summary[a] = {
-            "round_trips_warm": {op: plans[0]["warm_median"][op]["round_trips"] for op in ops},
-            "round_trips_cold": {op: plans[0]["cold"][op]["round_trips"] for op in ops},
-            "cold_wall_s": {op: med([p["cold"][op]["wall_s"] for p in plans]) for op in ops},
-            "warm_wall_s": {op: med([p["warm_median"][op]["wall_s"] for p in plans]) for op in ops},
-            "retention_wall_s": med([r["wall_s"] for p in plans for r in p["retention"]]),
-            "cold_resume_op_s": [r["op_s"] for r in reps[a]["resume"]],
-            "cold_resume_plan_s": [r["plan_s"] for r in reps[a]["resume"]],
-        }
+        plans, resumes = reps[a]["plan"], reps[a]["resume"]
+        if plans:
+            ops = list(plans[0]["cold"])
+            summary[a] |= {
+                "round_trips_warm": {op: plans[0]["warm_median"][op]["round_trips"] for op in ops},
+                "round_trips_cold": {op: plans[0]["cold"][op]["round_trips"] for op in ops},
+                "cold_wall_s": {op: med([p["cold"][op]["wall_s"] for p in plans]) for op in ops},
+                "warm_wall_s": {op: med([p["warm_median"][op]["wall_s"] for p in plans]) for op in ops},
+                "retention_wall_s": med([r["wall_s"] for p in plans for r in p["retention"]]),
+            }
+        if resumes:
+            summary[a] |= {
+                f"cold_resume_{k}": [r[k] for r in resumes]
+                for k in ("op_s", "partial_s", "resume_s", "plan_s")
+            }
     result = {
         "lake": {"convs": args.convs, "seed": args.seed, "buckets": 6},
         "host": {"cpus": os.cpu_count(), "machine": platform.machine(),

@@ -7,26 +7,8 @@ SURVEY.md for the file:line capability map). This package is NOT a port —
 the reference is a single-node NumPy pipeline; every operator here is
 re-expressed as a partition-parallel Spark DataFrame stage.
 
-Layout
-------
-session.py            SparkSession builder (AQE, Arrow, UTC, shuffle sizing)
-sources/synth.py      deterministic synthetic transcript generator (input_hint schema)
-sources/ingest.py     scan + schema/alias validation + stable ordering contract
-sources/catalog.py    lake seam: Iceberg when available, LocalSnapshotCatalog fallback
-operators/derive.py   per-turn numeric series (latency, token_count)
-operators/gapfill.py  missing-turn materialization + forward-fill/linear interp
-operators/rollup.py   1m tier from turns; 5m/1h/1d via algebraic merge of tier below
-operators/retention.py tier-specific expiry
-operators/intervals.py range join, label policies, interval merge, zero-run detector
-operators/dedup.py    exact / minhash-LSH / simhash / ngram-jaccard dedup
-operators/similarity.py brute-force + LSH-bucketed cosine top-k ANN
-operators/text.py     language-id, quality scoring, token counting, fingerprints
-operators/multimodal.py binary-column decode/feature plumbing (decode stubbed)
-functions/codec.py    delta-of-delta ts + Gorilla XOR codecs (Arrow UDFs)
-plans/lineage.py      per-(stage, partition) lineage rows + resume anti-join
-plans/skew.py         salted repartition for hot keys; ordered-stage range partition
-streaming/rollup_stream.py Structured Streaming 1m tier with watermark
-oracle/ref.py         single-node pandas oracle of identical semantics
+The module layout, one line per module, is the "Repository layout"
+section of README.md.
 """
 
 __version__ = "0.1.0"

@@ -56,6 +56,7 @@ import shutil
 import sys
 import threading
 import time
+from concurrent.futures import ThreadPoolExecutor
 from functools import partial
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
@@ -127,34 +128,45 @@ def parse_args(argv=None):
 
 
 #: widest bucket group: its observes hold MAX_GROUP × (4 tiers × 4 + 7
-#: gap-fill and codec) aggregates
-MAX_GROUP = 64
+#: gap-fill and codec) aggregates, each behind a ``bucket = b`` predicate,
+#: so a row's audit cost and a group's compiled audit code grow with the
+#: width. 4 is the knee of BENCH/audit_width.json: up to it the tier
+#: audit's warm cost stays within 2× of one bucket's, from 8 on it grows
+#: about linearly, and a new group's audit compile jumps 2.2× from 4 to 8
+MAX_GROUP = 4
 
 
 def bucket_groups(todo: list[int], workers: int) -> list[list[int]]:
     """Split the pending buckets ``todo`` into the groups the job plans,
     in order: one bucket per group while the pool has a worker for every
-    bucket, otherwise one group per worker of at most MAX_GROUP buckets.
-    A one-worker run (the kill hook's) also keeps one bucket per group,
-    since the hook counts committed buckets.
+    bucket, otherwise one group per worker, but never more than MAX_GROUP
+    buckets in a group (so more groups than workers once the pending
+    buckets outnumber MAX_GROUP × workers).
 
     A group is one plan: each stage is one Spark job over the group, so
     fewer, wider groups cut per-plan fixed cost (planning, job launch,
-    stage barriers) while smaller groups let the pool overlap them. The
-    rule against groups of one and one group of every bucket
-    (BENCH/ab_scheduler*.json, ``*_groups`` keys; 4-vCPU VM, a pool of 4
-    workers on both masters, median (IQR) of 4 interleaved reps after a
-    warm-up, seconds):
+    stage barriers) while smaller groups let the pool overlap them, and
+    the group audit's cost per row grows with the width (MAX_GROUP). The
+    rule against groups of one, one group of every bucket and one group
+    per worker however wide (BENCH/ab_scheduler*.json, ``*_groups*``
+    keys; 4-vCPU VM, a pool of 4 workers on both masters, median (IQR)
+    of 4 interleaved reps after a warm-up, seconds; the first four rows
+    ran with the cap at 64 and with column-function plans, so their rule
+    made 4 groups of 8 at 32 buckets, the shape of today's uncapped arm):
 
-      master                   buckets  rule       singles       one group     rule
-      local-cluster[2,2,2048]   4       4 × 1      3.91 (0.76)    4.49 (0.40)   3.83 (0.48)
-      local-cluster[2,2,2048]  16       4 × 4     10.61 (0.59)   14.07 (0.46)   9.03 (0.51)
-      local-cluster[2,2,2048]  32       4 × 8     18.42 (1.49)   23.84 (0.43)  12.26 (1.17)
-      local[4]                 16       4 × 4      9.81 (0.60)   15.10 (0.60)   8.28 (0.64)
+      master                   buckets  rule     singles       one group     uncapped      rule
+      local-cluster[2,2,2048]   4       4 × 1    3.91 (0.76)    4.49 (0.40)                 3.83 (0.48)
+      local-cluster[2,2,2048]  16       4 × 4   10.61 (0.59)   14.07 (0.46)                 9.03 (0.51)
+      local-cluster[2,2,2048]  32       4 × 8   18.42 (1.49)   23.84 (0.43)                12.26 (1.17)
+      local[4]                 16       4 × 4    9.81 (0.60)   15.10 (0.60)                 8.28 (0.64)
+      local-cluster[2,2,2048]  32       8 × 4                                7.65 (0.63)    7.97 (1.21)
+      local-cluster[2,2,2048] 128      32 × 4                               29.61 (0.64)   22.76 (2.15)
 
-    The rule is the fastest arm in every row (at 4 buckets it IS groups
-    of one), so one group per worker needs no more groups per worker."""
-    if workers <= 1 or len(todo) <= workers:
+    The rule is the fastest arm, or within noise of it, in every row (at
+    4 buckets it IS groups of one). The cap is within noise of one group
+    of 8 per worker at 32 buckets and 23% faster than one group of 32
+    per worker at 128."""
+    if len(todo) <= workers:
         size = 1
     else:
         size = min(MAX_GROUP, -(-len(todo) // workers))
@@ -261,6 +273,12 @@ def run(args, spark=None) -> dict:
                 f"purged {n_purged} stale data files (bucket >= {args.buckets}) "
                 f"from {stale_table} — prior run used a larger bucket modulus"
             )
+    # the test kill hook: only the first N pending buckets run, through
+    # the same groups and pool as any run, and then the job fails as a
+    # killed one would, its staging kept for the resume
+    killed = None
+    if 0 < args.fail_after_buckets < len(todo):
+        todo, killed = todo[: args.fail_after_buckets], todo[args.fail_after_buckets]
     commit_lock = threading.Lock()  # snapshot catalog + lineage are
     # last-writer-wins files; commits must serialize. Compute does not:
     # groups are independent Spark jobs and the scheduler interleaves
@@ -464,28 +482,16 @@ def run(args, spark=None) -> dict:
             stats["rows_out"] += tier_rows
             stats["buckets_run"] += len(buckets)
 
-    def _run_group(group: list[int]) -> None:
-        if args.fail_after_buckets and stats["buckets_run"] >= args.fail_after_buckets:
-            raise RuntimeError(f"injected failure before bucket {group[0]} (test hook)")
-        _run_plan(group)
-
     # groups run in a small thread pool (concurrent Spark jobs — the
     # cluster scheduler fills slot gaps one group's stage barriers
-    # leave); the test kill-hook runs one worker, so "fail after N
-    # buckets committed" stays deterministic. The pool scales with the
-    # session's cores: 8 workers beat 4 by ~14% on every rep at 32 cores
-    # and tied at 8 cores — BENCH/ab_workers.json
-    workers = 1 if args.fail_after_buckets else max(4, engine_cores(spark) // 4)
-    groups = bucket_groups(todo, workers)
-    workers = min(len(groups), workers)
-    if workers <= 1:
-        for group in groups:
-            _run_group(group)
-    else:
-        from concurrent.futures import ThreadPoolExecutor
-
-        with ThreadPoolExecutor(max_workers=workers) as pool:
-            list(pool.map(_run_group, groups))
+    # leave). The pool scales with the session's cores: 8 workers beat 4
+    # by ~14% on every rep at 32 cores and tied at 8 cores —
+    # BENCH/ab_workers.json
+    workers = max(4, engine_cores(spark) // 4)
+    with ThreadPoolExecutor(max_workers=workers) as pool:
+        list(pool.map(_run_plan, bucket_groups(todo, workers)))
+    if killed is not None:
+        raise RuntimeError(f"injected failure before bucket {killed} (test hook)")
     # every bucket has committed: the staged copy of the source is spent
     shutil.rmtree(staging, ignore_errors=True)
     if own_spark:

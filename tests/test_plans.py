@@ -9,6 +9,8 @@ around must not silently regress (SURVEY §4's Catalyst table).
 - a group plan builds from SQL text: its Py4J round trips stay in budget.
 """
 
+import threading
+
 from py4j.clientserver import ClientServerConnection
 from pyspark.sql import functions as F
 
@@ -81,9 +83,13 @@ def test_group_plan_builds_within_round_trip_budget(spark, small_transcripts, mo
     build()  # warm the JVM views and the input's cached schema
     sent = []
     send = ClientServerConnection.send_command
+    me = threading.get_ident()
 
     def counting(self, command):
-        sent.append(command)
+        # the build's own sends only: py4j's finalizer thread sends object
+        # deletes ("m\nd") through the same class in the background
+        if threading.get_ident() == me:
+            sent.append(command)
         return send(self, command)
 
     monkeypatch.setattr(ClientServerConnection, "send_command", counting)

@@ -126,6 +126,54 @@ def test_kill_and_resume_equals_uninterrupted(spark, tmp_path, source):
     assert staged.rows_in == staged.rows_out == spark.read.parquet(source).count()
 
 
+def test_kill_hook_runs_its_buckets_in_the_pools_groups(spark, tmp_path, source, monkeypatch):
+    """The kill hook stops a run; it does not schedule one. Killed after 5
+    of 8 buckets, the run plans those 5 by the job's own rule on its
+    4-worker pool, [0, 1] [2, 3] [4] concurrently, commits exactly them
+    and keeps its staging; the resume then gives the tier tables and
+    lineage of an uninterrupted run."""
+    planned = []
+
+    def spy(todo, workers, rule=rollup_job.bucket_groups):
+        planned.append(rule(todo, workers))
+        return planned[-1]
+
+    monkeypatch.setattr(rollup_job, "bucket_groups", spy)
+    wh_a, wh_b = str(tmp_path / "a"), str(tmp_path / "b")
+    run_job(job_args(source, warehouse=wh_a, run_id="r1", buckets=8), spark=spark)
+
+    staging = os.path.join(wh_b, "_staging", "r1")
+    killed = job_args(source, warehouse=wh_b, run_id="r1", buckets=8, fail_after_buckets=5)
+    with pytest.raises(RuntimeError, match=r"^injected failure before bucket 5 \(test hook\)$"):
+        run_job(killed, spark=spark)
+    assert planned[-1] == [[0, 1], [2, 3], [4]]
+    assert os.path.isdir(staging)
+    lin = LocalSnapshotCatalog(wh_b).read(spark, "lineage").toPandas()
+    per_bucket = lin[lin.stage != "stage_source"]
+    assert set(per_bucket.stage) == {"gapfill", *(f"rollup_{t}" for t in TIER_ORDER)}
+    for stage, keys in per_bucket.groupby("stage").partition_key:
+        assert sorted(keys) == [f"{b}/8" for b in range(5)], stage
+
+    resumed = run_job(job_args(source, warehouse=wh_b, run_id="r1", buckets=8), spark=spark)
+    assert resumed["buckets_run"] == 3
+    assert planned[-1] == [[5], [6], [7]]
+    assert not os.path.exists(staging)
+
+    cat_a, cat_b = LocalSnapshotCatalog(wh_a), LocalSnapshotCatalog(wh_b)
+    for t in TIER_ORDER:
+        pd.testing.assert_frame_equal(
+            read_sorted(cat_b, spark, f"rollup_{t}"),
+            read_sorted(cat_a, spark, f"rollup_{t}"),
+            check_exact=True,
+        )
+    key = ["stage", "partition_key", "rows_in", "rows_out", "checksum"]
+
+    def lineage(cat):
+        return cat.read(spark, "lineage").toPandas()[key].sort_values(key).reset_index(drop=True)
+
+    pd.testing.assert_frame_equal(lineage(cat_b), lineage(cat_a), check_exact=True)
+
+
 def test_snapshot_isolation_and_expiry(spark, tmp_path):
     cat = LocalSnapshotCatalog(str(tmp_path / "wh"))
     df1 = spark.range(5).withColumnRenamed("id", "v")
